@@ -669,6 +669,78 @@ case class LeFromLong(child: Expression, width: Int)
     copy(child = newChild)
 }
 
+/** A variant registry's match table as parallel arrays, row i being
+  * (program id, discriminator, minimum payload length). */
+final class VariantTable(val programIds: Array[Array[Byte]],
+    val discriminators: Array[Array[Byte]], val minLengths: Array[Int])
+    extends Serializable
+
+object VariantImpl {
+  /** 0-based index of the first row whose program id equals `pid`, whose
+    * minimum length fits in `data` and whose discriminator prefixes
+    * `data`; -1 when no row matches. */
+  def index(t: VariantTable, pid: Array[Byte], data: Array[Byte]): Int = {
+    var i = 0
+    while (i < t.minLengths.length) {
+      val d = t.discriminators(i)
+      if (data.length >= t.minLengths(i) &&
+        java.util.Arrays.equals(pid, t.programIds(i)) &&
+        java.util.Arrays.equals(data, 0, d.length, d, 0, d.length)) return i
+      i += 1
+    }
+    -1
+  }
+}
+
+/** variant_index(program_id, data) → int: the index of the first
+  * registry variant that matches — equal program id, a payload at least
+  * `minLength` bytes long, and the variant's discriminator as the
+  * payload's prefix — or null when none does or either input is null.
+  * One static call over a small table replaces a per-variant chain of
+  * equality, length and substring predicates, so a decode that consults
+  * the match once per output column stays small in generated code. */
+case class VariantIndex(left: Expression, right: Expression,
+    variants: Seq[VariantIndex.Variant])
+    extends BinaryExpression with ExpectsInputTypes {
+  @transient private lazy val table = new VariantTable(
+    variants.map(_.programId.toArray).toArray,
+    variants.map(_.discriminator.toArray).toArray,
+    variants.map(_.minLength).toArray)
+  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = true
+  override def prettyName: String = "variant_index"
+  override def toString: String =
+    s"$prettyName($left, $right, ${variants.size} variants)"
+  override protected def nullSafeEval(p: Any, d: Any): Any = {
+    val i = VariantImpl.index(table, p.asInstanceOf[Array[Byte]],
+      d.asInstanceOf[Array[Byte]])
+    if (i < 0) null else i
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = ctx.addReferenceObj("variantTable", table,
+      classOf[VariantTable].getName)
+    nullSafeCodeGen(ctx, ev, (p, d) =>
+      s"""
+         |${ev.value} = graft.functions.VariantImpl.index($t, $p, $d);
+         |if (${ev.value} < 0) { ${ev.isNull} = true; }
+       """.stripMargin)
+  }
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): VariantIndex =
+    copy(left = newLeft, right = newRight)
+}
+
+object VariantIndex {
+  /** One registry row's match key; byte sequences compare by value, so
+    * two expressions over equal registries are semantically equal. */
+  final case class Variant(programId: Seq[Byte], discriminator: Seq[Byte],
+      minLength: Int) {
+    require(minLength >= discriminator.length,
+      "minimum length shorter than the discriminator")
+  }
+}
+
 // ---- Solana compact-u16 (ShortVec) codec ----
 // Solana messages length-prefix their account/instruction/signature vectors
 // with a compact-u16: 7-bit groups, least-significant first, high bit =

@@ -82,6 +82,11 @@ package object functions {
   def shortvec_value(c: Column, off: Int): Column = u(c)(ShortvecValue(_, off))
   def shortvec_width(c: Column, off: Int): Column = u(c)(ShortvecWidth(_, off))
   def shortvec_from_long(c: Column): Column = u(c)(ShortvecFromLong)
+  /** Index of the first matching registry variant, or null. */
+  def variant_index(programId: Column, data: Column,
+      variants: Seq[VariantIndex.Variant]): Column =
+    Interop.column(VariantIndex(Interop.expression(programId),
+      Interop.expression(data), variants))
   def minhashes(c: Column, k: Int): Column = u(c)(MinHashes(_, k))
   def minhash_scrambled(x1: Column, x2: Column, x3: Column,
       x4: Column): Column =

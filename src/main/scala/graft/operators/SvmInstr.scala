@@ -6,7 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.{le_long, le_decimal, le_from_long, u256_from_long, Base58}
+import graft.functions.{le_long, le_decimal, le_from_long, u256_from_long,
+  variant_index, Base58, VariantIndex}
 import graft.sources.Tables
 
 /** Data-driven N-variant SVM instruction decode.
@@ -21,12 +22,19 @@ import graft.sources.Tables
   * Here the variant table IS the program: an `InstructionSignature` row
   * declares (program id, discriminator prefix, Borsh field layout, account
   * aliases), and `decodeVariants` compiles the whole registry into ONE
-  * projection — a `swap_kind` CASE over the (program, discriminator)
-  * match and a per-superset-column CASE that decodes the matching
-  * variant's bytes or yields a typed null. One scan, zero shuffle, fully
-  * codegen'd — where the reference (and a naive port) runs N filtered
+  * projection — the `variant_index` kernel matches (program,
+  * discriminator, layout length) once per row, and `swap_kind` plus each
+  * superset column is a small CASE on that index that decodes the
+  * matching variant's bytes or yields a typed null. One scan, zero
+  * shuffle — where the reference (and a naive port) runs N filtered
   * scans and a union. At 100 TB of instruction data that is the
   * difference between reading the table once and reading it N times.
+  *
+  * The decode is whole-stage codegen'd, and it must stay under the JVM's
+  * 8,000-byte huge-method limit: a generated method above it is never
+  * JIT-compiled and runs in the bytecode interpreter. `ExplainAuditSpec`
+  * ("decodeVariants callers: no generated method over the JIT limit")
+  * compiles every codegen stage of p04, p05, p07 and p08 and guards it.
   */
 object SvmInstr {
 
@@ -81,15 +89,6 @@ object SvmInstr {
     require(registry.map(_.kind).distinct.size == registry.size,
       "duplicate variant kinds")
 
-    val matchOf: Map[String, Column] = registry.map { sig =>
-      sig.kind ->
-        (col(programIdCol) === lit(sig.programId) &&
-          length(col(dataCol)) >=
-            lit(sig.discriminator.length + sig.params.map(_.typ.width).sum) &&
-          substring(col(dataCol), 1, sig.discriminator.length) ===
-            lit(sig.discriminator))
-    }.toMap
-
     // superset param columns, first-appearance order; widths → offsets
     val paramType = scala.collection.mutable.LinkedHashMap[String, DataType]()
     registry.foreach(_.params.foreach { p =>
@@ -105,49 +104,56 @@ object SvmInstr {
     require(paramType.keySet.intersect(accountType.keySet).isEmpty,
       "param/account name collision")
 
-    def decodeParam(sig: InstructionSignature, name: String): Option[Column] = {
-      var off = sig.discriminator.length
-      sig.params.foreach { p =>
-        if (p.name == name) {
-          val c = p.typ match {
-            case BU128 => le_decimal(col(dataCol), off, 16)
-            case BBool => le_long(col(dataCol), off, 1) =!= lit(0L)
-            case BBytesFixed(n) => substring(col(dataCol), off + 1, n)
-            case t     => le_long(col(dataCol), off, t.width)
-          }
-          return Some(c)
-        }
-        off += p.typ.width
-      }
-      None
+    // where a variant keeps a param: (byte offset, Borsh type)
+    def paramAt(sig: InstructionSignature, name: String): Option[(Int, BorshType)] =
+      sig.params.zip(sig.params.scanLeft(sig.discriminator.length)(_ + _.typ.width))
+        .collectFirst { case (p, off) if p.name == name => (off, p.typ) }
+
+    def decodeParam(off: Int, typ: BorshType): Column = typ match {
+      case BU128 => le_decimal(col(dataCol), off, 16)
+      case BBool => le_long(col(dataCol), off, 1) =!= lit(0L)
+      case BBytesFixed(n) => substring(col(dataCol), off + 1, n)
+      case t     => le_long(col(dataCol), off, t.width)
     }
 
-    def caseOver(name: String, dt: DataType,
-        pick: InstructionSignature => Option[Column]): Column =
-      registry.foldRight(lit(null).cast(dt)) { (sig, acc) =>
-        pick(sig) match {
-          case Some(c) => when(matchOf(sig.kind), c).otherwise(acc)
-          case None    => acc
+    // The match runs once per row, as the variant index; each output
+    // column is a CASE on that integer with one branch per distinct way
+    // the variants read it (a field every variant reads alike needs no
+    // CASE) — which keeps the generated code under the JIT limit.
+    val variant = col(VariantCol)
+    def caseOn[K](name: String, dt: DataType,
+        key: InstructionSignature => Option[K])(decode: K => Column): Column = {
+      val keyed = registry.zipWithIndex.flatMap { case (s, i) => key(s).map(_ -> i) }
+      val branches = keyed.map(_._1).distinct.map(k =>
+        k -> keyed.collect { case (`k`, i) => i })
+      (branches match {
+        case Seq((k, all)) if all.size == registry.size => decode(k)
+        case _ => branches.foldRight(lit(null).cast(dt)) {
+          case ((k, is), acc) => when(variant.isin(is: _*), decode(k)).otherwise(acc)
         }
-      }.as(name)
+      }).as(name)
+    }
 
-    val kindCol = registry.foldRight(lit(null).cast(StringType)) {
-      (sig, acc) => when(matchOf(sig.kind), lit(sig.kind)).otherwise(acc)
-    }.as("swap_kind")
-
+    val kindCol = typedLit(registry.map(_.kind)).apply(variant).as("swap_kind")
     val paramCols = paramType.toSeq.map { case (n, dt) =>
-      caseOver(n, dt, decodeParam(_, n))
+      caseOn(n, dt, paramAt(_, n))((decodeParam _).tupled)
     }
     val accountCols = accountType.toSeq.map { case (n, dt) =>
-      caseOver(n, dt, sig => sig.accountAliases.collectFirst {
-        case (i, `n`) => element_at(col(accountsCol), i + 1)
-      })
+      caseOn(n, dt, _.accountAliases.collectFirst { case (i, `n`) => i })(
+        i => element_at(col(accountsCol), i + 1))
     }
 
+    val variants = registry.map(sig => VariantIndex.Variant(
+      sig.programId.toSeq, sig.discriminator.toSeq,
+      sig.discriminator.length + sig.params.map(_.typ.width).sum))
     instructions
+      .withColumn(VariantCol,
+        variant_index(col(programIdCol), col(dataCol), variants))
+      .filter(variant.isNotNull)
       .select(passThrough.map(col) ++ (kindCol +: (paramCols ++ accountCols)): _*)
-      .filter(col("swap_kind").isNotNull)
   }
+
+  private val VariantCol = "__variant"
 
   // ---- the raydium 6-variant registry (raydium_swaps.py:44-234) ----
 

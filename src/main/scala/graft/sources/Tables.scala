@@ -1,7 +1,11 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the driver-generated test tables.
   *
@@ -21,7 +25,9 @@ object Tables {
     * microsecond TimestampType — the type the DuckDB oracle compares at.
     */
   def enableNanosAsLong(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set(NanosAsLong, "true")
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   def normalizeEventTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
@@ -32,6 +38,33 @@ object Tables {
                 // preserves the wall-clock value the oracle sees
         df.withColumn("ts", expr("cast(ts as timestamp)"))
     }
+
+  /** Parquet schemas keyed by (path, newest file mtime, total bytes,
+    * nanosAsLong) — the setting decides how a TIMESTAMP(NANOS) column
+    * reads, and a rewritten table changes mtime or length, so it is read
+    * again. */
+  private val schemaCache =
+    new ConcurrentHashMap[(String, Long, Long, String), StructType]
+
+  /** The schema of the parquet file or directory at `path`. Inferring it
+    * starts a Spark job that reads a footer; a cached schema costs one
+    * driver-side file listing. A missing path surfaces Spark's own
+    * error. */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return spark.read.parquet(path).schema
+    var mtime = 0L
+    var bytes = 0L
+    val it = fs.listFiles(p, true)
+    while (it.hasNext) {
+      val f = it.next()
+      mtime = math.max(mtime, f.getModificationTime)
+      bytes += f.getLen
+    }
+    val key = (path, mtime, bytes, spark.conf.get(NanosAsLong, "false"))
+    schemaCache.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+  }
 
   /** Spread a NARROW scan before a per-row-expensive kernel (signature
     * hashing, per-shingle digests, distance kernels). Parquet scan
@@ -60,8 +93,10 @@ object Tables {
 }
 
 final case class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private def t(name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(Tables.schemaOf(spark, path)).parquet(path)
+  }
 
   private def eventsRaw: DataFrame = {
     Tables.enableNanosAsLong(spark)

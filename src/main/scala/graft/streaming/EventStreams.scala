@@ -93,10 +93,6 @@ object EventStreams {
 
   private val memId = new AtomicInteger(0)
 
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]
-
   /** events.parquet as a *streaming* source; shares sources.Tables' ONE
     * nanos→µs normalization. */
   private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
@@ -113,8 +109,7 @@ object EventStreams {
   private def tableStream(spark: SparkSession, dir: String,
       table: String): DataFrame = {
     val tablePath = s"$dir/$table.parquet"
-    val schema = schemaCache.computeIfAbsent(tablePath,
-      p => spark.read.parquet(p).schema)
+    val schema = graft.sources.Tables.schemaOf(spark, tablePath)
     if (new java.io.File(tablePath).isDirectory)
       spark.readStream.schema(schema).parquet(tablePath)
     else
@@ -168,8 +163,7 @@ object EventStreams {
         f.setLastModified(1000L * (i + 1)): Unit }
       out
     })
-    val schema = schemaCache.computeIfAbsent(staged,
-      p => spark.read.parquet(p).schema)
+    val schema = graft.sources.Tables.schemaOf(spark, staged)
     // triggerCap bounds the NUMBER of micro-batches, not the chunking:
     // the staged files are shared (one repartition pass serves every
     // chunked twin), and a query whose per-key state is O(1) — the
@@ -224,8 +218,7 @@ object EventStreams {
       dst.setLastModified(1000L * (parts.length + 2)): Unit
       out
     })
-    val schema = schemaCache.computeIfAbsent(staged,
-      p => spark.read.parquet(p).schema)
+    val schema = graft.sources.Tables.schemaOf(spark, staged)
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(staged)
   }
@@ -1117,8 +1110,7 @@ object EventStreams {
         f.setLastModified(1000L * (i + 1)): Unit }
       out
     })
-    val schema = schemaCache.computeIfAbsent(staged,
-      p => spark.read.parquet(p).schema)
+    val schema = graft.sources.Tables.schemaOf(spark, staged)
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(staged).as[PackDoc]
     val assigned = src.groupByKey(_.bucket)
@@ -1172,8 +1164,7 @@ object EventStreams {
         f.setLastModified(1000L * (i + 1)): Unit }
       out
     })
-    val schema = schemaCache.computeIfAbsent(staged,
-      p => spark.read.parquet(p).schema)
+    val schema = graft.sources.Tables.schemaOf(spark, staged)
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(staged).as[LenDoc]
     val assigned = src.groupByKey(_.pad_len)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, Relational, Similarity}
@@ -20,6 +20,13 @@ class ExplainAuditSpec extends AnyFunSuite {
 
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  /** Run `body` with AQE off: a plan planned before execution then holds
+    * its whole-stage codegen stages and every exchange statically. */
+  private def withoutAqe[T](body: => T): T = {
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try body finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
 
   private def countOf(s: String, needle: String): Int =
     s.sliding(needle.length).count(_ == needle)
@@ -52,12 +59,30 @@ class ExplainAuditSpec extends AnyFunSuite {
 
   test("q04/q05: dimension joins broadcast — no sort-merge anywhere") {
     Seq(Relational.q04BroadcastDimJoin(spark, sfDir),
+      Relational.q05MultiJoinAgg(spark, sfDir),
       Relational.q19Rollup(spark, sfDir)).foreach { df =>
       val p = plan(df)
       assert(p.contains("BroadcastHashJoin"), p)
       assert(!p.contains("SortMergeJoin"),
         "dim join fell back to sort-merge — broadcast lost")
     }
+  }
+
+  test("q05: lineitem streams — no BroadcastExchange has its scan below") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    def readsLineitem(p: SparkPlan): Boolean = p.exists {
+      case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.exists(_.getName.startsWith("lineitem"))
+      case _ => false
+    }
+    val p = withoutAqe(
+      Relational.q05MultiJoinAgg(spark, sfDir).queryExecution.executedPlan)
+    assert(readsLineitem(p), s"no lineitem scan:\n$p")
+    val broadcasts = p.collect { case b: BroadcastExchangeExec => b }
+    assert(broadcasts.nonEmpty, s"expected broadcast joins:\n$p")
+    assert(!broadcasts.exists(readsLineitem),
+      s"the fact table is broadcast:\n$p")
   }
 
   test("q10 adjacency: ONE hash exchange, no join operator at all") {
@@ -149,6 +174,32 @@ class ExplainAuditSpec extends AnyFunSuite {
     // one scan of events only (numbered detail headers, one per operator)
     assert("""\(\d+\) Scan parquet""".r.findAllIn(p).size === 1,
       s"expected one scan:\n$p")
+  }
+
+  test("decodeVariants callers: no generated method over the JIT limit") {
+    // HotSpot never JIT-compiles a method above 8,000 bytes of bytecode;
+    // a whole-stage codegen'd decode that outgrows it runs interpreted.
+    // Compile every codegen stage and read the largest method's size.
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val limit = CodeGenerator.DEFAULT_JVM_HUGE_METHOD_LIMIT
+    val callers = Seq("p04_raydium_pipeline", "p05_orca_metadata",
+      "p07_meteora_pipeline", "p08_swap_transfer_match")
+    val sizes = withoutAqe {
+      callers.flatMap { q =>
+        val stages = SparkEntry.queries(q)(spark, sfDir)
+          .queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w }
+        assert(stages.nonEmpty, s"$q: no whole-stage codegen")
+        stages.map { w =>
+          val (_, stats) = CodeGenerator.compile(w.doCodeGen()._2)
+          (s"$q stage ${w.codegenStageId}", stats.maxMethodCodeSize)
+        }
+      }
+    }
+    info(sizes.map { case (s, n) => s"$s: $n" }.mkString(", "))
+    val over = sizes.filter(_._2 > limit)
+    assert(over.isEmpty, over.map { case (s, n) => s"$s: $n bytes" }
+      .mkString(s"generated methods over $limit bytes:\n", "\n", ""))
   }
 
   test("p10: the sort survives the subquery and runs below the u256 " +
@@ -655,7 +706,7 @@ class ExplainAuditSpec extends AnyFunSuite {
     // This sweeps EVERY SparkEntry query so the class of defect can
     // never reappear anywhere in the suite.
     import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec,
-      SparkPlan, TakeOrderedAndProjectExec}
+      TakeOrderedAndProjectExec}
     import org.apache.spark.sql.execution.window.WindowExec
     def bounded(p: SparkPlan): Boolean = p.exists {
       case _: TakeOrderedAndProjectExec | _: GlobalLimitExec |
@@ -696,12 +747,11 @@ class ExplainAuditSpec extends AnyFunSuite {
 
   test("whole-stage codegen covers the scan→project hot path (t03)") {
     // AQE's wrapper reports 0 subtrees pre-execution — inspect the static plan
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withoutAqe {
       val p = graft.operators.TextAnalysis.t03TokenCount(spark, sfDir)
         .queryExecution.explainString(ExplainMode.fromString("codegen"))
       assert(p.contains("WholeStageCodegen subtrees") &&
         !p.startsWith("Found 0 WholeStageCodegen"), p.take(200))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 }

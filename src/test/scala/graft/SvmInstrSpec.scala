@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.SvmInstr
 import graft.operators.SvmInstr._
-import graft.functions.Base58
+import graft.functions.{Base58, VariantIndex}
 
 /** The data-driven instruction-variant registry: anchor discriminator
   * derivation, single-pass multi-variant decode, typed null-fill for
@@ -117,5 +117,92 @@ class SvmInstrSpec extends AnyFunSuite {
     assert(out(0).isNullAt(out(0).fieldIndex("mint")))
     assert(out(2).getAs[Array[Byte]]("mint").toSeq ===
       Array.fill[Byte](32)(2).toSeq)
+  }
+
+  // ---- the variant_index kernel ----
+
+  private val pidA = Array.fill[Byte](32)(1)
+  private val pidB = Array.fill[Byte](32)(2)
+  // rows 0 and 1 share a program id, and row 0's discriminator extends
+  // row 1's: a payload starting [1, 2] matches both
+  private val kernelRows = Seq(
+    VariantIndex.Variant(pidA.toSeq, Seq[Byte](1, 2), 4),
+    VariantIndex.Variant(pidA.toSeq, Seq[Byte](1), 2),
+    VariantIndex.Variant(pidB.toSeq, Seq[Byte](7), 9))
+  private val kernelCases: Seq[(String, Array[Byte], Array[Byte], Option[Int])] = Seq(
+    ("both shared-id rows match: the first wins",
+      pidA, Array[Byte](1, 2, 0, 0), Some(0)),
+    ("only the second shared-id row matches", pidA, Array[Byte](1, 3), Some(1)),
+    ("first row too short, second matches", pidA, Array[Byte](1, 2, 0), Some(1)),
+    ("exact layout length", pidB, Array[Byte](7) ++ le(5, 8), Some(2)),
+    ("payload shorter than the layout", pidB, Array[Byte](7) ++ le(5, 7), None),
+    ("unknown program id", Array.fill[Byte](32)(9), Array[Byte](1, 2, 0, 0), None),
+    ("right program, unknown discriminator", pidB, Array[Byte](8) ++ le(5, 8), None),
+    ("empty payload", pidA, Array.emptyByteArray, None),
+    ("null program id", null, Array[Byte](1, 2, 0, 0), None),
+    ("null data", pidA, null, None))
+
+  /** Evaluate variant_index over `kernelCases` with the given expression
+    * factory mode on a conf local to this call. */
+  private def kernelEval(mode: String): (String, Seq[Option[Int]]) = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+    import org.apache.spark.sql.internal.SQLConf
+    import org.apache.spark.sql.types.BinaryType
+    val conf = new SQLConf
+    conf.setConfString(SQLConf.CODEGEN_FACTORY_MODE.key, mode)
+    SQLConf.withExistingConf(conf) {
+      val proj = UnsafeProjection.create(Seq(VariantIndex(
+        BoundReference(0, BinaryType, nullable = true),
+        BoundReference(1, BinaryType, nullable = true), kernelRows)))
+      proj.getClass.getSimpleName -> kernelCases.map { case (_, p, d, _) =>
+        val out = proj(InternalRow(p, d))
+        if (out.isNullAt(0)) None else Some(out.getInt(0))
+      }
+    }
+  }
+
+  test("variant_index: interpreted and codegen'd evaluation agree") {
+    val (interpreted, viaInterpreter) = kernelEval("NO_CODEGEN")
+    val (generated, viaCodegen) = kernelEval("CODEGEN_ONLY")
+    assert(interpreted.startsWith("Interpreted"), interpreted)
+    assert(!generated.startsWith("Interpreted"), generated)
+    kernelCases.zip(viaInterpreter.zip(viaCodegen)).foreach {
+      case ((what, _, _, want), (i, c)) =>
+        assert(i === want, s"interpreted: $what")
+        assert(c === want, s"codegen: $what")
+    }
+  }
+
+  test("variant_index: of two rows sharing a program id, the first wins") {
+    val a = InstructionSignature("a", SvmInstr.TokenProgram,
+      Array[Byte](1), Seq(Param("amount", BU64)))
+    val b = InstructionSignature("b", SvmInstr.TokenProgram,
+      Array[Byte](1, 2), Seq(Param("flag", BU8)))
+    val tok = Base58.decode(SvmInstr.TokenProgram)
+    val rows = Seq(
+      (1L, tok, Array[Byte](1, 2) ++ le(3, 7)),   // fits both: a
+      (2L, tok, Array[Byte](1, 2, 4)))            // too short for a: b
+      .toDF("id", "program_id", "data")
+    val out = decodeVariants(rows, Seq(a, b), Seq("id")).orderBy("id").collect()
+    assert(out.map(_.getString(1)).toSeq === Seq("a", "b"))
+    assert(out(0).getLong(out(0).fieldIndex("amount")) === (2L | (3L << 8)))
+    assert(out(1).getLong(out(1).fieldIndex("flag")) === 4L)
+  }
+
+  test("variant_index: short payloads, unknown programs and nulls drop") {
+    val amm = Base58.decode("675kPX9MHTjS2zt1qfr1NYHuzeLXfQM9H24wFSUt1Mp8")
+    val full = Array[Byte](9) ++ le(100, 8) ++ le(5, 8)
+    val acct = Seq(Array.fill[Byte](32)(7))
+    val rows = Seq[(Long, Array[Byte], Array[Byte], Seq[Array[Byte]])](
+      (1L, amm, full, acct),                        // kept
+      (2L, amm, full.take(full.length - 1), acct),  // one byte short
+      (3L, Array.fill[Byte](32)(3), full, acct),    // unknown program id
+      (4L, null, full, acct),                       // null program id
+      (5L, amm, null, acct))                        // null data
+      .toDF("id", "program_id", "data", "accounts")
+    val out = decodeVariants(rows, raydiumRegistry, Seq("id")).collect()
+    assert(out.map(_.getLong(0)).toSeq === Seq(1L))
+    assert(out(0).getString(1) === "amm_base_in")
   }
 }
