@@ -18,6 +18,15 @@ object SparkEntry {
     rawQueries.map { case (k, f) =>
       k -> { (s: SparkSession, d: String) => utc(s); f(s, d) }
     }
+  /** The entries named in `names` (every entry when empty), sorted by
+    * name. An unknown name fails: a typo would otherwise select nothing
+    * and report a vacuous result. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    all.toSeq.sortBy(_._1).filter { case (n, _) => names.isEmpty || names.contains(n) }
+  }
   private def rawQueries: Map[String, (SparkSession, String) => DataFrame] =
     operators.Relational.queries ++
       operators.Skew.queries ++

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,38 +6,18 @@ object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query ...]")
     val sfDir = args(0); val outDir = args(1)
-    val only = args.drop(2).toSet // empty = all (the driver's invocation)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // one clustering, many key-sets: hash(slot) co-locates (slot, idx)
-      // too, but the conservative default REFUSES subset co-partitioning
-      // for joins (a skew guard) and re-shuffles + re-sorts both sides on
-      // the full key set — at sf100 that silently moved p05's whole fact
-      // a second time. The rehearsal keys are uniform; let a staged
-      // single-key clustering serve every join whose keys extend it.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // ...and let a staged bucket table's per-bucket sortBy feed the
-      // merge joins: off by default since 3.0 (multi-file buckets would
-      // need a merge-sort) but Spark still guards on one-file-per-bucket,
-      // which the stageBucketed writer guarantees by construction
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.rdd.compress", "true") // see Bench — staged slices
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // empty = all (the full correctness dump); names are checked before a
+    // session starts
+    val entries = SparkEntry.select(args.drop(2).toSeq)
+    val spark = Session.fromEnv()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
+    entries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      Scratch.reap() // this query's scratch sinks are consumed; drop them
+      Session.cleanup(spark) // this query's output is written
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -3,27 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole suite — JVM-wide singleton so
-  * ScalaTest suites don't pay SparkContext startup per suite. */
+  * ScalaTest suites don't pay SparkContext startup per suite. Plan audits
+  * see the geometry the mains run; 4 cores keep tests host-independent. */
 object SparkSessionFixture {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match the Bench/Verify runtime geometry (see Bench.scala): plan
-      // audits must see the same co-partitioning rules the benches run
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // ...and let a staged bucket table's per-bucket sortBy feed the
-      // merge joins: off by default since 3.0 (multi-file buckets would
-      // need a merge-sort) but Spark still guards on one-file-per-bucket,
-      // which the stageBucketed writer guarantees by construction
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.rdd.compress", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session(cores = 4, shufflePartitions = 4)
   val sfDir = "/root/testdata/sf0.001"
 }
