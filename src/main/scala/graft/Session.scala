@@ -7,11 +7,24 @@ import org.apache.spark.sql.SparkSession
   * next query's measurement.
   */
 object Session {
-  /** Confs that do not depend on the core count, each with its reason. */
-  val geometry: Seq[(String, String)] = Seq(
-    // temporal semantics (date_trunc buckets, date→timestamp casts) are
-    // defined in UTC; the oracles compare naive timestamps
+  /** The load-time contract every query reads its inputs under. Built
+    * into every graft session and applied again by [[SparkEntry]] on each
+    * call, so a query's answer never depends on the session it was handed
+    * or on which query ran before it in that session. */
+  val contract: Seq[(String, String)] = Seq(
+    // temporal semantics (date_trunc buckets, date→timestamp casts, event
+    // ts normalization) are defined in UTC; the oracles compare naive
+    // timestamps
     "spark.sql.session.timeZone" -> "UTC",
+    // older events.parquet files store TIMESTAMP(NANOS), which Spark's
+    // parquet reader rejects unless nanos read as long;
+    // `Tables.normalizeEventTs` turns that long (or a MICROS column) into
+    // the UTC microsecond TimestampType the oracle compares at
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+  )
+
+  /** Confs that do not depend on the core count, each with its reason. */
+  val geometry: Seq[(String, String)] = contract ++ Seq(
     "spark.ui.enabled" -> "false",
     // A full suite in one JVM accumulates weakly-referenced state
     // (localCheckpoint blocks, shuffle files) that Spark's ContextCleaner
@@ -77,13 +90,12 @@ object Session {
     // cached tables must not ride into the next query's measurement (or
     // occupy storage memory for the rest of the suite)
     spark.catalog.clearCache()
-    // memory-sink temp views (runToTable's complete/update outputs) hold
+    // memory-sink temp views (runToTable's memory outputs) hold
     // their full result rows on the DRIVER via the registered MemorySink —
     // 28 streaming queries × reps of them otherwise ride to JVM exit and
     // squeeze the late-suite heap
     spark.catalog.listTables().collect()
-      .filter(t => t.name.startsWith("graft_stream_") ||
-        t.name.startsWith("graft_http_stream_"))
+      .filter(_.name.startsWith("graft_stream_"))
       .foreach(t => spark.catalog.dropTempView(t.name): Unit)
     // localCheckpoint blocks (the d-family loops, pre-collapse stages) are
     // NOT cleared by clearCache() — they sit in the unified memory region

@@ -39,11 +39,12 @@ object RealClickHouseRoundtrip {
     val url = urlOpt.get
     val sfDir = sys.env.getOrElse("GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
+    // the events slice below is read under graft's load-time contract
+    val spark = graft.Session.contract.foldLeft(SparkSession.builder()) {
+      case (b, (k, v)) => b.config(k, v)
+    }.master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
       .appName("graft-real-clickhouse-roundtrip")
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

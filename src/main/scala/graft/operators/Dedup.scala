@@ -726,19 +726,11 @@ object Dedup {
     * Jaccard pairs, so the DuckDB oracle can rebuild the same graph and
     * close it with a recursive CTE.
     */
-  def d08DedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val edges = d04NgramJaccard(spark, dir).select(col("a"), col("b"))
-    // the label/edge tables are bounded by the candidate-PAIR node set —
-    // orders of magnitude smaller than the corpus — so the loop's shuffles
-    // are sized to the graph, not to the corpus-wide default (at 100 TB
-    // you'd scale this with |V|; 32 corpus-sized partitions of a tiny
-    // frame just pays per-round scheduling for empty tasks)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      clusterLoop(edges)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-  }
+  def d08DedupClusters(spark: SparkSession, dir: String): DataFrame =
+    // runs at the session's shuffle width: d04 is lazy, so a narrower
+    // width here would narrow its corpus-scale shuffles too; AQE
+    // coalescing already shrinks the loop's graph-sized shuffles
+    clusterLoop(d04NgramJaccard(spark, dir).select(col("a"), col("b")))
 
   private def clusterLoop(edges: DataFrame): DataFrame = {
     val sym = edges

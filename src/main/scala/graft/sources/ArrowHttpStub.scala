@@ -261,18 +261,8 @@ object ArrowHttp {
     * incrementally across batches; the oracle sees only the final
     * table. */
   def st22StreamHttpIngest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.EventStreams.{Sink, runToTable}
     val stub = ArrowHttpStub.start(spark, dir)
-    // Stateful stream sizing, same discipline as EventStreams.runToTable:
-    // the complete-mode aggregate keeps ONE state store per shuffle
-    // partition per micro-batch, so inheriting the batch-side shuffle
-    // count (sized for data-proportional exchanges) multiplies pure
-    // commit overhead by the trigger count — measured at sf0.1: addBatch
-    // ~650-1000 ms/batch at the session's 32 partitions vs ~250-330 ms
-    // at the stream sizing, for a 2-group aggregate state.
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, graft.streaming.EventStreams.streamPartitions)
     try {
       val agg = spark.readStream.format("arrow-http")
         .option("url", stub.url)
@@ -285,18 +275,11 @@ object ArrowHttp {
         .agg(count(lit(1)).as("n_rows"),
           sum(col("value").cast("decimal(38,6)")).cast("double")
             .as("sum_value"))
-      val name = s"graft_http_stream_${streamId.incrementAndGet()}"
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name).orderBy(col("event_type")).localCheckpoint(true)
-    } finally {
-      spark.conf.set(key, prev)
-      stub.stop()
-    }
+      // a memory-sink result is driver-side rows: reading it never
+      // touches the portal, so the stub can stop before the caller reads
+      runToTable(agg, Sink.Memory("complete")).orderBy(col("event_type"))
+    } finally stub.stop()
   }
-
-  private val streamId = new java.util.concurrent.atomic.AtomicInteger(0)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "k26_http_arrow_ingest" -> (k26HttpArrowIngest _),

@@ -16,19 +16,15 @@ import org.apache.spark.sql.types.StructType
   * unchanged against a directory of many files.
   */
 object Tables {
-  /** Older driver-generated events.parquet stored TIMESTAMP(NANOS), which
-    * Spark's parquet reader rejects unless nanos are read as long (legacy
-    * conf); newer generations store plain TIMESTAMP(MICROS), which Spark
-    * reads as TIMESTAMP_NTZ. The ONE copy of the load-time contract every
-    * events reader (batch loader, file stream, pipeline demos) shares:
-    * whatever the file holds, `ts` comes out as a session-zone (UTC)
-    * microsecond TimestampType — the type the DuckDB oracle compares at.
-    */
-  def enableNanosAsLong(spark: SparkSession): Unit =
-    spark.conf.set(NanosAsLong, "true")
-
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
+  /** The one events-ts normalization every events reader (batch loader,
+    * file stream, pipeline demos) shares. Older driver-generated
+    * events.parquet stored TIMESTAMP(NANOS), read as long under
+    * [[graft.Session.contract]]; newer generations store plain
+    * TIMESTAMP(MICROS), which Spark reads as TIMESTAMP_NTZ. Whatever the
+    * file holds, `ts` comes out as a session-zone (UTC) microsecond
+    * TimestampType — the type the DuckDB oracle compares at. */
   def normalizeEventTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -98,11 +94,6 @@ final case class Tables(spark: SparkSession, dir: String) {
     spark.read.schema(Tables.schemaOf(spark, path)).parquet(path)
   }
 
-  private def eventsRaw: DataFrame = {
-    Tables.enableNanosAsLong(spark)
-    Tables.normalizeEventTs(t("events"))
-  }
-
   def region: DataFrame     = t("region")
   def nation: DataFrame     = t("nation")
   def customer: DataFrame   = t("customer")
@@ -110,7 +101,7 @@ final case class Tables(spark: SparkSession, dir: String) {
   def part: DataFrame       = t("part")
   def orders: DataFrame     = t("orders")
   def lineitem: DataFrame   = t("lineitem")
-  def events: DataFrame     = eventsRaw
+  def events: DataFrame     = Tables.normalizeEventTs(t("events"))
   def documents: DataFrame  = t("documents")
   def embeddings: DataFrame = t("embeddings")
 }

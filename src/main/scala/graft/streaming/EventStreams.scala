@@ -4,7 +4,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  StreamingQuery, Trigger}
 import org.apache.spark.sql.types.DecimalType
 
 /** Structured-Streaming operators st01–st02 (SURVEY.md §2).
@@ -89,16 +90,14 @@ object EventStreams {
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(updateSessions(gapUs))
   }
 
-  // ---- driver-verified query entries (file stream → memory sink) ----
+  // ---- driver-verified query entries (file stream → runToTable) ----
 
   private val memId = new AtomicInteger(0)
 
   /** events.parquet as a *streaming* source; shares sources.Tables' ONE
     * nanos→µs normalization. */
-  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.Tables.enableNanosAsLong(spark)
+  private def eventsStream(spark: SparkSession, dir: String): DataFrame =
     graft.sources.Tables.normalizeEventTs(tableStream(spark, dir, "events"))
-  }
 
   /** A driver sf table as a file-stream source. File streams need a
     * DIRECTORY: driver sf dirs hold ONE FILE per table, so the stream
@@ -129,6 +128,23 @@ object EventStreams {
   private val chunkRowsCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
 
+  /** Write `df` to `out` range-partitioned on `by`, one part file per
+    * ~`rowsPerChunk` rows (2 to `maxChunks` files), and stamp the parts
+    * with increasing mtimes in range order. A file stream admits files in
+    * mtime order, so with `maxFilesPerTrigger` every row of chunk i
+    * arrives before any row of chunk i+1. Returns the rows per chunk. */
+  private def stageOrdered(df: DataFrame, by: String, rowsPerChunk: Long,
+      maxChunks: Long, out: String): Long = {
+    val rows = df.count()
+    val n = math.max(2L, math.min(maxChunks, rows / rowsPerChunk + 1L)).toInt
+    df.repartitionByRange(n, col(by)).write.parquet(out)
+    new java.io.File(out).listFiles()
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      .zipWithIndex.foreach { case (f, i) =>
+        f.setLastModified(1000L * (i + 1)): Unit }
+    rows / n
+  }
+
   /** The PRODUCTION arrival shape for stream-stream joins: events staged
     * as ts-range chunk files and streamed one file per trigger, so the
     * watermark advances BETWEEN micro-batches and evicts join state. A
@@ -147,20 +163,13 @@ object EventStreams {
   private def eventsStreamChunked(spark: SparkSession, dir: String,
       triggerCap: Int = Int.MaxValue): DataFrame = {
     val staged = chunkedCache.computeIfAbsent(dir, { d =>
-      val ev = graft.sources.Tables(spark, d).events
+      val out = graft.Scratch.pinnedDir("stchunks_") + "/events"
       // chunk size trades per-trigger fixed cost (planning, 2 source
       // reads, state commit) against in-batch state growth; with the
       // bucketed equi-key the probe cost is bucket-local, so chunks are
       // sized for state MEMORY (~2M rows/side), not probe fan-out
-      val rows = ev.count()
-      val n = math.max(2L, math.min(64L, rows / 2000000L + 1L)).toInt
-      chunkRowsCache.put(d, rows / n): Unit
-      val out = graft.Scratch.pinnedDir("stchunks_") + "/events"
-      ev.repartitionByRange(n, col("ts")).write.parquet(out)
-      val parts = new java.io.File(out).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000L * (i + 1)): Unit }
+      chunkRowsCache.put(d, stageOrdered(graft.sources.Tables(spark, d).events,
+        "ts", rowsPerChunk = 2000000L, maxChunks = 64L, out)): Unit
       out
     })
     val schema = graft.sources.Tables.schemaOf(spark, staged)
@@ -223,93 +232,120 @@ object EventStreams {
       .option("maxFilesPerTrigger", "1").parquet(staged)
   }
 
-  /** Stateful streaming queries get their OWN shuffle-partition count:
-    * every stateful operator instantiates one state store per shuffle
-    * partition per micro-batch, so the batch-side default (sized for
-    * data-proportional shuffles) buys pure fixed overhead here. Sized by
-    * SPARK_GRAFT_STREAM_PARTITIONS (default 8 — right for the bench's
-    * state volumes; raise at cluster scale where state actually fills
-    * partitions). Spark pins a streaming query's state partitioning at
-    * first start, so at 100 TB this is a per-pipeline capacity choice,
-    * exactly like the reference sizing its provider buffers. */
-  private[graft] def streamPartitions: String = {
-    val raw = sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    val parsed = raw.flatMap(_.trim.toIntOption).filter(_ > 0)
-    if (raw.isDefined && parsed.isEmpty)
-      System.err.println(
-        s"[graft] ignoring invalid SPARK_GRAFT_STREAM_PARTITIONS=" +
-          s"${raw.get} (need a positive integer); using 8")
-    parsed.getOrElse(8).toString
+  /** Where [[runToTable]] puts a stream's rows. */
+  sealed trait Sink
+  object Sink {
+    /** Aggregate-sized output (one row per group, or st18's few windows)
+      * held on the driver and read back as a `graft_stream_` temp view;
+      * `mode` is the output mode. */
+    final case class Memory(mode: String) extends Sink
+    /** Fact-scale append output: a parquet FileStreamSink, read back
+      * through its commit log. */
+    case object Files extends Sink
+    /** A per-micro-batch `body` that writes its own output, and the
+      * `read` of what it wrote. A `checkpoint` dir makes a later run over
+      * the same dir resume from the committed offsets. */
+    final case class Batches(body: (DataFrame, Long) => Unit,
+        read: () => DataFrame, checkpoint: Option[String] = None)
+        extends Sink
   }
 
-  /** Run a streaming transform to completion over the (finite) file source
-    * and hand back the materialized result. Append mode holds the last
-    * watermark window open unless the source ends with a flush sentinel
-    * (eventsStreamChunkedFlushed) — the scale-correct pairing for
-    * operators whose complete-mode state would grow with the corpus.
+  /** State-store count for a stateful memory/file stream. Every stateful
+    * operator instantiates one state store per shuffle partition per
+    * micro-batch, so the batch-side width (sized for data-proportional
+    * shuffles) buys pure fixed overhead here: 8 stores fit
+    * watermark-bounded state (most st queries; st22's 2-group aggregate
+    * measured addBatch ~650-1000 ms/batch at the session's 32 partitions
+    * vs ~250-330 ms at 8, sf0.1). Operators whose in-flight state is
+    * corpus-proportional (st09 holds every open session of the current
+    * arrival chunk — millions at sf10) pass `stateRows`, their per-batch
+    * state bound (the staged chunk row count): one store per ~50k state
+    * rows, floored at 8 and CAPPED at 64 — every store pays a
+    * commit/maintenance cost per micro-batch, so a count not backed by
+    * data volume multiplies pure overhead by the trigger count (measured
+    * sf100: st09 473 s at the suite's 256 partitions vs 216 s at 64;
+    * sf0.1: 32 inherited stores cost ~0.5 s of commit overhead per batch
+    * on 50k-row chunks where 8 suffice; sf10: 39 s at 8 stores → 29 s at
+    * 32 — both directions lose, so the count scales with state volume,
+    * not with the core count or the batch shuffle sizing). Spark pins a
+    * query's state partitioning at its first start, so at 100 TB this is
+    * a per-pipeline capacity choice, like the reference sizing its
+    * provider buffers. */
+  private def statePartitions(stateRows: Long): String =
+    math.min(64L, math.max(8L, stateRows / 50000L)).toString
+
+  private val RocksDbProvider =
+    "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** The one stream runner: run `df` to completion over its (finite)
+    * source with `Trigger.AvailableNow`, hand the finished query to
+    * `check`, and read the result back from `sink`. Append mode holds the
+    * last watermark window open unless the source ends with a flush
+    * sentinel (eventsStreamChunkedFlushed) — the scale-correct pairing
+    * for operators whose complete-mode state would grow with the corpus.
     *
-    * SINK CHOICE IS A SCALE CONTRACT: append-mode outputs are
-    * fact-scale (every join match, every finalized session, every
-    * enriched event), so they land in a parquet FileStreamSink — the
-    * shape a production stream writes — and are read back through its
-    * commit log. A memory sink would accumulate the whole corpus-sized
-    * answer on the driver heap: at sf10 st09's 9.5M finalized sessions
-    * OOM'd the driver-parity 8 GB suite JVM exactly there. Complete/
-    * update outputs are aggregate-sized (one row per group), which is
-    * what the memory sink is for — and the file sink can't express
-    * their retractions anyway.
+    * SINK CHOICE IS A SCALE CONTRACT: append-mode outputs are fact-scale
+    * (every join match, every finalized session, every enriched event),
+    * so they land in [[Sink.Files]] — the shape a production stream
+    * writes. A memory sink would accumulate the whole corpus-sized answer
+    * on the driver heap: at sf10 st09's 9.5M finalized sessions OOM'd the
+    * driver-parity 8 GB suite JVM exactly there. Complete/update outputs
+    * are aggregate-sized, which is what [[Sink.Memory]] is for — and the
+    * file sink can't express their retractions anyway.
+    *
+    * STATE CONFS ARE START-SCOPED: a memory/file stream gets
+    * [[statePartitions]] as its shuffle width, and `rocksDb` swaps in the
+    * RocksDB state store (st05 by choice; st10 because transformWithState
+    * requires it). Both are set on the caller's session only across
+    * `start()`: the StreamExecution constructor clones the session for
+    * the stream, so every batch plans under the clone and never reads the
+    * caller's conf, which is restored as soon as `start()` returns. The
+    * stream stays on the caller's session so its StreamingQueryListeners
+    * see it.
+    * [[Sink.Batches]] streams get no sizing: their bodies run batch
+    * queries in the clone, sized for data (st20's as-of join, st12's
+    * anti-join), and st08's dedup state keeps the session width.
     */
-  private def runToTable(df: DataFrame, mode: String,
-      stateRows: Long = 0L): DataFrame = {
+  private[graft] def runToTable(df: DataFrame, sink: Sink,
+      stateRows: Long = 0L, rocksDb: Boolean = false,
+      check: StreamingQuery => Unit = _ => ()): DataFrame = {
     val spark = df.sparkSession
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    // Fixed small state-partition count fits watermark-bounded state
-    // (most st queries). Operators whose in-flight state is
-    // corpus-proportional (st09 holds every open session of the current
-    // arrival chunk — millions at sf10) size their store count FROM THE
-    // DATA instead (stateRows = the caller's per-batch state bound, the
-    // staged chunk row count): one store per ~50k state rows, floored at
-    // the fixed stream sizing and CAPPED — every state store pays a
-    // commit/maintenance cost per micro-batch, so a count not backed by
-    // data volume multiplies pure overhead by the trigger count
-    // (measured sf100: st09 473 s at the suite's 256 partitions vs
-    // 216 s at 64; measured sf0.1: 32 inherited stores cost ~0.5 s of
-    // commit overhead per batch on 50k-row chunks where 8 suffice;
-    // measured sf10: 39 s at 8 stores → 29 s at 32 — both directions
-    // lose, so the count must scale with state volume, not with either
-    // the core count or the batch shuffle sizing).
-    // SPARK_GRAFT_STREAM_STATE_CAP overrides the cap — a real cluster
-    // with RocksDB stores and 1000 executors raises it.
-    val stateCap = sys.env.get("SPARK_GRAFT_STREAM_STATE_CAP")
-      .flatMap(_.trim.toIntOption).filter(_ > 0).getOrElse(64)
-    val floor = streamPartitions.toInt
-    val dataScaled = math.min(stateCap.toLong,
-      math.max(floor.toLong, stateRows / 50000L)).toString
-    spark.conf.set(key, if (stateRows > 0L) dataScaled else streamPartitions)
-    try {
-      if (mode == "append") {
-        val root = graft.Scratch.dir("stout_")
-        val q = df.writeStream.format("parquet")
-          .option("path", s"$root/data")
-          .option("checkpointLocation", s"$root/ckpt")
-          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        // explicit schema: an all-filtered run leaves only the metadata
-        // log, where schema inference has nothing to read
-        spark.read.schema(df.schema).parquet(s"$root/data")
-      } else {
+    val (writer, read) = sink match {
+      case Sink.Memory(mode) =>
         val name = s"graft_stream_${memId.incrementAndGet()}"
-        val q = df.writeStream.format("memory").queryName(name)
-          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        spark.table(name)
-      }
-    } finally spark.conf.set(key, prev)
+        (df.writeStream.format("memory").queryName(name).outputMode(mode),
+          () => spark.table(name))
+      case Sink.Files =>
+        val root = graft.Scratch.dir("stout_")
+        (df.writeStream.format("parquet").option("path", s"$root/data")
+          .option("checkpointLocation", s"$root/ckpt").outputMode("append"),
+          // explicit schema: an all-filtered run leaves only the metadata
+          // log, where schema inference has nothing to read
+          () => spark.read.schema(df.schema).parquet(s"$root/data"))
+      case Sink.Batches(body, read, checkpoint) =>
+        val w = df.writeStream.foreachBatch(body)
+        (checkpoint.fold(w)(w.option("checkpointLocation", _)), read)
+    }
+    val confs = (sink match {
+      case _: Sink.Batches => Nil
+      case _ => Seq("spark.sql.shuffle.partitions" -> statePartitions(stateRows))
+    }) ++ (if (rocksDb) Seq(RocksDbProvider) else Nil)
+    // what the caller set itself; getOption would also report defaults
+    val prev = confs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val q = try writer.trigger(Trigger.AvailableNow()).start()
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    q.awaitTermination()
+    check(q)
+    read()
   }
 
   def st01StreamWindow(spark: SparkSession, dir: String): DataFrame =
-    runToTable(windowedAgg(eventsStream(spark, dir)), "complete")
+    runToTable(windowedAgg(eventsStream(spark, dir)), Sink.Memory("complete"))
       .orderBy(col("day"), col("event_type"))
 
   /** st03 — the reference's whole ingest architecture in one operator:
@@ -331,19 +367,20 @@ object EventStreams {
       Incremental.Step("boost", _.withColumn("boosted", col("value") * 2.0)
         .drop("value"))))
     val start = Incremental.nextStart(spark, sink, "event_id")
-    val q = eventsStream(spark, dir).writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        pipe.run(batch.filter(col("event_id") >= start))
-          .write.mode("append").parquet(sink): Unit
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(sink).sortWithinPartitions(col("event_id"))
+    runToTable(eventsStream(spark, dir), Sink.Batches(
+      (batch, _) => pipe.run(batch.filter(col("event_id") >= start))
+        .write.mode("append").parquet(sink),
+      () => spark.read.parquet(sink)))
+      .sortWithinPartitions(col("event_id"))
   }
 
   def st02StreamState(spark: SparkSession, dir: String): DataFrame =
-    finalSessions(
-      runToTable(sessionize(typedEvents(spark, dir)).toDF(), "update"))
+    sessionState(spark, dir, rocksDb = false)
+
+  private def sessionState(spark: SparkSession, dir: String,
+      rocksDb: Boolean): DataFrame =
+    finalSessions(runToTable(sessionize(typedEvents(spark, dir)).toDF(),
+      Sink.Memory("update"), rocksDb = rocksDb))
 
   /** st04 — stream-stream interval join: the streaming form of the swap→
     * transfer match (orca_swaps adjacency): each click pairs with the same
@@ -390,7 +427,7 @@ object EventStreams {
         col("purchase_id"), col("c_ts"), col("p_ts"))
     // fact-scale output (every click-purchase match): part-sorted per
     // the global-sort-tax convention — the compare is order-insensitive
-    runToTable(joined, "append")
+    runToTable(joined, Sink.Files)
       .sortWithinPartitions(col("user_id"), col("click_id"),
         col("purchase_id"))
   }
@@ -436,7 +473,7 @@ object EventStreams {
       .select(col("c_user").as("user_id"), col("click_id"),
         col("purchase_id"))
     // fact-scale output: part-sorted (see st04)
-    runToTable(joined, "append")
+    runToTable(joined, Sink.Files)
       .sortWithinPartitions(col("user_id"), col("click_id"),
         col("purchase_id"))
   }
@@ -463,23 +500,19 @@ object EventStreams {
         col("o_orderkey"))
       .localCheckpoint(true) // computed once, reused every micro-batch
     try {
-      val q = eventsStream(spark, dir)
-        .select(col("user_id"), col("event_id"), col("ts"))
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          sink.writeBatch(
-            graft.plans.AsOf.join(
-              batch.withColumn("ts_us", unix_micros(col("ts"))), ord,
-              leftKey = "user_id", leftTime = "ts_us",
-              rightKey = "o_custkey", rightTime = "o_us",
-              rightTie = "o_orderkey")
-              .select(col("user_id"), col("event_id"), col("ts"),
-                col("o_orderkey").as("asof_orderkey")), id)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      runToTable(eventsStream(spark, dir)
+        .select(col("user_id"), col("event_id"), col("ts")), Sink.Batches(
+        (batch, id) => sink.writeBatch(
+          graft.plans.AsOf.join(
+            batch.withColumn("ts_us", unix_micros(col("ts"))), ord,
+            leftKey = "user_id", leftTime = "ts_us",
+            rightKey = "o_custkey", rightTime = "o_us",
+            rightTie = "o_orderkey")
+            .select(col("user_id"), col("event_id"), col("ts"),
+              col("o_orderkey").as("asof_orderkey")), id),
+        () => sink.read(spark)))
+        .sortWithinPartitions(col("user_id"), col("event_id"))
     } finally ord.unpersist()
-    sink.read(spark).sortWithinPartitions(col("user_id"), col("event_id"))
   }
 
   /** Oracles are plain batch SQL over the same table — valid because the
@@ -496,20 +529,6 @@ object EventStreams {
     * from "fits in heap" to "fits on disk". Identical answer contract:
     * verified against the SAME oracle as st02.
     */
-  /** Run body with the RocksDB state store provider, restoring after
-    * (st05 by choice; st10 because transformWithState requires it). */
-  private def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** events stream as the typed Ev dataset st02/st10 fold over. */
   private def typedEvents(spark: SparkSession, dir: String)
       : org.apache.spark.sql.Dataset[Ev] = {
@@ -531,7 +550,7 @@ object EventStreams {
       .orderBy(col("user_id"))
 
   def st05RocksdbState(spark: SparkSession, dir: String): DataFrame =
-    withRocksDb(spark) { st02StreamState(spark, dir) }
+    sessionState(spark, dir, rocksDb = true)
 
   /** The sessionization fold as a Spark-4 `StatefulProcessor`: typed
     * ValueState replaces GroupState, init wires the state handle, and
@@ -566,12 +585,11 @@ object EventStreams {
   def st10TransformWithState(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    withRocksDb(spark) {
-      val out = typedEvents(spark, dir).groupByKey(_.user_id)
-        .transformWithState(new SessionProcessor(1800L * 1000000L),
-          TimeMode.None(), OutputMode.Update())
-      finalSessions(runToTable(out.toDF(), "update"))
-    }
+    val out = typedEvents(spark, dir).groupByKey(_.user_id)
+      .transformWithState(new SessionProcessor(1800L * 1000000L),
+        TimeMode.None(), OutputMode.Update())
+    finalSessions(runToTable(out.toDF(), Sink.Memory("update"),
+      rocksDb = true))
   }
 
   /** st06 — the reference's ACTUAL sink topology end-to-end: stream in,
@@ -592,17 +610,13 @@ object EventStreams {
     // a deterministic 10% slice: the operator under test is the streaming
     // fold into a DB, and the DB's single-threaded insert path would
     // otherwise dominate the bench with time that isn't Spark's
-    val q = eventsStream(spark, dir)
+    runToTable(eventsStream(spark, dir)
       .filter(pmod(col("event_id"), lit(10)) === 0)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink.write(batch.withColumn("boosted", col("value") * 2.0)
-          .drop("value"))
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    sink.read(spark)
+      .select(col("event_id"), col("user_id"), col("event_type"), col("value")),
+      Sink.Batches(
+        (batch, _) => sink.write(batch.withColumn("boosted", col("value") * 2.0)
+          .drop("value")),
+        () => sink.read(spark)))
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("boosted"))
       .sortWithinPartitions(col("event_id"))
@@ -632,13 +646,10 @@ object EventStreams {
     val decoded = EvmAbi.decodeEvent(logs, sig)
       .select(col("event_id"), col("from").as("from_addr"),
         col("to").as("to_addr"), col("amount").cast("string").as("amount"))
-    val q = decoded.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(sink): Unit
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(sink).sortWithinPartitions(col("event_id"))
+    runToTable(decoded, Sink.Batches(
+      (batch, _) => batch.write.mode("append").parquet(sink),
+      () => spark.read.parquet(sink)))
+      .sortWithinPartitions(col("event_id"))
   }
 
   /** st08 — watermarked streaming deduplication: every event arrives
@@ -655,16 +666,11 @@ object EventStreams {
         col("value"), col("ts"),
         explode(array(lit(1), lit(2))).as("copy"))
       .drop("copy")
-    val q = doubled
+    runToTable(doubled
       .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(sink): Unit
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(sink)
+      .dropDuplicatesWithinWatermark("event_id"), Sink.Batches(
+      (batch, _) => batch.write.mode("append").parquet(sink),
+      () => spark.read.parquet(sink)))
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"))
       .sortWithinPartitions(col("event_id"))
@@ -693,7 +699,7 @@ object EventStreams {
       .withWatermark("ts", "2 hours")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"))
-    runToTable(sessions, "append",
+    runToTable(sessions, Sink.Files,
       stateRows = chunkRowsCache.getOrDefault(dir, 0L))
       .filter(col("user_id") >= 0)
       .select(col("user_id"),
@@ -720,7 +726,7 @@ object EventStreams {
       .select(col("doc_id"), col("lang"),
         TextAnalysis.sampleBucket.as("bucket"))
       .filter(col("bucket") <= TextAnalysis.sampleThreshold)
-    runToTable(sampled, "append").sortWithinPartitions(col("doc_id"))
+    runToTable(sampled, Sink.Files).sortWithinPartitions(col("doc_id"))
   }
 
   /** st12 — the curation pipeline under streaming: each micro-batch of
@@ -749,16 +755,11 @@ object EventStreams {
     val evalGrams = Pipelines
       .evalGramsOf(staticDocs, collapse)
       .localCheckpoint(true) // computed ONCE, reused every micro-batch
-    val docs = tableStream(spark, dir, "documents")
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        Pipelines.curateBatch(batch, evalGrams, collapse)
-          .drop("text")
-          .write.mode("append").parquet(sink): Unit
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(sink)
+    runToTable(tableStream(spark, dir, "documents"), Sink.Batches(
+      (batch, _) => Pipelines.curateBatch(batch, evalGrams, collapse)
+        .drop("text")
+        .write.mode("append").parquet(sink),
+      () => spark.read.parquet(sink)))
       .select(col("doc_id"), col("lang"), col("bucket"), col("quality"))
       .sortWithinPartitions(col("doc_id"))
   }
@@ -805,17 +806,15 @@ object EventStreams {
     */
   def st13IdempotentSink(spark: SparkSession, dir: String): DataFrame = {
     val sink = IdempotentSink(graft.Scratch.dir("st13_"))
-    val q = eventsStream(spark, dir)
+    runToTable(eventsStream(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+        col("value")), Sink.Batches(
+      { (batch, id) =>
         sink.writeBatch(batch, id)
         sink.writeBatch(batch, id) // simulated post-failure replay
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    sink.read(spark).sortWithinPartitions(col("event_id"))
+      },
+      () => sink.read(spark)))
+      .sortWithinPartitions(col("event_id"))
   }
 
   /** st14 — the reference's FULL production topology composed end to end
@@ -846,15 +845,13 @@ object EventStreams {
     val decoded = EvmAbi.decodeEvent(logs, sig)
       .select(col("event_id"), col("from").as("from_addr"),
         col("to").as("to_addr"), col("amount").cast("string").as("amount"))
-    val q = decoded.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    val staged = runToTable(decoded, Sink.Batches(
+      { (batch, id) =>
         staging.writeBatch(batch, id)
         staging.writeBatch(batch, id) // simulated at-least-once replay
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.sinks.Writers.publishVersion(spark, s"$root/table", 1,
-      staging.read(spark))
+      },
+      () => staging.read(spark)))
+    graft.sinks.Writers.publishVersion(spark, s"$root/table", 1, staged)
     graft.sinks.Writers.readCurrent(spark, s"$root/table")
       .sortWithinPartitions(col("event_id"))
   }
@@ -877,7 +874,7 @@ object EventStreams {
       logs = Seq(LogRequest(topic0 = Seq("click", "purchase"))),
       fields = EvmFields(
         log = Seq("event_id", "user_id", "event_type", "value")))
-    runToTable(applyLogRequest(eventsStream(spark, dir), req), "append")
+    runToTable(applyLogRequest(eventsStream(spark, dir), req), Sink.Files)
       .sortWithinPartitions(col("event_id"))
   }
 
@@ -915,7 +912,7 @@ object EventStreams {
       .select(col("event_id"), col("user_id"),
         (col("value") / col("user_total").cast("double")).as("share"))
     // fact-scale output (one row per event): part-sorted
-    runToTable(enriched, "append").sortWithinPartitions(col("event_id"))
+    runToTable(enriched, Sink.Files).sortWithinPartitions(col("event_id"))
   }
 
   /** st16 — exactly-once across RESTARTS (st13 covers replays within a
@@ -932,20 +929,15 @@ object EventStreams {
   def st16CheckpointResume(spark: SparkSession, dir: String): DataFrame = {
     val root = graft.Scratch.dir("st16_")
     val sink = s"$root/sink"
-    def runOnce(): Unit = {
-      val q = eventsStream(spark, dir)
-        .select(col("event_id"), col("user_id"), col("value"))
-        .writeStream
-        .option("checkpointLocation", s"$root/chk")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(sink): Unit
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    runOnce() // initial run drains the source
-    runOnce() // restart: recovered offsets ⇒ appends nothing
-    spark.read.parquet(sink).sortWithinPartitions(col("event_id"))
+    def runOnce(read: () => DataFrame): DataFrame =
+      runToTable(eventsStream(spark, dir)
+        .select(col("event_id"), col("user_id"), col("value")), Sink.Batches(
+        (batch, _) => batch.write.mode("append").parquet(sink), read,
+        checkpoint = Some(s"$root/chk")))
+    // initial run drains the source; only the restart's sink is read
+    runOnce(() => spark.emptyDataFrame)
+    runOnce(() => spark.read.parquet(sink)) // recovered offsets ⇒ appends nothing
+      .sortWithinPartitions(col("event_id"))
   }
 
   /** st17 — streaming CDC apply: the change feed (update rows for every
@@ -980,17 +972,14 @@ object EventStreams {
     val del = s.filter(pmod(col("event_id"), lit(5)) === 0)
       .withColumn("version", lit(3L))
       .withColumn("__deleted", lit(true))
-    val q = upd.unionByName(del).writeStream
-      .option("checkpointLocation", s"$root/chk")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    val deltas = runToTable(upd.unionByName(del), Sink.Batches(
+      { (batch, id) =>
         deltaLog.writeBatch(batch, id)
         deltaLog.writeBatch(batch, id) // simulated post-failure replay
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      },
+      () => deltaLog.read(spark), checkpoint = Some(s"$root/chk")))
     graft.sinks.Writers
-      .mergeOnReadView(spark, base, deltaLog.read(spark),
-        Seq("event_id"), "version")
+      .mergeOnReadView(spark, base, deltas, Seq("event_id"), "version")
       .sortWithinPartitions(col("event_id"))
   }
 
@@ -1059,21 +1048,13 @@ object EventStreams {
           .cast("double").as("sum_v"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_v"))
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, streamPartitions)
-    try {
-      val name = s"graft_stream_${memId.incrementAndGet()}"
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    runToTable(agg, Sink.Memory("append"), check = { q =>
       val dropped = q.recentProgress
         .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
       require(dropped > 0,
         "the stragglers must actually be dropped by the watermark, " +
           s"got numRowsDroppedByWatermark=$dropped")
-      spark.table(name).orderBy(col("window_start"), col("event_type"))
-    } finally spark.conf.set(key, prev)
+    }).orderBy(col("window_start"), col("event_type"))
   }
 
   final case class PackDoc(doc_id: Long, bucket: Long, cost: Long)
@@ -1099,15 +1080,9 @@ object EventStreams {
     import spark.implicits._
     import org.apache.spark.sql.streaming.OutputMode
     val staged = chunkedCache.computeIfAbsent(dir + "#pack", { _ =>
-      val in = graft.operators.Corpus.packInput(spark, dir)
-      val nChunks = math.max(2L, math.min(16L,
-        in.count() / 250000L + 1L)).toInt
       val out = graft.Scratch.pinnedDir("stpack_") + "/docs"
-      in.repartitionByRange(nChunks, col("doc_id")).write.parquet(out)
-      val parts = new java.io.File(out).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000L * (i + 1)): Unit }
+      stageOrdered(graft.operators.Corpus.packInput(spark, dir), "doc_id",
+        rowsPerChunk = 250000L, maxChunks = 16L, out): Unit
       out
     })
     val schema = graft.sources.Tables.schemaOf(spark, staged)
@@ -1127,7 +1102,7 @@ object EventStreams {
           state.update(st)
           outRows.iterator
       }
-    runToTable(assigned.toDF(), "append")
+    runToTable(assigned.toDF(), Sink.Files)
       .sortWithinPartitions(col("doc_id"))
   }
 
@@ -1153,15 +1128,9 @@ object EventStreams {
     import spark.implicits._
     import org.apache.spark.sql.streaming.OutputMode
     val staged = chunkedCache.computeIfAbsent(dir + "#lenb", { _ =>
-      val in = graft.operators.Corpus.c11Input(spark, dir)
-      val nChunks = math.max(2L, math.min(16L,
-        in.count() / 250000L + 1L)).toInt
       val out = graft.Scratch.pinnedDir("stlenb_") + "/docs"
-      in.repartitionByRange(nChunks, col("doc_id")).write.parquet(out)
-      val parts = new java.io.File(out).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000L * (i + 1)): Unit }
+      stageOrdered(graft.operators.Corpus.c11Input(spark, dir), "doc_id",
+        rowsPerChunk = 250000L, maxChunks = 16L, out): Unit
       out
     })
     val schema = graft.sources.Tables.schemaOf(spark, staged)
@@ -1181,7 +1150,7 @@ object EventStreams {
           state.update(seen)
           outRows.iterator
       }
-    runToTable(assigned.toDF(), "append")
+    runToTable(assigned.toDF(), Sink.Files)
       .sortWithinPartitions(col("doc_id"))
   }
 
@@ -1201,7 +1170,7 @@ object EventStreams {
         .agg(expr("hll_sketch_estimate(hll_sketch_agg(user_id))")
           .as("est"),
           count(lit(1)).as("n_events")),
-      "complete")
+      Sink.Memory("complete"))
     val exact = graft.sources.Tables(spark, dir).events
       .groupBy(date_trunc("day", col("ts")).as("day"))
       .agg(countDistinct(col("user_id")).as("exact_users"))
@@ -1243,7 +1212,7 @@ object EventStreams {
           state.update(st)
           graft.operators.Funnel.UserFunnel(uid, funnelLevel(st))
       }
-    val levels = runToTable(updated.toDF(), "update")
+    val levels = runToTable(updated.toDF(), Sink.Memory("update"))
       .groupBy(col("user_id")).agg(max(col("funnel_level")).as("lvl"))
     // q44's output contract, one definition — level-0 backfill included
     graft.operators.Relational.funnelAllUsers(spark, dir, levels)
@@ -1285,7 +1254,7 @@ object EventStreams {
           graft.operators.Funnel.UserFunnel(uid,
             graft.operators.Funnel.levelK(st))
       }
-    val levels = runToTable(updated.toDF(), "update")
+    val levels = runToTable(updated.toDF(), Sink.Memory("update"))
       .groupBy(col("user_id")).agg(max(col("funnel_level")).as("lvl"))
     graft.operators.Relational.funnelAllUsers(spark, dir, levels)
   }
@@ -1327,7 +1296,7 @@ object EventStreams {
             }.iterator
       }
     graft.operators.Relational.transitionMatrix(
-      runToTable(deltas.toDF(), "update")
+      runToTable(deltas.toDF(), Sink.Memory("update"))
         .groupBy(col("from_type"), col("to_type"))
         .agg(sum(col("n")).as("n")))
   }
@@ -1350,7 +1319,7 @@ object EventStreams {
         .select(col("day"), expr(binIdSql("v1")).as("bin_id"))
         .groupBy(col("day"), col("bin_id"))
         .agg(count(lit(1)).as("cnt")),
-      "complete")
+      Sink.Memory("complete"))
     histQuantiles(hist) // k29's selection, one definition — no drift
       .select(col("day"), col("n_events"),
         expr(binLbSql("b50")).as("p50_cents"),
