@@ -30,51 +30,6 @@ case object DedupAssignment extends DedupOutput
 
 object Dedup {
 
-  /** All (a, b) pairs with a < b WITHIN each equal-key group — the
-    * member-pair expansion d02/d03/m07's collapsed paths share. The
-    * naive spelling (self-join on the group key) puts an entire group's
-    * |g|² output on ONE join key = one task: a planted 10%-hot-key
-    * corpus (one text owned by 10% of a 100 TB crawl) makes that a
-    * billion-row straggler. Chunk-balanced instead: members rank within
-    * their group (one bounded window per group, parallel across
-    * groups), chunks of 256 pair with every not-earlier chunk, and the
-    * join key becomes (key, chunk) — ~|g|/256 keys per hot group, the
-    * largest task bounded at |g|×256 pairs (≤2× the mean — the
-    * triangle), instead of |g|²/2 on one. Pair output itself is
-    * quadratic in group size BY CONTRACT (it's a pair list — d14's
-    * linear assignment is the production shape); this bounds the
-    * per-task slice, which is what OOMs. */
-  private[operators] def withinGroupPairs(members: DataFrame,
-      key: String, id: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val C = 256
-    // The expansion join's OUTPUT is quadratically larger than its
-    // input, so AQE's input-sized partition coalescing under-plans it:
-    // a few hundred MB of member rows coalesce to ~8 partitions which
-    // then each emit 10^8+ pairs — one decade of lost parallelism and
-    // (if anything downstream buffers) task-level spill. Pinning the
-    // pre-join shuffles to the configured parallelism keeps the
-    // expansion spread over every core; the inputs are id-only rows,
-    // so the extra exchange is noise.
-    val n = members.sparkSession.sessionState.conf.numShufflePartitions
-    val w = Window.partitionBy(col(key)).orderBy(col(id))
-    val ranked = members
-      .select(col(key), col(id))
-      .withColumn("r", row_number().over(w).cast("long") - 1)
-      .withColumn("c", expr(s"r div $C"))
-    val cmax = ranked.groupBy(col(key)).agg(max(col("c")).as("cmax"))
-    val lhs = ranked.join(cmax, Seq(key))
-      .select(col(key), col(id).as("ia"), col("r").as("ra"),
-        explode(sequence(col("c"), col("cmax"))).as("cb"))
-      .repartition(n, col(key), col("cb"))
-    val rhs = ranked.select(col(key), col(id).as("ib"), col("r").as("rb"),
-      col("c").as("cb"))
-      .repartition(n, col(key), col("cb"))
-    lhs.join(rhs, Seq(key, "cb"))
-      .where(col("ra") < col("rb"))
-      .select(col(key), col("ia").as("a"), col("ib").as("b"))
-  }
-
   /** d01 — exact dedup: content-hash groupBy, keep lowest doc_id.
     * One shuffle on the 128-bit hash; partial agg combines map-side. */
   def d01DedupExact(spark: SparkSession, dir: String): DataFrame =
@@ -112,127 +67,68 @@ object Dedup {
     case DedupAssignment => d14DedupAssign(spark, dir)
     case DedupPairs =>
       val docs = Tables(spark, dir).documents
-      if (DupDensity.probe(docs, md5(col("text"))).collapseWorthIt)
-        d02Collapsed(spark, dir)
-      else d02Direct(spark, dir)
+      DupDensity.pairs(docs.select(col("doc_id"), col("text")), "doc_id",
+        DupDensity.textKey, DupDensity.textGate(docs),
+        spreadKernel = true)(d02Kernel) // one md5 per shingle
   }
 
-  /** Shared d02/d12 signature prep: shingle strings (whole-text
-    * fallback) → ONE md5 per shingle → four 28-bit chunks → the
-    * 16-member portable family ([[Lsh.minhashSignature]]). Emits
-    * (`idCol`, sh, mh): `sh` is the 60-bit digest-front array, which
+  /** Shared d02/d12 signature prep over (gid, text) rows: shingle
+    * strings (whole-text fallback) → ONE md5 per shingle → four 28-bit
+    * chunks → the 16-member portable family ([[Lsh.minhashSignature]]).
+    * Emits (gid, sh, mh): `sh` is the 60-bit digest-front array, which
     * doubles as the exact-jaccard verify input. Each stage materializes
     * as a column so the digest runs once per shingle, not once per
     * family member. */
-  private[graft] def portableSig(docs: DataFrame, idCol: Column): DataFrame =
-    // one md5 per shingle = the d-family's per-row hot kernel; spread an
-    // under-partitioned scan first (single-row-group gate files yield
-    // ONE scan task — Tables.spreadNarrow, a no-op on sharded corpora)
-    Tables.spreadNarrow(docs)
-      .select(idCol.as("_id"), col("text"), split(col("text"), " ").as("ws"))
-      .select(col("_id"),
+  private[graft] def portableSig(docs: DataFrame): DataFrame =
+    docs
+      .select(col("gid"), col("text"), split(col("text"), " ").as("ws"))
+      .select(col("gid"),
         Shingles.stringsWithFallback(col("ws"), col("text"), 3).as("shs"))
-      .select(col("_id"),
+      .select(col("gid"),
         transform(col("shs"), s => graft.functions.md5_family(s)).as("fam"))
-      .select(col("_id") +:
+      .select(col("gid") +:
         transform(col("fam"), a => element_at(a, 1)).as("sh") +:
         (0 until 4).map(k =>
           transform(col("fam"), a => element_at(a, k + 2))
             .as(s"x${k + 1}")): _*)
-      .select(col("_id"), col("sh"),
+      .select(col("gid"), col("sh"),
         Lsh.minhashSignature(col("x1"), col("x2"), col("x3"), col("x4"))
           .as("mh"))
 
-  /** The direct per-doc path — right when the corpus is ~unique: no
-    * dropDuplicates of text payloads, no expansion joins. */
-  private[graft] def d02Direct(spark: SparkSession, dir: String): DataFrame = {
-    val docs = portableSig(Tables(spark, dir).documents, col("doc_id"))
-      .withColumnRenamed("_id", "doc_id")
-    // candidate generation shuffles ONLY (doc_id, band, bucket) — the
-    // shingle arrays (≈ the corpus itself) never enter the band join
-    val bands = docs.select(col("doc_id"),
-      posexplode(Lsh.minhashBuckets(col("mh")))
-        .as(Seq("band", "bucket")))
-    val pairs = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a"), col("b.doc_id").as("b"))
-      .dropDuplicates("a", "b")
-    val shingles = docs.select(col("doc_id"), col("sh"))
-    pairs
-      .join(shingles.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
-      .join(shingles.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
-      .select(col("a"), col("b"),
-        (size(array_intersect(array_distinct(col("sha")), array_distinct(col("shb"))))
-          .cast("double") /
-          size(array_union(col("sha"), col("shb")))).as("jaccard"))
-      .filter(col("jaccard") >= 0.6)
-      .orderBy(col("a"), col("b"))
-  }
+  /** Band-bucket candidates over (gid, band, bucket, …) rows: an
+    * equi-join on (band, bucket) — hash-partitionable, so candidates
+    * stay ~linear because only same-bucket rows ever meet — ordered by
+    * `before` on gid. Sides are aliased `a` and `b`. */
+  private[graft] def bandJoin(bands: DataFrame,
+      before: (Column, Column) => Column): DataFrame =
+    bands.as("a").join(bands.as("b"),
+      col("a.band") === col("b.band") &&
+        col("a.bucket") === col("b.bucket") &&
+        before(col("a.gid"), col("b.gid")))
 
-  /** DISTINCT-TEXT near-dup pairs — the shared heavy stage of
-    * [[d02Collapsed]] and [[d14DedupAssign]]: signature, banding,
-    * candidate join and exact-jaccard verify all run once per distinct
-    * text hash. Emits (ta, tb, jaccard) with ta < tb in md5 order and
-    * jaccard ≥ 0.6. Candidate generation shuffles ONLY
-    * (th, band, bucket) — the shingle arrays (≈ the corpus itself)
-    * never enter the band join; they're fetched per *surviving
-    * distinct-text pair* afterwards. At 100 TB that's the difference
+  /** The d02 pair kernel (see [[DupDensity.pairs]]): signature, banding,
+    * candidate join and exact-jaccard verify over (gid, text) rows;
+    * emits (ga, gb, jaccard) with jaccard ≥ 0.6. Candidate generation
+    * shuffles ONLY (gid, band, bucket) — the shingle arrays (≈ the
+    * corpus itself) never enter the band join; they're fetched per
+    * SURVIVING candidate afterwards. At 100 TB that's the difference
     * between shuffling 100 TB twice and shuffling a few TB of keys. */
-  private[graft] def d02RepPairs(spark: SparkSession, dir: String): DataFrame = {
-    val reps = portableSig(
-      Tables(spark, dir).documents
-        .select(md5(col("text")).as("th"), col("text"))
-        .dropDuplicates("th"),
-      col("th")).withColumnRenamed("_id", "th")
-    val bands = reps.select(col("th"),
-      posexplode(Lsh.minhashBuckets(col("mh")))
-        .as(Seq("band", "bucket")))
-    val thPairs = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.th") < col("b.th"))
-      .select(col("a.th").as("ta"), col("b.th").as("tb"))
-      .dropDuplicates("ta", "tb")
-    val shingles = reps.select(col("th"), col("sh"))
-    thPairs
-      .join(shingles.select(col("th").as("ta"), col("sh").as("sha")), Seq("ta"))
-      .join(shingles.select(col("th").as("tb"), col("sh").as("shb")), Seq("tb"))
-      .select(col("ta"), col("tb"),
+  private[graft] def d02Kernel(g: DataFrame,
+      before: (Column, Column) => Column): DataFrame = {
+    val sig = portableSig(g)
+    val sh = sig.select(col("gid"), col("sh"))
+    bandJoin(sig.select(col("gid"),
+      posexplode(Lsh.minhashBuckets(col("mh"))).as(Seq("band", "bucket"))),
+      before)
+      .select(col("a.gid").as("ga"), col("b.gid").as("gb"))
+      .dropDuplicates("ga", "gb")
+      .join(sh.select(col("gid").as("ga"), col("sh").as("sha")), Seq("ga"))
+      .join(sh.select(col("gid").as("gb"), col("sh").as("shb")), Seq("gb"))
+      .select(col("ga"), col("gb"),
         (size(array_intersect(array_distinct(col("sha")), array_distinct(col("shb"))))
           .cast("double") /
           size(array_union(col("sha"), col("shb")))).as("jaccard"))
       .filter(col("jaccard") >= 0.6)
-  }
-
-  /** The EXACT-DUP PRE-COLLAPSE path — right on high-dup corpora:
-    * identical texts share shingle sets, minhash signatures and buckets,
-    * so shingling, banding AND the exact-jaccard verify run once per
-    * DISTINCT text; member pairs expand afterwards with equi-joins.
-    * Identical-text pairs are jaccard 1.0 by definition — no verify
-    * needed. */
-  private[graft] def d02Collapsed(spark: SparkSession, dir: String): DataFrame = {
-    val members = Tables(spark, dir).documents
-      .select(col("doc_id"), md5(col("text")).as("th"))
-      .localCheckpoint(true)
-    val cross = d02RepPairs(spark, dir)
-      .join(members.select(col("th").as("ta"), col("doc_id").as("ia")), Seq("ta"))
-      .join(members.select(col("th").as("tb"), col("doc_id").as("ib")), Seq("tb"))
-      .select(least(col("ia"), col("ib")).as("a"),
-        greatest(col("ia"), col("ib")).as("b"), col("jaccard"))
-    val within = withinGroupPairs(members, "th", "doc_id")
-      .select(col("a"), col("b"), lit(1.0).as("jaccard"))
-    // pair output is corpus-scale on dup-heavy data and the gate
-    // comparator is row-order-insensitive: emit UNSORTED. Any trailing
-    // sort here is pure overhead at the quadratic output's mass — a
-    // global orderBy pays a range exchange whose sampling re-executes
-    // the lineage, and even a partition-local sort externally sorts
-    // 10^9 rows inside the AQE-coalesced join partitions (measured: the
-    // sf100 suite spent 35+ min spilling in exactly that sort).
-    cross.unionByName(within)
   }
 
   /** d03 — SimHash near-dup: 60-bit per-token-majority signature (the
@@ -245,13 +141,17 @@ object Dedup {
     */
   def d03DedupSimhash(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    // DUP-DENSITY GATE — see d02; outputs bit-identical on both paths.
-    // The key is the SIGNATURE itself (cheaper than md5(text), and
-    // exactly the collapse key the collapsed path groups on).
-    if (DupDensity.probe(docs, d03Sig).collapseWorthIt)
-      d03Collapsed(spark, dir)
-    else d03Direct(spark, dir)
+    // DUP-DENSITY GATE — see d02. The probe keys on the SIGNATURE (the
+    // duplication the band join actually sees); the collapse classes are
+    // verbatim texts, which is where the signature work is saved: the
+    // sf1 rehearsal (10× verbatim density) measured 34 s when every
+    // duplicated doc re-hashed and re-verified against its bucket mates.
+    DupDensity.pairs(docs.select(col("doc_id"), col("text")), "doc_id",
+      DupDensity.textKey, DupDensity.probe(docs, d03Sig).collapse,
+      spreadKernel = true)(d03Kernel)
   }
+
+  private[graft] def d03Kernel = hammingKernel(d03Sig, simhashBands) _
 
   /** The d03 signature kernel: majority vote over portable 60-bit token
     * hashes (every occurrence votes, d13's simhash twin full-corpus). */
@@ -264,67 +164,20 @@ object Dedup {
     * never scales with the corpus. */
   private val simhashBands = Lsh.pigeonhole(60, maxHamming = 3)
 
-  /** Direct per-doc path — no collapse machinery when the corpus is
-    * ~unique. */
-  private[graft] def d03Direct(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.spreadNarrow(Tables(spark, dir).documents)
-      .select(col("doc_id"), d03Sig.as("sig"))
-    val bands = docs.select(col("doc_id"), col("sig"),
-      posexplode(simhashBands.bucketArray(col("sig")))
-        .as(Seq("band", "bucket")))
-    bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a"), col("b.doc_id").as("b"),
+  /** The hamming ≤ 3 pair kernel d03 and m07 share: `sig` per (gid, …)
+    * row, pigeonhole-banded (no candidate within the bound is missed),
+    * verified with bit_count(xor) on the band-join survivors; emits
+    * (ga, gb, hamming). */
+  private[graft] def hammingKernel(sig: Column, bands: Lsh.BandGeometry)(
+      g: DataFrame, before: (Column, Column) => Column): DataFrame = {
+    val sigs = g.select(col("gid"), sig.as("sig"))
+    bandJoin(sigs.select(col("gid"), col("sig"),
+      posexplode(bands.bucketArray(col("sig"))).as(Seq("band", "bucket"))),
+      before)
+      .select(col("a.gid").as("ga"), col("b.gid").as("gb"),
         bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hamming"))
-      .dropDuplicates("a", "b")
+      .dropDuplicates("ga", "gb")
       .filter(col("hamming") <= 3)
-      .orderBy(col("a"), col("b"))
-  }
-
-  /** EXACT-DUP PRE-COLLAPSE path (the standard crawl-dedup order: exact
-    * before near): verbatim copies share a signature, and a high-dup
-    * corpus makes every duplicated doc re-verify against every bucket
-    * mate — the sf1 rehearsal (10× verbatim density) measured 34 s.
-    * Band-join and hamming-verify once per DISTINCT signature, then
-    * expand sig-pairs back to doc pairs with two equi-joins: the
-    * quadratic work is now sized to the distinct-signature set and the
-    * OUTPUT (which is inherently pair-quadratic in dup multiplicity —
-    * d08 is the cluster-output form when pairs are not required). */
-  private[graft] def d03Collapsed(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.spreadNarrow(Tables(spark, dir).documents)
-      .select(col("doc_id"), d03Sig.as("sig"))
-      .localCheckpoint(true) // read twice below (band join + expansion)
-    val sigs = docs.select(col("sig")).distinct()
-    val bands = sigs.select(col("sig"),
-      posexplode(simhashBands.bucketArray(col("sig")))
-        .as(Seq("band", "bucket")))
-    val sigPairs = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.sig") < col("b.sig"))
-      .select(col("a.sig").as("sa"), col("b.sig").as("sb"),
-        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hamming"))
-      .dropDuplicates("sa", "sb")
-      .filter(col("hamming") <= 3)
-    // cross-group expansion: every member pair of a near-dup sig pair
-    val cross = sigPairs
-      .join(docs.select(col("sig").as("sa"), col("doc_id").as("ia")),
-        Seq("sa"))
-      .join(docs.select(col("sig").as("sb"), col("doc_id").as("ib")),
-        Seq("sb"))
-      .select(least(col("ia"), col("ib")).as("a"),
-        greatest(col("ia"), col("ib")).as("b"), col("hamming"))
-    // within-group pairs: identical signatures, hamming 0 —
-    // chunk-balanced so one hot signature can't single-task its |g|²
-    val within = withinGroupPairs(docs, "sig", "doc_id")
-      .select(col("a"), col("b"), lit(0).cast("integer").as("hamming"))
-    // unsorted by the d02Collapsed argument: the comparator sorts, and
-    // a sort of the quadratic pair mass is the suite's own bottleneck
-    cross.unionByName(within)
   }
 
   /** d04 — exact n-gram Jaccard over a bounded subset (doc_id < 200): the
@@ -440,7 +293,8 @@ object Dedup {
     * recall on it.
     */
   /** The one collapse key for embedding payloads (d06/d09). */
-  private def ehOf: Column = md5(concat_ws(",", col("embedding")).cast("binary"))
+  private[graft] def ehOf: Column =
+    md5(concat_ws(",", col("embedding")).cast("binary"))
 
   def d06DedupEmbeddingLsh(spark: SparkSession, dir: String): DataFrame =
     d06DedupEmbeddingLsh(spark, dir, DedupPairs)
@@ -456,127 +310,46 @@ object Dedup {
 
   private def d06Pairs(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding"))
-    // DUP-DENSITY GATE — see d02. Band geometry (Lsh.scaled, shared by
-    // both paths) SCALES WITH THE CORPUS so per-bucket occupancy stays
-    // ~bounded (~64): the sf10 rehearsal showed fixed 8-bit bands going
-    // n²/256-quadratic at 200k vectors. Round 9: geometry sizes to the
-    // probe's EXACT row count, not the HLL distinct estimate — exact n
-    // is what the DuckDB oracle can recompute (COUNT(*)), and since
-    // n ≥ distinct the buckets are never NARROWER than distinct-based
-    // sizing chose, so the quadratic cliff cannot return (the trade is
-    // slightly lower borderline-τ recall on dup-heavy corpora). Both
-    // paths take the same count, so the chosen geometry — and
-    // therefore the output — stays path-independent (DupGateSpec).
-    // Exact/near-exact dups (the 100 TB bulk) collide at any geometry,
-    // and the d05 exact path stays the τ-complete baseline.
+    // DUP-DENSITY GATE — see d02. Band geometry (Lsh.scaled) SCALES WITH
+    // THE CORPUS so per-bucket occupancy stays ~bounded (~64): the sf10
+    // rehearsal showed fixed 8-bit bands going n²/256-quadratic at 200k
+    // vectors. Round 9: geometry sizes to the probe's EXACT row count,
+    // not the HLL distinct estimate — exact n is what the DuckDB oracle
+    // can recompute (COUNT(*)), and since n ≥ distinct the buckets are
+    // never NARROWER than distinct-based sizing chose, so the quadratic
+    // cliff cannot return (the trade is slightly lower borderline-τ
+    // recall on dup-heavy corpora). Both paths take the same count, so
+    // the chosen geometry — and therefore the output — stays
+    // path-independent (DupGateSpec). Exact/near-exact dups (the 100 TB
+    // bulk) collide at any geometry, and the d05 exact path stays the
+    // τ-complete baseline.
     val den = DupDensity.probe(e, ehOf)
-    val g = Lsh.scaled(den.rows)
-    if (den.collapseWorthIt) d06Collapsed(spark, dir, g)
-    else d06Direct(spark, dir, g)
+    DupDensity.pairs(e, "vec_id", ehOf, den.collapse)(
+      d06Kernel(Lsh.scaled(den.rows)))
+      .select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
   }
 
-  /** Direct per-vector path: one linear signature pass +
-    * hash-partitioned bucket joins on ids only; exact-cosine verify on
-    * survivors; no quadratic anywhere. */
-  private[graft] def d06Direct(spark: SparkSession, dir: String,
-      g: Lsh.BandGeometry): DataFrame = {
+  /** The d06 pair kernel over (gid, embedding) rows: sign-projection
+    * signatures, corpus-scaled banding, a candidate join on ids only and
+    * exact-cosine verify of the survivors; emits (ga, gb, cos) with
+    * cos ≥ 0.45. */
+  private[graft] def d06Kernel(g: Lsh.BandGeometry)(e: DataFrame,
+      before: (Column, Column) => Column): DataFrame = {
     import graft.functions.lsh_sign_bits
-    val e = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding"))
-    val bands = e
-      .select(col("vec_id"), lsh_sign_bits(col("embedding"), g.planes).as("sig"))
-      .select(col("vec_id"), posexplode(g.bucketArray(col("sig")))
-        .as(Seq("band", "bucket")))
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a"), col("b.vec_id").as("b"))
-      .dropDuplicates("a", "b")
-    cand
-      .join(e.select(col("vec_id").as("a"), col("embedding").as("ea")), Seq("a"))
-      .join(e.select(col("vec_id").as("b"), col("embedding").as("eb")), Seq("b"))
-      .select(col("a"), col("b"),
+    val emb = e.select(col("gid"), col("embedding"))
+    bandJoin(e
+      .select(col("gid"), lsh_sign_bits(col("embedding"), g.planes).as("sig"))
+      .select(col("gid"), posexplode(g.bucketArray(col("sig")))
+        .as(Seq("band", "bucket"))), before)
+      .select(col("a.gid").as("ga"), col("b.gid").as("gb"))
+      .dropDuplicates("ga", "gb")
+      .join(emb.select(col("gid").as("ga"), col("embedding").as("ea")),
+        Seq("ga"))
+      .join(emb.select(col("gid").as("gb"), col("embedding").as("eb")),
+        Seq("gb"))
+      .select(col("ga"), col("gb"),
         graft.functions.cosine_similarity(col("ea"), col("eb")).as("cos"))
       .filter(col("cos") >= 0.45)
-      .select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
-      .orderBy(col("a"), col("b"))
-  }
-
-  /** EXACT-DUP PRE-COLLAPSE path (d02/d03/d10's discipline, keyed on
-    * the embedding payload): verbatim vector copies share buckets and a
-    * cosine of exactly cos(rep, rep), so banding and verification run
-    * once per DISTINCT embedding; member pairs expand back afterwards. */
-  /** DISTINCT-EMBEDDING near-dup pairs — the shared heavy stage of
-    * [[d06Collapsed]] and [[d15EmbeddingAssign]]: sign-projection
-    * signatures, corpus-scaled banding, candidate join and exact-cosine
-    * verify all run once per distinct embedding payload hash. Emits
-    * (ha, hb, cos) with ha < hb in md5 order and cos ≥ 0.45. */
-  private[graft] def d06RepPairs(spark: SparkSession, dir: String,
-      g: Lsh.BandGeometry): DataFrame = {
-    import graft.functions.lsh_sign_bits
-    val e = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding"))
-    val reps = e.select(ehOf.as("eh"), col("embedding"))
-      .dropDuplicates("eh")
-    val bands = reps
-      .select(col("eh"), lsh_sign_bits(col("embedding"), g.planes).as("sig"))
-      .select(col("eh"), posexplode(g.bucketArray(col("sig")))
-        .as(Seq("band", "bucket")))
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.eh") < col("b.eh"))
-      .select(col("a.eh").as("ha"), col("b.eh").as("hb"))
-      .dropDuplicates("ha", "hb")
-    cand
-      .join(reps.select(col("eh").as("ha"), col("embedding").as("ea")),
-        Seq("ha"))
-      .join(reps.select(col("eh").as("hb"), col("embedding").as("eb")),
-        Seq("hb"))
-      .select(col("ha"), col("hb"),
-        graft.functions.cosine_similarity(col("ea"), col("eb")).as("cos"))
-      .filter(col("cos") >= 0.45)
-  }
-
-  private[graft] def d06Collapsed(spark: SparkSession, dir: String,
-      g: Lsh.BandGeometry): DataFrame = {
-    val e = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding"))
-    val members = e.select(col("vec_id"), ehOf.as("eh"))
-      .localCheckpoint(true)
-    val reps = e.select(ehOf.as("eh"), col("embedding"))
-      .dropDuplicates("eh")
-    val cross = d06RepPairs(spark, dir, g)
-      .join(members.select(col("eh").as("ha"), col("vec_id").as("ia")),
-        Seq("ha"))
-      .join(members.select(col("eh").as("hb"), col("vec_id").as("ib")),
-        Seq("hb"))
-      .select(least(col("ia"), col("ib")).as("a"),
-        greatest(col("ia"), col("ib")).as("b"), col("cos"))
-    // within-group pairs carry the rep's self-cosine AND pass the same
-    // τ filter the pairwise kernel applies — a degenerate (all-zero)
-    // embedding's self-cosine is 0.0 under the kernel's zero-norm guard
-    // and must be dropped here exactly as the direct path drops its
-    // verbatim pair (one row per rep, so the filter is free)
-    val selfCos = reps.select(col("eh"),
-      graft.functions.cosine_similarity(col("embedding"), col("embedding"))
-        .as("cos"))
-      .filter(col("cos") >= 0.45)
-    // chunk-balanced within-group expansion (d02's withinGroupPairs):
-    // the old eh-keyed self-join put a hot group's whole |g|² on one
-    // join key = one task; selfCos re-attaches by eh (≤1 row per rep,
-    // broadcast-sized)
-    // selfCos is ≤1 row per DISTINCT embedding — broadcast explicitly:
-    // its size ESTIMATE inherits the embedding-column lineage, so the
-    // planner otherwise sort-merges, which sorts the 10^9-row expanded
-    // side (measured 420 s at sf100 vs 25 s broadcast)
-    val within = withinGroupPairs(members, "eh", "vec_id")
-      .join(broadcast(selfCos), Seq("eh"))
-      .select(col("a"), col("b"), col("cos"))
-    // unsorted by the d02Collapsed argument: the comparator sorts, and
-    // a global orderBy's range sampling re-executes the whole lineage
-    cross.unionByName(within)
-      .select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
   }
 
   /** d09 — SemDeDup (Abbas et al. 2023): semantic dedup at corpus scale
@@ -610,7 +383,7 @@ object Dedup {
     // Gate SFs (n ≤ 2048) keep K=8, results unchanged.
     val den = DupDensity.probe(e, ehOf)
     val k = math.max(8L, math.min(1024L, den.rows / 256L)).toInt
-    if (den.collapseWorthIt) d09Collapsed(spark, dir, k)
+    if (den.collapse) d09Collapsed(spark, dir, k)
     else d09Direct(spark, dir, k)
   }
 
@@ -820,37 +593,39 @@ object Dedup {
     */
   def d10SubstringDedup(spark: SparkSession, dir: String): DataFrame = {
     // DUP-DENSITY GATE — see d02: the distinct-text collapse cut the
-    // sf1 10×-verbatim run 35 → 10.4 s but costs two extra joins a
-    // ~unique corpus shouldn't pay. Outputs bit-identical (DupGateSpec;
-    // also proven by the full d10 SQL oracle on both gate SFs).
+    // sf1 10×-verbatim run 35 → 10.4 s but costs an expansion join a
+    // ~unique corpus shouldn't pay. A doc's span map depends only on its
+    // TEXT and the corpus-wide duplicated-window set, so the window
+    // explode, dup marking and islands pass run once per class; the
+    // occurrence counts stay exact through the class sizes m (a window
+    // in a unique text that exists as 2 verbatim copies IS duplicated).
+    // Also proven by the full d10 SQL oracle on both gate SFs.
     val docs = Tables(spark, dir).documents
-    if (DupDensity.probe(docs, md5(col("text"))).collapseWorthIt)
-      d10Collapsed(spark, dir)
-    else d10Direct(spark, dir)
+    DupDensity.perClass(docs, DupDensity.textGate(docs),
+      spreadKernel = true)(d10Body) // one md5 per word window
   }
 
   private val d10W = 15
 
-  /** Direct per-doc path: window-hash explode straight off doc_id. */
-  private[graft] def d10Direct(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def d10Body(df: DataFrame): DataFrame = {
     val W = d10W
-    val ws = filter(split(col("text"), " "), w => length(w) > 0)
-    val docs = Tables.spreadNarrow(Tables(spark, dir).documents)
-      .select(col("doc_id"), ws.as("ws"))
-      .select(col("doc_id"), col("ws"), size(col("ws")).as("n_words"))
+    val docs = df
+      .select(col("gid"), col("m"),
+        filter(split(col("text"), " "), w => length(w) > 0).as("ws"))
+      .select(col("gid"), col("m"), col("ws"), size(col("ws")).as("n_words"))
       .filter(col("n_words") >= W)
-    val pos = docs.select(col("doc_id"), col("n_words"),
+    val pos = docs.select(col("gid"), col("m"), col("n_words"),
       explode(transform(sequence(lit(1), col("n_words") - (W - 1)),
         i => struct(i.as("p"),
           md5(concat_ws(" ", slice(col("ws"), i, lit(W)))).as("fp")))).as("w"))
-      .select(col("doc_id"), col("n_words"), col("w.p").as("p"),
+      .select(col("gid"), col("m"), col("n_words"), col("w.p").as("p"),
         col("w.fp").as("fp"))
-    val dupFp = pos.groupBy(col("fp")).agg(count(lit(1)).as("c"))
+    val dupFp = pos.groupBy(col("fp")).agg(sum(col("m")).as("c"))
       .filter(col("c") > 1).select(col("fp"))
     val spans = pos.join(dupFp, "fp")
-      .select(col("doc_id"), col("n_words"), col("p")).distinct()
+      .select(col("gid"), col("n_words"), col("p")).distinct()
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("p"))
+      .partitionBy(col("gid")).orderBy(col("p"))
     // equal-width spans sorted by start: a new island begins where the
     // gap to the previous start is >= W (previous span's end)
     val seg = spans
@@ -858,66 +633,14 @@ object Dedup {
         when(lag(col("p"), 1).over(w).isNull ||
           col("p") >= lag(col("p"), 1).over(w) + W, 1).otherwise(0))
       .withColumn("sid", sum(col("newseg")).over(w))
-    seg.groupBy(col("doc_id"), col("n_words"), col("sid"))
+    seg.groupBy(col("gid"), col("n_words"), col("sid"))
       .agg((max(col("p")) + W - min(col("p"))).as("run_len"))
-      .groupBy(col("doc_id"), col("n_words"))
+      .groupBy(col("gid"), col("n_words"))
       .agg(sum(col("run_len")).as("dup_words"),
         count(lit(1)).as("n_runs"))
-      .select(col("doc_id"), col("n_words"), col("dup_words"), col("n_runs"),
+      .select(col("gid"), col("n_words"), col("dup_words"), col("n_runs"),
         round(col("dup_words").cast("double") /
           col("n_words").cast("double"), 6).as("dup_frac"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** EXACT-DUP PRE-COLLAPSE path (d02/d03's discipline): a doc's span
-    * map depends only on its TEXT and the corpus-wide duplicated-window
-    * set, so the window explode, dup marking, and islands pass all run
-    * once per DISTINCT text. Corpus-wide occurrence counts stay exact
-    * via multiplicity weights (a window in a unique text that exists
-    * as 2 verbatim copies IS duplicated). */
-  private[graft] def d10Collapsed(spark: SparkSession, dir: String): DataFrame = {
-    val W = d10W
-    val ws = filter(split(col("text"), " "), w => length(w) > 0)
-    val members = Tables(spark, dir).documents
-      .select(col("doc_id"), md5(col("text")).as("th"))
-      .localCheckpoint(true)
-    val groupSize = members.groupBy(col("th")).agg(count(lit(1)).as("nm"))
-    val texts = Tables.spreadNarrow(Tables(spark, dir).documents)
-      .select(md5(col("text")).as("th"), col("text"))
-      .dropDuplicates("th")
-      .select(col("th"), ws.as("ws"))
-      .select(col("th"), col("ws"), size(col("ws")).as("n_words"))
-      .filter(col("n_words") >= W)
-    val pos = texts.select(col("th"), col("n_words"),
-      explode(transform(sequence(lit(1), col("n_words") - (W - 1)),
-        i => struct(i.as("p"),
-          md5(concat_ws(" ", slice(col("ws"), i, lit(W)))).as("fp")))).as("w"))
-      .select(col("th"), col("n_words"), col("w.p").as("p"),
-        col("w.fp").as("fp"))
-    val dupFp = pos.join(groupSize, Seq("th"))
-      .groupBy(col("fp")).agg(sum(col("nm")).as("c"))
-      .filter(col("c") > 1).select(col("fp"))
-    val spans = pos.join(dupFp, "fp")
-      .select(col("th"), col("n_words"), col("p")).distinct()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("th")).orderBy(col("p"))
-    // equal-width spans sorted by start: a new island begins where the
-    // gap to the previous start is >= W (previous span's end)
-    val seg = spans
-      .withColumn("newseg",
-        when(lag(col("p"), 1).over(w).isNull ||
-          col("p") >= lag(col("p"), 1).over(w) + W, 1).otherwise(0))
-      .withColumn("sid", sum(col("newseg")).over(w))
-    seg.groupBy(col("th"), col("n_words"), col("sid"))
-      .agg((max(col("p")) + W - min(col("p"))).as("run_len"))
-      .groupBy(col("th"), col("n_words"))
-      .agg(sum(col("run_len")).as("dup_words"),
-        count(lit(1)).as("n_runs"))
-      .join(members, Seq("th"))
-      .select(col("doc_id"), col("n_words"), col("dup_words"), col("n_runs"),
-        round(col("dup_words").cast("double") /
-          col("n_words").cast("double"), 6).as("dup_frac"))
-      .orderBy(col("doc_id"))
   }
 
   /** d11 — INCREMENTAL dedup of a new crawl batch against the historical
@@ -978,34 +701,16 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** (doc_id, band, bucket, mh) banding rows — the d02 construction,
-    * shared with d12's persisted index. DUP-DENSITY GATED like d02:
-    * on a high-dup input signatures compute once per DISTINCT text and
-    * expand back to doc rows; on a ~unique input they compute straight
-    * off doc_id. The emitted index is row-for-row identical either way
-    * (and d12's in-query self-oracle re-proves it every run). */
-  private def bandRows(docs: DataFrame): DataFrame =
-    if (DupDensity.probe(docs, md5(col("text"))).collapseWorthIt)
-      bandRowsCollapsed(docs)
-    else bandRowsDirect(docs)
-
-  private[graft] def bandRowsDirect(docs: DataFrame): DataFrame =
-    portableSig(docs, col("doc_id"))
-      .withColumnRenamed("_id", "doc_id")
-      .select(col("doc_id"), col("mh"),
-        posexplode(Lsh.minhashBuckets(col("mh"))).as(Seq("band", "bucket")))
-      .select(col("doc_id"), col("mh"), col("band"), col("bucket"))
-
-  private[graft] def bandRowsCollapsed(docs: DataFrame): DataFrame = {
-    val members = docs.select(col("doc_id"), md5(col("text")).as("th"))
-    val sigs = portableSig(
-      docs.select(md5(col("text")).as("th"), col("text")).dropDuplicates("th"),
-      col("th")).withColumnRenamed("_id", "th")
-    sigs.select(col("th"), col("mh"),
-      posexplode(Lsh.minhashBuckets(col("mh"))).as(Seq("band", "bucket")))
-      .join(members, Seq("th"))
-      .select(col("doc_id"), col("mh"), col("band"), col("bucket"))
-  }
+  /** (doc_id, mh, band, bucket) banding rows — the d02 construction,
+    * shared with d12's persisted index, per document or per distinct
+    * text (`collapsed`, from the caller's dup gate). The emitted index
+    * is row-for-row identical either way (and d12's in-query
+    * self-oracle re-proves it every run). */
+  private[graft] def bandRows(docs: DataFrame, collapsed: Boolean)
+      : DataFrame =
+    DupDensity.perClass(docs, collapsed, spreadKernel = true)(g =>
+      portableSig(g).select(col("gid"), col("mh"),
+        posexplode(Lsh.minhashBuckets(col("mh"))).as(Seq("band", "bucket"))))
 
   /** Minhash-estimated jaccard between two stored 16-hash signatures —
     * what an index lookup verifies with, since the index keeps sigs, not
@@ -1032,7 +737,8 @@ object Dedup {
     val hist = docs.filter(col("doc_id") < 400)
     val batch = docs.filter(col("doc_id") >= 400)
     // one-time index build (amortized across every future batch)
-    bandRows(hist).write.mode("overwrite").parquet(s"$root/index")
+    val histGate = DupDensity.textGate(hist)
+    bandRows(hist, histGate).write.mode("overwrite").parquet(s"$root/index")
     val index = spark.read.parquet(s"$root/index")
     // materialize once: the batch banding feeds BOTH pair paths, and each
     // path is executed three more times below (exceptAll in both
@@ -1040,7 +746,8 @@ object Dedup {
     // re-minhashes 4x and history re-minhashes 3x (measured 3.9 s at
     // sf0.1, ~1.6 s checkpointed). Batch bands are batch-shaped (the
     // whole point of the index), so the checkpoint is bounded.
-    val batchBands = bandRows(batch).localCheckpoint(true)
+    val batchBands =
+      bandRows(batch, DupDensity.textGate(batch)).localCheckpoint(true)
     def pairsOf(histBands: DataFrame, bb: DataFrame): DataFrame =
       histBands.as("h")
         .join(broadcast(bb.as("n")),
@@ -1064,7 +771,8 @@ object Dedup {
     // must produce the identical pair set. The scratch pair set is
     // candidate-scale — checkpoint it so the two exceptAll probes don't
     // re-run the from-scratch banding twice
-    val scratch = pairsOf(bandRows(hist), batchBands).localCheckpoint(true)
+    val scratch =
+      pairsOf(bandRows(hist, histGate), batchBands).localCheckpoint(true)
     require(viaIndex.exceptAll(scratch).isEmpty &&
       scratch.exceptAll(viaIndex).isEmpty,
       "index path diverged from the from-scratch path")
@@ -1202,7 +910,7 @@ object Dedup {
     * neighboring distinct-text group), so canonical is a GROUP-level
     * value: min(group min, min over neighbor groups' mins). Everything
     * heavy — signatures, banding, candidate join, jaccard verify —
-    * runs once per distinct text ([[d02RepPairs]]); canonicals then
+    * runs once per distinct text ([[d02Kernel]]); canonicals then
     * assign with two group-level aggregations and one per-doc
     * equi-join. No doc-level pair ever materializes: at sf100 the
     * replicated rehearsal corpus makes d02 emit ~2.5×10⁹ pairs while
@@ -1212,7 +920,9 @@ object Dedup {
       .select(col("doc_id"), md5(col("text")).as("th"))
       .localCheckpoint(true)
     val gstat = members.groupBy(col("th")).agg(min(col("doc_id")).as("gmin"))
-    val rp = d02RepPairs(spark, dir).select(col("ta"), col("tb"))
+    val rp = d02Kernel(Tables(spark, dir).documents
+      .select(md5(col("text")).as("gid"), col("text")).dropDuplicates("gid"),
+      _ < _).select(col("ga").as("ta"), col("gb").as("tb"))
     // min neighbor-group doc_id per group, folding both pair directions
     val nbr = rp
       .join(gstat.select(col("th").as("tb"), col("gmin").as("nm")), Seq("tb"))
@@ -1248,12 +958,12 @@ object Dedup {
     val members = e.select(col("vec_id"), ehOf.as("eh"))
       .localCheckpoint(true)
     val gstat = members.groupBy(col("eh")).agg(min(col("vec_id")).as("gmin"))
-    val selfOk = e.select(ehOf.as("eh"), col("embedding"))
-      .dropDuplicates("eh")
-      .select(col("eh"),
-        (graft.functions.cosine_similarity(col("embedding"), col("embedding"))
-          >= 0.45).as("ok"))
-    val rp = d06RepPairs(spark, dir, g).select(col("ha"), col("hb"))
+    val reps = e.select(ehOf.as("gid"), col("embedding")).dropDuplicates("gid")
+    val selfOk = reps.select(col("gid").as("eh"),
+      (graft.functions.cosine_similarity(col("embedding"), col("embedding"))
+        >= 0.45).as("ok"))
+    val rp = d06Kernel(g)(reps, _ < _)
+      .select(col("ga").as("ha"), col("gb").as("hb"))
     val nbr = rp
       .join(gstat.select(col("eh").as("hb"), col("gmin").as("nm")), Seq("hb"))
       .select(col("ha").as("eh"), col("nm"))

@@ -357,62 +357,16 @@ object Multimodal {
     // expand member pairs with equi-joins. The OUTPUT stays
     // pair-quadratic in multiplicity — inherent to pair semantics (m04
     // is the collapse-output form).
-    if (DupDensity.probe(hashed, col("ahash")).collapseWorthIt)
-      m07Collapsed(hashed)
-    else m07Direct(hashed)
+    DupDensity.pairs(hashed, "doc_id", col("ahash"),
+      DupDensity.probe(hashed, col("ahash")).collapse)(m07Kernel)
   }
+
+  private[graft] def m07Kernel =
+    Dedup.hammingKernel(col("ahash"), phashBands) _
 
   /** d03's 4×16-bit pigeonhole over the 64-bit aHash: hamming ≤ 3 ⇒ at
     * least one band identical — correctness-pinned, never scales. */
   private val phashBands = Lsh.pigeonhole(64, maxHamming = 3)
-
-  private[graft] def m07Direct(hashed: DataFrame): DataFrame = {
-    val bands = hashed.select(col("doc_id"), col("ahash"),
-      posexplode(phashBands.bucketArray(col("ahash")))
-        .as(Seq("band", "bucket")))
-    bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a"), col("b.doc_id").as("b"),
-        bit_count(col("a.ahash").bitwiseXOR(col("b.ahash"))).as("hamming"))
-      .dropDuplicates("a", "b")
-      .filter(col("hamming") <= 3)
-      .orderBy(col("a"), col("b"))
-  }
-
-  private[graft] def m07Collapsed(hashed: DataFrame): DataFrame = {
-    val sigs = hashed.select(col("ahash")).distinct()
-    val bands = sigs.select(col("ahash"),
-      posexplode(phashBands.bucketArray(col("ahash")))
-        .as(Seq("band", "bucket")))
-    val sigPairs = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.ahash") < col("b.ahash"))
-      .select(col("a.ahash").as("ha"), col("b.ahash").as("hb"),
-        bit_count(col("a.ahash").bitwiseXOR(col("b.ahash"))).as("hamming"))
-      .dropDuplicates("ha", "hb")
-      .filter(col("hamming") <= 3)
-    // cross-group expansion: every member pair of a near-dup hash pair
-    val cross = sigPairs
-      .join(hashed.select(col("ahash").as("ha"), col("doc_id").as("ia")),
-        Seq("ha"))
-      .join(hashed.select(col("ahash").as("hb"), col("doc_id").as("ib")),
-        Seq("hb"))
-      .select(least(col("ia"), col("ib")).as("a"),
-        greatest(col("ia"), col("ib")).as("b"), col("hamming"))
-    // within-group pairs: identical hashes, hamming 0 — chunk-balanced
-    // (Dedup.withinGroupPairs) so one hot perceptual hash can't
-    // single-task its |g|² member pairs
-    val within = Dedup.withinGroupPairs(hashed, "ahash", "doc_id")
-      .select(col("a"), col("b"), lit(0).cast("integer").as("hamming"))
-    // unsorted (the gate comparator sorts): a sort of the quadratic
-    // pair mass is pure overhead — see Dedup.d02Collapsed
-    cross.unionByName(within)
-  }
 
   /** Per-doc audio stats from the stub "decoder": 32-sample windowed
     * energy (sum of squared amplitudes around the space baseline — a

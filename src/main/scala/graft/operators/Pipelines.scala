@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -282,69 +282,54 @@ object Pipelines {
     * batch transform — p11 applies them to the whole corpus, st12 applies
     * the SAME function to each streaming micro-batch. */
   private[graft] def evalGramsOf(docs: DataFrame,
-      collapsed: Boolean = false): DataFrame = {
+      collapsed: Boolean): DataFrame = {
     import graft.operators.{TextAnalysis => TA}
-    val ev = docs.filter(pmod(col("doc_id"), lit(50)) === 0)
-    // ws is materialized as a column BEFORE grams13 on both branches: an
-    // expression referenced inside the transform lambda re-evaluates per
-    // element, so an inline split() grams in O(n²) per doc
-    val src =
-      if (collapsed)
-        // grams are a function of (text, planted) — gram each distinct
-        // class once instead of every verbatim copy
-        ev.select(col("text"),
-            (pmod(col("doc_id"), lit(37)) === 0).as("pl"))
-          .dropDuplicates("pl", "text")
-          .select(split(TA.augmentedTextOf(col("text"), col("pl")), " ")
-            .as("ws"))
-          .select(explode(TA.grams13(col("ws"))).as("gram"))
-      else
-        ev.select(split(TA.augmentedText, " ").as("ws"))
-          .select(explode(TA.grams13(col("ws"))).as("gram"))
-    src.distinct()
+    // ws is materialized as a column BEFORE grams13: an expression
+    // referenced inside the transform lambda re-evaluates per element,
+    // so an inline split() grams in O(n²) per doc
+    DupDensity.classes(docs.filter(pmod(col("doc_id"), lit(50)) === 0),
+        collapsed, planted)
+      .select(split(TA.augmentedTextOf(col("text"), col("pl")), " ")
+        .as("ws"))
+      .select(explode(TA.grams13(col("ws"))).as("gram"))
+      .distinct()
   }
 
-  /** `collapsed` switches the contamination stage to the exact-dup
-    * pre-collapse (gram once per distinct (md5(text), planted) class,
-    * anti-join members on the class key) — chosen by the caller's
-    * dup-density probe. Both paths are output-identical (the
-    * contamination decision is a class function; DupGateSpec pins it).
-    * p11 probes its corpus directly; st12 probes its STATIC table once
-    * at query build and reuses the decision every micro-batch, so
-    * streaming never pays a per-trigger probe job. */
+  /** The contamination planting depends on doc_id only through this
+    * flag, so (text, planted) is the collapse class of the gram stage. */
+  private val planted: Seq[(String, Column)] =
+    Seq("pl" -> (pmod(col("doc_id"), lit(37)) === 0))
+
+  /** `collapsed` runs the quality and contamination stages once per
+    * distinct (text, planted, lang) class instead of once per document —
+    * chosen by the caller's dup-density probe. Both paths are
+    * output-identical: quality and contamination are functions of the
+    * text and the planted flag, and lang rides along as a class flag
+    * (DupGateSpec pins it). p11 probes its corpus directly; st12 probes
+    * its STATIC table once at query build and reuses the decision every
+    * micro-batch, so streaming never pays a per-trigger probe job. */
   private[graft] def curateBatch(batch: DataFrame, evalGrams: DataFrame,
-      collapsed: Boolean = false): DataFrame = {
+      collapsed: Boolean): DataFrame = {
     import graft.operators.{TextAnalysis => TA}
-    val filtered = batch
+    val sampled = batch
       .filter(pmod(col("doc_id"), lit(50)) =!= 0) // eval docs never train
-      .select(col("doc_id"), col("text"), col("lang"),
-        TA.sampleBucket.as("bucket"),
-        TA.qualityOf(col("text")).as("quality"))
-      .filter(col("bucket") <= TA.sampleThreshold &&
-        col("quality") >= 0.5)
-    if (collapsed) {
-      val keyed = filtered
-        .withColumn("th", md5(col("text")))
-        .withColumn("pl", pmod(col("doc_id"), lit(37)) === 0)
-      val contamClasses = keyed.select(col("th"), col("pl"), col("text"))
-        .dropDuplicates("th", "pl")
-        .select(col("th"), col("pl"),
+      .filter(TA.sampleBucket <= TA.sampleThreshold)
+    val flags = planted :+ ("lang" -> col("lang"))
+    DupDensity.perClass(sampled, collapsed, flags) { g =>
+      val kept = g
+        .select(col("gid"), col("text"), col("lang"), col("pl"),
+          TA.qualityOf(col("text")).as("quality"))
+        .filter(col("quality") >= 0.5)
+      val contaminated = kept
+        .select(col("gid"),
           split(TA.augmentedTextOf(col("text"), col("pl")), " ").as("ws"))
-        .select(col("th"), col("pl"),
-          explode(TA.grams13(col("ws"))).as("gram"))
+        .select(col("gid"), explode(TA.grams13(col("ws"))).as("gram"))
         .join(evalGrams, Seq("gram"))
-        .select(col("th"), col("pl")).distinct()
-      keyed.join(contamClasses, Seq("th", "pl"), "left_anti")
-        .select(col("doc_id"), col("text"), col("lang"),
-          col("bucket"), col("quality"))
-    } else {
-      val contaminated = filtered
-        .select(col("doc_id"), split(TA.augmentedText, " ").as("ws"))
-        .select(col("doc_id"), explode(TA.grams13(col("ws"))).as("gram"))
-        .join(evalGrams, Seq("gram"))
-        .select(col("doc_id")).distinct()
-      filtered.join(contaminated, Seq("doc_id"), "left_anti")
-    }
+        .select(col("gid")).distinct()
+      kept.join(contaminated, Seq("gid"), "left_anti")
+        .select(col("gid"), col("text"), col("lang"), col("quality"))
+    }.select(col("doc_id"), col("text"), col("lang"),
+      TA.sampleBucket.as("bucket"), col("quality"))
   }
 
   def p11CurationPipeline(spark: SparkSession, dir: String): DataFrame = {
@@ -352,8 +337,7 @@ object Pipelines {
     val docs = Tables(spark, dir).documents
     // one density probe chooses the contamination path for BOTH the eval
     // gram build and the batch strip (the d-family gate pattern)
-    val collapse =
-      graft.operators.DupDensity.probe(docs, md5(col("text"))).collapseWorthIt
+    val collapse = DupDensity.textGate(docs)
     val clean = curateBatch(docs, evalGramsOf(docs, collapse), collapse)
     val w = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
     clean
@@ -488,9 +472,12 @@ object Pipelines {
       // submit a few concurrently so the next chunk's tasks back-fill
       // executor slots freed by the current chunk's write tail instead
       // of leaving the cluster idle between driver-paced jobs (guide
-      // §2.6 — overlap independent jobs; job groups are thread-local so
-      // the UI stays attributable). Bounded at 4 in flight: enough to
-      // hide the tail, not enough to contend for executors.
+      // §2.6 — overlap independent jobs). Bounded at 4 in flight: enough
+      // to hide the tail, not enough to contend for executors. Each chunk
+      // runs in its own job group, so a failed chunk cancels the others
+      // instead of leaving them writing into whatever runs next.
+      val sc = spark.sparkContext
+      def group(lo: Long) = s"p12 $root chunk_$lo"
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(4, todo.size.max(1)))
       val processed = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -498,14 +485,37 @@ object Pipelines {
         todo.map { lo =>
           pool.submit(new Runnable {
             override def run(): Unit = {
-              ev.filter(col("event_id") >= lo && col("event_id") < lo + chunk)
-                .withColumn("chunk", lit(lo))
-                .write.mode("overwrite").parquet(s"$root/chunk_$lo/data")
-              fs.create(marker(lo), true).close()
-              processed.incrementAndGet(): Unit
+              sc.setJobGroup(group(lo), s"p12 backfill chunk $lo",
+                interruptOnCancel = true)
+              try {
+                ev.filter(col("event_id") >= lo && col("event_id") < lo + chunk)
+                  .withColumn("chunk", lit(lo))
+                  .write.mode("overwrite").parquet(s"$root/chunk_$lo/data")
+                fs.create(marker(lo), true).close()
+                processed.incrementAndGet(): Unit
+              } finally sc.clearJobGroup()
             }
           })
         }.foreach(_.get())
+      } catch {
+        case e: Throwable =>
+          // stop everything in flight before rethrowing: queued chunks
+          // never start, running ones are interrupted and their jobs
+          // cancelled — also a job submitted just as its thread was
+          // interrupted (the second cancel) — and the query returns only
+          // once the status tracker shows none of its jobs running
+          pool.shutdownNow()
+          def cancel(): Unit = todo.foreach(lo => sc.cancelJobGroup(group(lo)))
+          cancel()
+          pool.awaitTermination(5, java.util.concurrent.TimeUnit.MINUTES)
+          cancel()
+          val st = sc.statusTracker
+          def running = todo.exists(lo => st.getJobIdsForGroup(group(lo))
+            .exists(id => st.getJobInfo(id).exists(
+              _.status == org.apache.spark.JobExecutionStatus.RUNNING)))
+          val deadline = System.nanoTime() + 60L * 1000000000L
+          while (running && System.nanoTime() < deadline) Thread.sleep(10)
+          throw e
       } finally pool.shutdown()
       processed.get()
     }

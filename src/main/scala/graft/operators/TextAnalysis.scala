@@ -30,75 +30,15 @@ object TextAnalysis {
 
   private def words(c: Column): Column = split(lower(c), " ")
 
-  /** The t-family dup-density probe (the d-family gate applied to the
-    * row-local text operators): collapse per-doc text work to distinct
-    * payloads only when verbatim copies dominate the corpus. */
-  private[graft] def textDupGate(spark: SparkSession, dir: String): Boolean =
-    DupDensity.probe(Tables(spark, dir).documents, md5(col("text")))
-      .collapseWorthIt
-
-  /** Density-gated distinct-payload evaluation for operators whose
-    * output depends on a doc only through (text, flags(doc_id)).
-    *
-    * `body` transforms a frame of (gid, text, flag...) rows into
-    * (gid, out...) rows — the op's whole per-document computation, keyed
-    * by an opaque group id instead of doc_id and WITHOUT the final sort.
-    * Direct path: gid = doc_id, one body run per doc — the right plan on
-    * ~unique corpora (no payload dedup, no expansion join; row-local ops
-    * stay shuffle-free). Collapsed path: gid = md5(text)+flags, the body
-    * runs once per DISTINCT class and members expand back with one
-    * equi-join — on a high-dup crawl corpus every downstream token/gram/
-    * regex kernel and every body-internal shuffle shrinks by the copy
-    * factor. Both paths emit identical (doc_id, out...) rows (the body
-    * output is a class function by the flags contract; DupGateSpec pins
-    * equality per op).
-    */
-  private[graft] def perTextPath(spark: SparkSession, dir: String,
-      collapsed: Boolean, flags: Seq[(String, Column)] = Nil,
-      spreadKernel: Boolean = false)(
+  /** The t-family dup gate (the d-family probe applied to the text
+    * operators): collapse per-doc text work to distinct payloads only
+    * when verbatim copies dominate the corpus. */
+  private def gated(spark: SparkSession, dir: String,
+      flags: Seq[(String, Column)] = Nil, spreadKernel: Boolean = false)(
       body: DataFrame => DataFrame): DataFrame = {
-    // spreadKernel: a single-row-group gate file scans as ONE task, so a
-    // body with a genuinely heavy per-row kernel (t08's regex battery,
-    // t13's classifier features) asks for a pre-spread
-    // (Tables.spreadNarrow — a no-op on sharded corpora). Measured and
-    // NOT defaulted: for light bodies (t01/t02/t19) and explode→groupBy
-    // shapes (t06) the extra exchange costs more than it parallelizes.
-    val docs0 = Tables(spark, dir).documents
-    val docs = if (spreadKernel) Tables.spreadNarrow(docs0) else docs0
-    val withFlags = docs.select(
-      (col("doc_id") +: col("text") +:
-        flags.map { case (n, c) => c.as(n) }): _*)
-    if (collapsed) {
-      // md5 is fixed-width hex, so appending the flag renderings cannot
-      // collide across classes. NULL text coalesces to a fixed 6-char
-      // class key (shorter than any md5 — collision-free): without it
-      // the null gid fails the inner expansion join and the collapsed
-      // path silently DROPS rows the direct path keeps (round-9 advice;
-      // DupGateSpec now carries a null-text fixture row).
-      val gidCol = concat(
-        (coalesce(md5(col("text")), lit("~null~")) +:
-          flags.map(f => col(f._1).cast("string"))): _*)
-      val mem = withFlags.select(col("doc_id"), gidCol.as("gid"))
-      val rep = withFlags.select(
-        (gidCol.as("gid") +: col("text") +: flags.map(f => col(f._1))): _*)
-        .dropDuplicates("gid")
-      val classOut = body(rep)
-      val outCols = classOut.columns.filter(_ != "gid").map(col)
-      // PART-sorted output, not a global orderBy: the output is
-      // document-scale (every doc, 50M rows at sf10), and a global sort's
-      // RangePartitioner sampling job re-executes the whole expansion
-      // join + body lineage once just to pick bounds — measured 2× the
-      // query on t08's regex body. The correctness comparator sorts rows
-      // itself; what ships at 100 TB is the part-sorted table.
-      mem.join(classOut, Seq("gid"))
-        .select((col("doc_id") +: outCols).toIndexedSeq: _*)
-        .sortWithinPartitions(col("doc_id"))
-    } else {
-      val out = body(withFlags.withColumn("gid", col("doc_id")))
-      val outCols = out.columns.filter(_ != "gid").map(col)
-      out.select((col("gid").as("doc_id") +: outCols).toIndexedSeq: _*)
-        .sortWithinPartitions(col("doc_id"))
-    }
+    val docs = Tables(spark, dir).documents
+    DupDensity.perClass(docs, DupDensity.textGate(docs), flags,
+      spreadKernel)(body)
   }
 
   private def stopHits(ws: Column, lang: String): Column = {
@@ -113,7 +53,7 @@ object TextAnalysis {
     * real en/de/es/fr sentences.
     */
   def t01LangId(spark: SparkSession, dir: String): DataFrame =
-    perTextPath(spark, dir, textDupGate(spark, dir))(t01Body)
+    gated(spark, dir)(t01Body)
 
   private[graft] def t01Body(df: DataFrame): DataFrame = {
     val ws = words(col("text"))
@@ -133,7 +73,7 @@ object TextAnalysis {
     * single-rounded doubles so both engines agree bitwise.
     */
   def t02QualityScore(spark: SparkSession, dir: String): DataFrame =
-    perTextPath(spark, dir, textDupGate(spark, dir))(t02Body)
+    gated(spark, dir)(t02Body)
 
   private[graft] def t02Body(df: DataFrame): DataFrame = {
     val ws = words(col("text"))
@@ -163,7 +103,8 @@ object TextAnalysis {
   // gate is a dup-mass probe, not a body-cost model — ops whose per-row
   // kernel is trivial opt out statically.
   def t03TokenCount(spark: SparkSession, dir: String): DataFrame =
-    perTextPath(spark, dir, collapsed = false)(t03Body)
+    DupDensity.perClass(Tables(spark, dir).documents, collapsed = false)(
+      t03Body)
 
   private[graft] def t03Body(df: DataFrame): DataFrame =
     df
@@ -180,45 +121,21 @@ object TextAnalysis {
     * min/max sampling, short-doc fallback); the spec additionally pins
     * shift-invariance and mutation sensitivity.
     */
-  def t04Fingerprint(spark: SparkSession, dir: String): DataFrame = {
-    // DUP-DENSITY GATE (see Dedup.d02): the distinct-text collapse is a
-    // 10× cut of the dominant md5-per-shingle work on a 10×-verbatim
-    // corpus, but pure join overhead on a ~unique one. Output is
-    // byte-identical on both paths (the fingerprint is a pure function
-    // of the text; DupGateSpec + the full t04 oracle prove it).
-    val docs = Tables(spark, dir).documents
-    if (DupDensity.probe(docs, md5(col("text"))).collapseWorthIt)
-      t04Collapsed(spark, dir)
-    else t04Direct(spark, dir)
-  }
+  // DUP-DENSITY GATE (see Dedup.d02): the distinct-text collapse is a
+  // 10× cut of the dominant md5-per-shingle work on a 10×-verbatim
+  // corpus, but pure join overhead on a ~unique one. The fingerprint is
+  // a pure function of the text, so both paths agree (DupGateSpec + the
+  // full t04 oracle prove it).
+  def t04Fingerprint(spark: SparkSession, dir: String): DataFrame =
+    gated(spark, dir, spreadKernel = true)(t04Body) // md5 per shingle
 
-  private[graft] def t04Direct(spark: SparkSession, dir: String): DataFrame =
-    Tables.spreadNarrow(Tables(spark, dir).documents)
-      .select(col("doc_id"), col("text"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"),
+  private[graft] def t04Body(df: DataFrame): DataFrame =
+    df.select(col("gid"), col("text"), split(col("text"), " ").as("ws"))
+      .select(col("gid"),
         Shingles.hashes(col("ws"), col("text"), 4, Shingles.md5Hash60)
           .as("sh"))
-      .select(col("doc_id"), array_min(col("sh")).as("fp_min"),
+      .select(col("gid"), array_min(col("sh")).as("fp_min"),
         array_max(col("sh")).as("fp_max"), size(col("sh")).as("n_shingles"))
-      .orderBy(col("doc_id"))
-
-  private[graft] def t04Collapsed(spark: SparkSession, dir: String): DataFrame = {
-    val members = Tables(spark, dir).documents
-      .select(col("doc_id"), md5(col("text")).as("th"))
-    Tables.spreadNarrow(Tables(spark, dir).documents)
-      .select(md5(col("text")).as("th"), col("text"))
-      .dropDuplicates("th")
-      .select(col("th"), col("text"), split(col("text"), " ").as("ws"))
-      .select(col("th"),
-        Shingles.hashes(col("ws"), col("text"), 4, Shingles.md5Hash60)
-          .as("sh"))
-      .select(col("th"), array_min(col("sh")).as("fp_min"),
-        array_max(col("sh")).as("fp_max"), size(col("sh")).as("n_shingles"))
-      .join(members, Seq("th"))
-      .select(col("doc_id"), col("fp_min"), col("fp_max"),
-        col("n_shingles"))
-      .orderBy(col("doc_id"))
-  }
 
   /** t05 — corpus-level statistics via mergeable sketches: HLL++ distinct
     * counts and quantile summaries per source. This is how a 100 TB corpus
@@ -285,7 +202,7 @@ object TextAnalysis {
     }
 
   def t06SegmentDedup(spark: SparkSession, dir: String): DataFrame =
-    perTextPath(spark, dir, textDupGate(spark, dir))(t06Body)
+    gated(spark, dir)(t06Body)
 
   private[graft] def t06Body(df: DataFrame): DataFrame = {
     val ws = col("ws")
@@ -314,7 +231,7 @@ object TextAnalysis {
     * double divisions mirrored verbatim in the DuckDB oracle.
     */
   def t07RepetitionFilter(spark: SparkSession, dir: String): DataFrame =
-    perTextPath(spark, dir, textDupGate(spark, dir))(t07Body)
+    gated(spark, dir)(t07Body)
 
   private[graft] def t07Body(df: DataFrame): DataFrame = {
     val base = df.select(col("gid"), split(col("text"), " ").as("ws"))
@@ -362,11 +279,8 @@ object TextAnalysis {
     // 3 replacements run once per DISTINCT text on a dup-heavy corpus.
     // The oracle still computes over the full augmented string —
     // passing it proves the decomposition exact.
-    val docs = Tables(spark, dir).documents
-    perTextPath(spark, dir,
-      collapsed = DupDensity.probe(docs, md5(col("text"))).collapseWorthIt,
-      spreadKernel = true)( // three regex counts + three rewrites per row
-      t08Body)
+    // three regex counts + three rewrites per row: spread the scan
+    gated(spark, dir, spreadKernel = true)(t08Body)
   }
 
   private[graft] def t08Body(df: DataFrame): DataFrame = {
@@ -440,76 +354,35 @@ object TextAnalysis {
       .otherwise(array().cast("array<string>"))
   }
 
-  def t10Contamination(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(spark, dir).documents
-    if (DupDensity.probe(docs, md5(col("text"))).collapseWorthIt)
-      t10Collapsed(spark, dir)
-    else t10Direct(spark, dir)
-  }
+  /** The gram stage (split → 13-gram window → explode → eval join →
+    * count) depends on a doc only through (text, planted, eval), so on a
+    * high-dup corpus it runs once per DISTINCT class and the per-class
+    * count expands back to the members — on the 100×-verbatim sf10
+    * rehearsal that cuts the gram shuffle (13-word strings, the fat rows
+    * of this plan) by the copy factor. Eval docs are their own classes,
+    * so the eval and corpus sides never gram the same row twice. */
+  def t10Contamination(spark: SparkSession, dir: String): DataFrame =
+    gated(spark, dir, t10Flags, spreadKernel = true)(t10Body)
 
-  /** Direct per-doc path — right on ~unique corpora: no payload dedup,
-    * every doc grams itself. */
-  private[graft] def t10Direct(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.spreadNarrow(Tables(spark, dir).documents)
-      .select(col("doc_id"), split(augmentedText, " ").as("ws"))
-    val grams = grams13(col("ws"))
-    val evalGrams = base.filter(pmod(col("doc_id"), lit(50)) === 0)
-      .select(explode(grams).as("gram")).distinct()
-    val corpusGrams = base.filter(pmod(col("doc_id"), lit(50)) =!= 0)
-      .select(col("doc_id"), explode(grams).as("gram"))
-    corpusGrams.join(evalGrams, Seq("gram"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_contaminated_grams"))
-      .orderBy(col("doc_id"))
-  }
+  private[graft] val t10Flags: Seq[(String, Column)] = Seq(
+    "pl" -> (pmod(col("doc_id"), lit(37)) === 0),
+    "ev" -> (pmod(col("doc_id"), lit(50)) === 0))
 
-  /** EXACT-DUP PRE-COLLAPSE path — right on high-dup corpora: the gram
-    * stage (split → 13-gram window → explode → eval join → count) depends
-    * on a doc only through (text, planted-flag), so it runs once per
-    * DISTINCT (md5(text), planted) class and the per-class contaminated
-    * count expands back to members with one equi-join. On the 100×-
-    * verbatim sf10 rehearsal this cuts the gram shuffle (13-word strings,
-    * the fat rows of this plan) by the copy factor; output is identical
-    * because the count is a class function (DupGateSpec pins both paths
-    * equal on dup-heavy and unique corpora).
-    */
-  private[graft] def t10Collapsed(spark: SparkSession, dir: String): DataFrame = {
-    val mem = Tables(spark, dir).documents
-      .select(col("doc_id"), md5(col("text")).as("th"),
-        (pmod(col("doc_id"), lit(37)) === 0).as("pl"))
-    val rep = Tables.spreadNarrow(Tables(spark, dir).documents)
-      .select(md5(col("text")).as("th"),
-        (pmod(col("doc_id"), lit(37)) === 0).as("pl"), col("text"))
-      .dropDuplicates("th", "pl")
+  private[graft] def t10Body(df: DataFrame): DataFrame = {
     // ws MUST be materialized before grams13: an expression referenced
     // inside the transform lambda re-evaluates per element — an inline
     // split() makes gramming O(n²) per doc (measured 8 s vs 0.3 s on
     // 6.3k distinct texts)
-    // computed ONCE and reused by both consumers (eval grams + class
-    // counts): without the checkpoint each consumer re-runs the whole
-    // scan→md5→dedup→gram chain, and that fixed cost — not the gram
-    // arithmetic — dominated the collapsed path (measured ~2x)
-    val repGrams = rep
-      .select(col("th"), col("pl"),
-        split(augmentedTextOf(col("text"), col("pl")), " ").as("ws"))
-      .select(col("th"), col("pl"), grams13(col("ws")).as("g"))
-      .localCheckpoint(true)
-    // eval membership is doc_id-based, so the eval CLASS set comes from
-    // the member table (cheap: ids+hashes only), then grams come from the
-    // class representatives — eval texts are never re-grammed per copy
-    val evalClasses = mem.filter(pmod(col("doc_id"), lit(50)) === 0)
-      .select(col("th"), col("pl")).dropDuplicates("th", "pl")
-    val evalGrams = repGrams.join(evalClasses, Seq("th", "pl"))
-      .select(explode(col("g")).as("gram")).distinct()
-    val classCounts = repGrams
-      .select(col("th"), col("pl"), explode(col("g")).as("gram"))
+    val base = df.select(col("gid"), col("ev"),
+      split(augmentedTextOf(col("text"), col("pl")), " ").as("ws"))
+    val grams = grams13(col("ws"))
+    val evalGrams = base.filter(col("ev"))
+      .select(explode(grams).as("gram")).distinct()
+    base.filter(!col("ev"))
+      .select(col("gid"), explode(grams).as("gram"))
       .join(evalGrams, Seq("gram"))
-      .groupBy(col("th"), col("pl"))
+      .groupBy(col("gid"))
       .agg(count(lit(1)).as("n_contaminated_grams"))
-    mem.filter(pmod(col("doc_id"), lit(50)) =!= 0)
-      .join(classCounts, Seq("th", "pl"))
-      .select(col("doc_id"), col("n_contaminated_grams"))
-      .orderBy(col("doc_id"))
   }
 
   /** 20 words → 8 shared full 13-grams per planted pair; boundary grams
@@ -562,8 +435,7 @@ object TextAnalysis {
     * costs one corpus pass regardless of scale.
     */
   def t13QualityClassifier(spark: SparkSession, dir: String): DataFrame =
-    perTextPath(spark, dir, textDupGate(spark, dir),
-      spreadKernel = true)(t13Body) // full feature battery per row
+    gated(spark, dir, spreadKernel = true)(t13Body) // full feature battery
 
   private[graft] def t13Body(df: DataFrame): DataFrame = {
     // ws materialized as a real column BEFORE the lambda: an expression
@@ -794,70 +666,36 @@ object TextAnalysis {
     * gram-keyed hash join back, one doc-keyed agg — all linear,
     * no N² anywhere.
     */
+  // EXACT-DUP PRE-COLLAPSE: the bigram model is CORPUS-level, so the
+  // collapse must preserve it exactly — bigram occurrence rows come from
+  // one row per class and the model counts weight each by the class
+  // size m: sum(m) equals the per-copy count, term for term, so c1/c2
+  // and every integer DIV result are identical at ANY dup profile (not
+  // just uniform replication). Per-doc scoring then runs once per class.
   def t16LmSurprise(spark: SparkSession, dir: String): DataFrame =
-    if (textDupGate(spark, dir)) t16Collapsed(spark, dir)
-    else t16Direct(spark, dir)
+    gated(spark, dir)(t16Body)
 
-  private[graft] def t16Direct(spark: SparkSession, dir: String): DataFrame = {
-    val tok = Tables(spark, dir).documents
-      .select(col("doc_id"),
+  private[graft] def t16Body(df: DataFrame): DataFrame = {
+    val tok = df
+      .select(col("gid"), col("m"),
         filter(split(lower(col("text")), " "), w => length(w) > 0).as("ws"))
       .where(size(col("ws")) >= 2)
-    val g = tok.select(col("doc_id"),
+    val g = tok.select(col("gid"), col("m"),
         explode(transform(sequence(lit(1), size(col("ws")) - 1),
           i => struct(element_at(col("ws"), i).as("w1"),
             element_at(col("ws"), i + 1).as("w2")))).as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-    val bc = g.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
+      .select(col("gid"), col("m"), col("bg.w1").as("w1"),
+        col("bg.w2").as("w2"))
+    val bc = g.groupBy(col("w1"), col("w2")).agg(sum(col("m")).as("c2"))
     val cc = bc.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
     g.join(bc, Seq("w1", "w2")).join(cc, Seq("w1"))
-      .select(col("doc_id"),
-        expr("(1000000 * c1) DIV c2").as("surp"))
-      .groupBy(col("doc_id"))
+      .select(col("gid"), expr("(1000000 * c1) DIV c2").as("surp"))
+      .groupBy(col("gid"))
       .agg(sum(col("surp")).as("ssum"), count(lit(1)).as("n_bigrams"))
-      .select(col("doc_id"), col("n_bigrams"),
+      .select(col("gid"), col("n_bigrams"),
         (col("ssum").cast("double") / col("n_bigrams")).as("avg_surprise"),
         (col("ssum").cast("double") / col("n_bigrams") >
           lit(surpriseThreshold)).as("flagged"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** EXACT-DUP PRE-COLLAPSE form of t16. Unlike the row-local t-ops, the
-    * bigram model is CORPUS-level, so the collapse must preserve it
-    * exactly: bigram occurrence rows come from DISTINCT texts only, and
-    * the model counts weight each row by its class multiplicity —
-    * sum(m) over class-occurrence rows equals the per-copy count the
-    * direct path computes, term for term, so c1/c2 and every integer
-    * DIV result are identical at ANY dup profile (not just uniform
-    * replication). Per-doc scoring then runs once per class and expands.
-    */
-  private[graft] def t16Collapsed(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(spark, dir).documents
-    val mem = docs.select(col("doc_id"), md5(col("text")).as("th"))
-    val mult = mem.groupBy(col("th")).agg(count(lit(1)).as("m"))
-    val tok = docs.select(md5(col("text")).as("th"), col("text"))
-      .dropDuplicates("th")
-      .select(col("th"),
-        filter(split(lower(col("text")), " "), w => length(w) > 0).as("ws"))
-      .where(size(col("ws")) >= 2)
-    val g = tok.select(col("th"),
-        explode(transform(sequence(lit(1), size(col("ws")) - 1),
-          i => struct(element_at(col("ws"), i).as("w1"),
-            element_at(col("ws"), i + 1).as("w2")))).as("bg"))
-      .select(col("th"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-    val gw = g.join(mult, Seq("th"))
-    val bc = gw.groupBy(col("w1"), col("w2")).agg(sum(col("m")).as("c2"))
-    val cc = bc.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
-    val perClass = g.join(bc, Seq("w1", "w2")).join(cc, Seq("w1"))
-      .select(col("th"), expr("(1000000 * c1) DIV c2").as("surp"))
-      .groupBy(col("th"))
-      .agg(sum(col("surp")).as("ssum"), count(lit(1)).as("n_bigrams"))
-    mem.join(perClass, Seq("th"))
-      .select(col("doc_id"), col("n_bigrams"),
-        (col("ssum").cast("double") / col("n_bigrams")).as("avg_surprise"),
-        (col("ssum").cast("double") / col("n_bigrams") >
-          lit(surpriseThreshold)).as("flagged"))
-      .orderBy(col("doc_id"))
   }
 
   /** Flag threshold for t16, shared with its oracle. */
@@ -1148,7 +986,7 @@ object TextAnalysis {
     * translate+count pipeline.
     */
   def t19BlocklistFilter(spark: SparkSession, dir: String): DataFrame =
-    perTextPath(spark, dir, textDupGate(spark, dir), t19Flags)(t19Body)
+    gated(spark, dir, t19Flags)(t19Body)
 
   /** The planting depends on doc_id only through these two flags, so
     * (md5(text), p7, p11) is the valid collapse class. */
@@ -1182,7 +1020,8 @@ object TextAnalysis {
     * rewrite costs what the detection cost.
     */
   def t20BoilerplateStrip(spark: SparkSession, dir: String): DataFrame =
-    t20Path(spark, dir, textDupGate(spark, dir))
+    t20Path(spark, dir,
+      DupDensity.textGate(Tables(spark, dir).documents))
 
   /** The strip list is corpus-level (t09 counts DISTINCT doc_ids, so it
     * is dup-profile-exact as-is); the per-doc strip+reassemble half is a
@@ -1191,7 +1030,7 @@ object TextAnalysis {
       collapsed: Boolean): DataFrame = {
     val strip = t09Boilerplate(spark, dir).select(col("seg"))
       .withColumn("blocked", lit(true))
-    perTextPath(spark, dir, collapsed) { df =>
+    DupDensity.perClass(Tables(spark, dir).documents, collapsed) { df =>
       val segs = df
         .select(col("gid"), split(col("text"), " ").as("ws"))
         .select(col("gid"), size(col("ws")).as("words_before"),

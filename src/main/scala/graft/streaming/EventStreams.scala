@@ -749,9 +749,7 @@ object EventStreams {
     // no extra per-trigger job; each batch is a slice of the same corpus,
     // so the corpus-level decision is the right per-batch one too, and
     // both curateBatch paths are output-identical regardless (DupGateSpec)
-    val collapse = graft.operators.DupDensity
-      .probe(staticDocs, org.apache.spark.sql.functions.md5(col("text")))
-      .collapseWorthIt
+    val collapse = graft.operators.DupDensity.textGate(staticDocs)
     val evalGrams = Pipelines
       .evalGramsOf(staticDocs, collapse)
       .localCheckpoint(true) // computed ONCE, reused every micro-batch

@@ -2,12 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, md5}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, DupDensity, Lsh, Multimodal, TextAnalysis}
+import graft.operators.{Dedup, DupDensity, Lsh, Multimodal}
+import graft.sources.Tables
 
 /** The dup-density gate's two contracts:
   *
@@ -102,8 +103,51 @@ class DupGateSpec extends AnyFunSuite {
         (24L until 30L).map(i => i -> vec(100 + i.toInt)))
   }
 
-  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+  private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(_.toString).sorted
+
+  private def docsOf(dir: String) = Tables(spark, dir).documents
+
+  /** A text pair kernel through the combinator, as d02/d03 run it. */
+  private def textPairs(dir: String, collapsed: Boolean)(
+      kernel: (DataFrame, (Column, Column) => Column) => DataFrame) =
+    DupDensity.pairs(docsOf(dir).select(col("doc_id"), col("text")),
+      "doc_id", DupDensity.textKey, collapsed)(kernel)
+
+  private def embPairs(dir: String, collapsed: Boolean, g: Lsh.BandGeometry) =
+    DupDensity.pairs(Tables(spark, dir).embeddings
+      .select(col("vec_id"), col("embedding")), "vec_id", Dedup.ehOf,
+      collapsed)(Dedup.d06Kernel(g))
+
+  private def m07Pairs(dir: String, collapsed: Boolean) =
+    DupDensity.pairs(Multimodal.m07Hashed(spark, dir), "doc_id",
+      col("ahash"), collapsed)(Multimodal.m07Kernel)
+
+  private def curate(dir: String, collapsed: Boolean) = {
+    import graft.operators.Pipelines
+    val docs = docsOf(dir)
+    Pipelines.curateBatch(docs, Pipelines.evalGramsOf(docs, collapsed),
+      collapsed)
+  }
+
+  /** Every perClass operator, by name, as a function of the path. */
+  private def perClassOps(dir: String)
+      : Seq[(String, Boolean => DataFrame)] = {
+    import graft.operators.{TextAnalysis => TA}
+    val docs = docsOf(dir)
+    def body(f: DataFrame => DataFrame)(c: Boolean) =
+      DupDensity.perClass(docs, c)(f)
+    Seq(
+      ("t01", body(TA.t01Body)), ("t02", body(TA.t02Body)),
+      ("t03", body(TA.t03Body)), ("t04", body(TA.t04Body)),
+      ("t06", body(TA.t06Body)), ("t07", body(TA.t07Body)),
+      ("t08", body(TA.t08Body)), ("t13", body(TA.t13Body)),
+      ("t16", body(TA.t16Body)), ("d10", body(Dedup.d10Body)),
+      ("t10", c => DupDensity.perClass(docs, c, TA.t10Flags)(TA.t10Body)),
+      ("t19", c => DupDensity.perClass(docs, c, TA.t19Flags)(TA.t19Body)),
+      ("t20", c => TA.t20Path(spark, dir, c)),
+      ("d12bands", c => Dedup.bandRows(docs, c)))
+  }
 
   // ---- Lsh helper envelope ----
 
@@ -141,100 +185,88 @@ class DupGateSpec extends AnyFunSuite {
   test("density probe: collapse on high-dup, direct on unique corpora") {
     val dup = DupDensity.probe(
       spark.read.parquet(s"$dupHeavyDocs/documents.parquet"), md5(col("text")))
-    assert(dup.collapseWorthIt, s"high-dup corpus misread: $dup")
+    assert(dup.collapse, s"high-dup corpus misread: $dup")
     val uni = DupDensity.probe(
       spark.read.parquet(s"$uniqueDocs/documents.parquet"), md5(col("text")))
-    assert(!uni.collapseWorthIt, s"unique corpus misread: $uni")
+    assert(!uni.collapse, s"unique corpus misread: $uni")
     // the gate SFs are ~unique — sf0.001 must take the direct path
     val sf = DupDensity.probe(
       spark.read.parquet(s"$sfDir/documents.parquet"), md5(col("text")))
-    assert(!sf.collapseWorthIt, s"sf0.001 misread as collapsible: $sf")
+    assert(!sf.collapse, s"sf0.001 misread as collapsible: $sf")
   }
 
   // ---- path equality, text operators ----
 
   test("d02 direct == collapsed on dup-heavy and unique corpora") {
     Seq(dupHeavyDocs, uniqueDocs).foreach { dir =>
-      assert(rowsOf(Dedup.d02Direct(spark, dir)) ===
-        rowsOf(Dedup.d02Collapsed(spark, dir)), s"dir=$dir")
+      assert(rowsOf(textPairs(dir, false)(Dedup.d02Kernel)) ===
+        rowsOf(textPairs(dir, true)(Dedup.d02Kernel)), s"dir=$dir")
     }
   }
 
   test("d03 direct == collapsed on dup-heavy and unique corpora") {
     Seq(dupHeavyDocs, uniqueDocs).foreach { dir =>
-      assert(rowsOf(Dedup.d03Direct(spark, dir)) ===
-        rowsOf(Dedup.d03Collapsed(spark, dir)), s"dir=$dir")
+      assert(rowsOf(textPairs(dir, false)(Dedup.d03Kernel)) ===
+        rowsOf(textPairs(dir, true)(Dedup.d03Kernel)), s"dir=$dir")
     }
   }
 
   test("d10 direct == collapsed on dup-heavy and unique corpora") {
     Seq(dupHeavyDocs, uniqueDocs).foreach { dir =>
-      assert(rowsOf(Dedup.d10Direct(spark, dir)) ===
-        rowsOf(Dedup.d10Collapsed(spark, dir)), s"dir=$dir")
+      val d10 = perClassOps(dir).toMap.apply("d10")
+      assert(rowsOf(d10(false)) === rowsOf(d10(true)), s"dir=$dir")
     }
   }
 
   test("t04 direct == collapsed on dup-heavy and unique corpora") {
     Seq(dupHeavyDocs, uniqueDocs).foreach { dir =>
-      assert(rowsOf(TextAnalysis.t04Direct(spark, dir)) ===
-        rowsOf(TextAnalysis.t04Collapsed(spark, dir)), s"dir=$dir")
+      val t04 = perClassOps(dir).toMap.apply("t04")
+      assert(rowsOf(t04(false)) === rowsOf(t04(true)), s"dir=$dir")
     }
   }
 
   test("m07 direct == collapsed on dup-heavy and unique corpora") {
     Seq(dupHeavyDocs, uniqueDocs).foreach { dir =>
-      val hashed = Multimodal.m07Hashed(spark, dir)
-      assert(rowsOf(Multimodal.m07Direct(hashed)) ===
-        rowsOf(Multimodal.m07Collapsed(hashed)), s"dir=$dir")
+      assert(rowsOf(m07Pairs(dir, false)) === rowsOf(m07Pairs(dir, true)),
+        s"dir=$dir")
     }
   }
 
   test("d12 band rows: direct == collapsed row-for-row") {
     Seq(dupHeavyDocs, uniqueDocs).foreach { dir =>
       val docs = spark.read.parquet(s"$dir/documents.parquet")
-      assert(rowsOf(Dedup.bandRowsDirect(docs)) ===
-        rowsOf(Dedup.bandRowsCollapsed(docs)), s"dir=$dir")
+      assert(rowsOf(Dedup.bandRows(docs, false)) ===
+        rowsOf(Dedup.bandRows(docs, true)), s"dir=$dir")
     }
   }
 
   test("t-family per-text collapse: direct == collapsed per op") {
-    import org.apache.spark.sql.DataFrame
-    import graft.operators.{TextAnalysis => TA}
     Seq(dupHeavyDocs, uniqueDocs).foreach { dir =>
-      val cases: Seq[(String, Boolean => DataFrame)] = Seq(
-        ("t01", c => TA.perTextPath(spark, dir, c)(TA.t01Body)),
-        ("t02", c => TA.perTextPath(spark, dir, c)(TA.t02Body)),
-        ("t03", c => TA.perTextPath(spark, dir, c)(TA.t03Body)),
-        ("t06", c => TA.perTextPath(spark, dir, c)(TA.t06Body)),
-        ("t07", c => TA.perTextPath(spark, dir, c)(TA.t07Body)),
-        ("t08", c => TA.perTextPath(spark, dir, c)(TA.t08Body)),
-        ("t13", c => TA.perTextPath(spark, dir, c)(TA.t13Body)),
-        ("t19", c => TA.perTextPath(spark, dir, c, TA.t19Flags)(TA.t19Body)),
-        ("t16", c => if (c) TA.t16Collapsed(spark, dir)
-                     else TA.t16Direct(spark, dir)),
-        ("t20", c => TA.t20Path(spark, dir, c)))
-      cases.foreach { case (n, f) =>
-        assert(rowsOf(f(false)) === rowsOf(f(true)), s"op=$n dir=$dir")
-      }
+      perClassOps(dir)
+        .filter { case (n, _) =>
+          n.startsWith("t") && !Set("t04", "t10")(n) } // own tests above
+        .foreach { case (n, f) =>
+          assert(rowsOf(f(false)) === rowsOf(f(true)), s"op=$n dir=$dir")
+        }
     }
   }
 
   test("t-family per-text collapse keeps null-text rows path-equal") {
-    import org.apache.spark.sql.DataFrame
-    import graft.operators.{TextAnalysis => TA}
+    // every perClass op (t-family, t04/t10/t16, d10, the d12 band rows),
+    // the p11 curate strip and both text pair kernels: the null-safe
+    // class key keeps null-text docs on the collapsed path exactly where
+    // the direct path keeps them
     val dir = nullTextDocs
-    val cases: Seq[(String, Boolean => DataFrame)] = Seq(
-      ("t01", c => TA.perTextPath(spark, dir, c)(TA.t01Body)),
-      ("t02", c => TA.perTextPath(spark, dir, c)(TA.t02Body)),
-      ("t03", c => TA.perTextPath(spark, dir, c)(TA.t03Body)),
-      ("t06", c => TA.perTextPath(spark, dir, c)(TA.t06Body)),
-      ("t07", c => TA.perTextPath(spark, dir, c)(TA.t07Body)),
-      ("t08", c => TA.perTextPath(spark, dir, c)(TA.t08Body)),
-      ("t13", c => TA.perTextPath(spark, dir, c)(TA.t13Body)),
-      ("t19", c => TA.perTextPath(spark, dir, c, TA.t19Flags)(TA.t19Body)))
+    val cases = perClassOps(dir) ++ Seq(
+      ("d02", (c: Boolean) => textPairs(dir, c)(Dedup.d02Kernel)),
+      ("d03", (c: Boolean) => textPairs(dir, c)(Dedup.d03Kernel)),
+      ("p11curate", (c: Boolean) => curate(dir, c)))
     cases.foreach { case (n, f) =>
       assert(rowsOf(f(false)) === rowsOf(f(true)), s"op=$n")
     }
+    // the fixture's null-text rows reach the output of a per-doc op
+    val t04 = perClassOps(dir).toMap.apply("t04")
+    assert(t04(true).filter(col("doc_id").isin(21L, 22L)).count() === 2)
   }
 
   test("t08 decomposed scrub equals the full augmented-string reference") {
@@ -272,27 +304,22 @@ class DupGateSpec extends AnyFunSuite {
         regexp_count(col("aug"), lit(phoneRe)).cast("long").as("n_phones"),
         md5(scrubbed).as("scrub_md5"))
     Seq(false, true).foreach { c =>
-      assert(rowsOf(TA.perTextPath(spark, dir, c)(TA.t08Body)) ===
+      assert(rowsOf(DupDensity.perClass(docsOf(dir), c)(TA.t08Body)) ===
         rowsOf(want), s"collapsed=$c")
     }
   }
 
   test("t10 direct == collapsed on dup-heavy and unique corpora") {
     Seq(dupHeavyDocs, uniqueDocs).foreach { dir =>
-      assert(rowsOf(TextAnalysis.t10Direct(spark, dir)) ===
-        rowsOf(TextAnalysis.t10Collapsed(spark, dir)), s"dir=$dir")
+      val t10 = perClassOps(dir).toMap.apply("t10")
+      assert(rowsOf(t10(false)) === rowsOf(t10(true)), s"dir=$dir")
     }
   }
 
   test("curation contamination strip: direct == collapsed paths") {
-    import graft.operators.Pipelines
     Seq(dupHeavyDocs, uniqueDocs).foreach { dir =>
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-      val d = Pipelines.curateBatch(docs,
-        Pipelines.evalGramsOf(docs, collapsed = false), collapsed = false)
-      val c = Pipelines.curateBatch(docs,
-        Pipelines.evalGramsOf(docs, collapsed = true), collapsed = true)
-      assert(rowsOf(d) === rowsOf(c), s"dir=$dir")
+      assert(rowsOf(curate(dir, false)) === rowsOf(curate(dir, true)),
+        s"dir=$dir")
     }
   }
 
@@ -301,8 +328,8 @@ class DupGateSpec extends AnyFunSuite {
 
   test("d06 direct == collapsed, zero-vector dups handled identically") {
     val g = Lsh.scaled(18) // ≈ the distinct count of the fixture
-    val direct = rowsOf(Dedup.d06Direct(spark, dupHeavyEmbs, g))
-    val collapsed = rowsOf(Dedup.d06Collapsed(spark, dupHeavyEmbs, g))
+    val direct = rowsOf(embPairs(dupHeavyEmbs, false, g))
+    val collapsed = rowsOf(embPairs(dupHeavyEmbs, true, g))
     assert(direct === collapsed)
     // the verbatim-copy pairs must actually be present (the fixture has
     // 12 copies of a → 66 within-pairs at minimum)
@@ -336,38 +363,23 @@ class DupGateSpec extends AnyFunSuite {
     // collapsed variant on the dup-heavy fixtures and apply the same
     // two contracts: no CartesianProductExec, no unbounded
     // unpartitioned WindowExec.
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.joins.CartesianProductExec
-    import graft.operators.{Pipelines, TextAnalysis => TA}
     def bounded(p: SparkPlan): Boolean = {
       val s = p.toString
       s.contains("TakeOrderedAndProject") || s.contains("CollectLimit") ||
         s.contains("GlobalLimit") || s.contains("LocalLimit")
     }
     val dir = dupHeavyDocs
-    val docsDf = spark.read.parquet(s"$dir/documents.parquet")
-    val g = Lsh.scaled(18)
-    val plans: Seq[(String, DataFrame)] = Seq(
-      "d02" -> Dedup.d02Collapsed(spark, dir),
-      "d03" -> Dedup.d03Collapsed(spark, dir),
-      "d06" -> Dedup.d06Collapsed(spark, dupHeavyEmbs, g),
-      "d09" -> Dedup.d09Collapsed(spark, dupHeavyEmbs, 8),
-      "d10" -> Dedup.d10Collapsed(spark, dir),
-      "d12bands" -> Dedup.bandRowsCollapsed(docsDf),
-      "t04" -> TA.t04Collapsed(spark, dir),
-      "t10" -> TA.t10Collapsed(spark, dir),
-      "t16" -> TA.t16Collapsed(spark, dir),
-      "t20" -> TA.t20Path(spark, dir, collapsed = true),
-      "t01" -> TA.perTextPath(spark, dir, collapsed = true)(TA.t01Body),
-      "t07" -> TA.perTextPath(spark, dir, collapsed = true)(TA.t07Body),
-      "t13" -> TA.perTextPath(spark, dir, collapsed = true)(TA.t13Body),
-      "t19" -> TA.perTextPath(spark, dir, collapsed = true,
-        TA.t19Flags)(TA.t19Body),
-      "p11curate" -> Pipelines.curateBatch(docsDf,
-        Pipelines.evalGramsOf(docsDf, collapsed = true), collapsed = true),
-      "m07" -> Multimodal.m07Collapsed(Multimodal.m07Hashed(spark, dir)))
+    val plans: Seq[(String, DataFrame)] =
+      perClassOps(dir).map { case (n, f) => n -> f(true) } ++ Seq(
+        "d02" -> textPairs(dir, true)(Dedup.d02Kernel),
+        "d03" -> textPairs(dir, true)(Dedup.d03Kernel),
+        "d06" -> embPairs(dupHeavyEmbs, true, Lsh.scaled(18)),
+        "d09" -> Dedup.d09Collapsed(spark, dupHeavyEmbs, 8),
+        "p11curate" -> curate(dir, true),
+        "m07" -> m07Pairs(dir, true))
     val offenders = plans.flatMap { case (name, df) =>
       val plan = df.queryExecution.sparkPlan
       (plan +: plan.subqueriesAll).flatMap(_.collect {
@@ -379,5 +391,42 @@ class DupGateSpec extends AnyFunSuite {
       })
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("the collapse is written once: no per-site path pairs under src/main") {
+    // split so that this file is not a hit itself
+    import java.nio.charset.StandardCharsets.UTF_8
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val rule = "collapse" + "WorthIt"
+    val pathDef = ("def (\\w+)(" + "Direct|Collapsed|RepPairs)\\b").r
+    val files = Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val readers = files.filter(p =>
+      new String(Files.readAllBytes(p), UTF_8).contains(rule))
+      .map(_.getFileName.toString)
+    assert(readers === Seq("DupDensity.scala"))
+    val pathDefs = files.flatMap(p => pathDef
+      .findAllMatchIn(new String(Files.readAllBytes(p), UTF_8))
+      .map(_.group(0).stripPrefix("def "))).sorted
+    assert(pathDefs === Seq("d09Collapsed", "d09Direct"))
+  }
+
+  test("collapsed paths spread no post-shuffle frame; direct paths spread the scan") {
+    // the sf0.001 scan is one file on 4 slots, so Tables.spreadNarrow
+    // fires wherever it is applied: only the direct path's raw scan may
+    // carry its round-robin exchange — the collapsed path's dedup
+    // exchange already spreads the kernel
+    def spreads(df: DataFrame): Boolean =
+      df.queryExecution.executedPlan.toString.contains("RoundRobinPartitioning")
+    import graft.operators.{TextAnalysis => TA}
+    val docs = docsOf(sfDir)
+    val t04 = (c: Boolean) =>
+      DupDensity.perClass(docs, c, spreadKernel = true)(TA.t04Body)
+    val d02 = (c: Boolean) => DupDensity.pairs(
+      docs.select(col("doc_id"), col("text")), "doc_id", DupDensity.textKey,
+      c, spreadKernel = true)(Dedup.d02Kernel)
+    assert(!spreads(t04(true)) && !spreads(d02(true)))
+    assert(spreads(t04(false)) && spreads(d02(false)))
   }
 }

@@ -143,6 +143,13 @@ class ExplainAuditSpec extends AnyFunSuite {
       p.contains("BroadcastHashJoin"), s"band-bucket join not an equi-join:\n$p")
   }
 
+  test("t01 direct path: a row-local op adds nothing over its body") {
+    // sf0.001 is ~unique, so the dup gate takes the direct path: no
+    // expansion join, and t01 spreads no scan
+    val p = plan(graft.operators.TextAnalysis.t01LangId(spark, sfDir))
+    assert(!p.contains("Join") && !p.contains("Exchange"), p)
+  }
+
   test("q23 native as-of: AsOfJoinExec with one exchange+sort per side") {
     val p = plan(graft.operators.Relational.q23AsofNative(spark, sfDir))
     assert(p.contains("AsOfJoin"), s"custom operator not planned:\n$p")

@@ -198,4 +198,31 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(err.getMessage.contains("_MANIFEST") &&
       err.getMessage.contains("garbage"))
   }
+
+  test("p12 chunk failure cancels the other chunks and leaks no job") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.functions.{col, expr}
+    // an events table wide enough for ~7 chunks (the sf fixture's 1,000
+    // events fit in one), so chunks are queued and in flight at the failure
+    val dir = Files.createTempDirectory("graft-p12-events").toString
+    spark.range(0L, 240000L)
+      .select(col("id").as("event_id"), (col("id") % 97).as("user_id"),
+        (col("id") % 13).cast("double").as("value"),
+        expr("timestamp_micros(id * 1000000)").as("ts"))
+      .write.parquet(s"$dir/events.parquet")
+    val root = Files.createTempDirectory("graft-p12-fail").toString
+    // chunk_0 exists as a regular FILE: that chunk's write cannot create
+    // its data directory, while the other chunks are queued or running
+    Files.write(Paths.get(root, "chunk_0"), Array[Byte](1))
+    def markers: Set[String] = new java.io.File(root).listFiles()
+      .filter(f => new java.io.File(f, "_DONE").exists).map(_.getName).toSet
+    intercept[Exception] {
+      graft.operators.Pipelines.p12BackfillAt(spark, dir, root)
+    }
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    val atThrow = markers
+    Thread.sleep(2000)
+    assert(markers === atThrow, "a chunk kept writing after the query failed")
+    assert(!atThrow.contains("chunk_0"))
+  }
 }
