@@ -22,8 +22,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   *    physical plan at the SF dir: AQE decisions, join strategies and
   *    bucketed-scan recognition at rehearsal row counts.
   *  - `Bench --profile <query> [reps]` runs the query `reps` times (default
-  *    1) and prints, on stderr, each rep's wall time and each micro-batch's
-  *    engine-side `durationMs` split: where a streaming query's wall goes.
+  *    1) and prints, on stderr, each rep's wall time, the used heap after a
+  *    full GC at the end of the rep (outside the wall), and each
+  *    micro-batch's engine-side `durationMs` split: where a streaming
+  *    query's wall goes, and whether each run leaves heap behind.
   *
   * The bench modes print the headline JSON as the last stdout line.
   * Materialization is a `noop`-sink write, not count(): count() lets
@@ -131,6 +133,14 @@ object Bench {
     try body(runs) finally spark.streams.removeListener(runs)
   }
 
+  /** Used heap after a full GC: a per-run leak shows as a slope over
+    * `--profile` reps. */
+  private def heapAfterGcMb(): Double = {
+    System.gc()
+    java.lang.management.ManagementFactory.getMemoryMXBean
+      .getHeapMemoryUsage.getUsed / 1048576.0
+  }
+
   private final case class R(name: String, median: Double, min: Double,
     max: Double, streamExecSec: Double, ok: Boolean)
 
@@ -145,7 +155,8 @@ object Bench {
       try {
         noop(fn(spark, sfDir))
         val wall = (System.nanoTime() - t0) / 1e9
-        if (runs.profile) System.err.println(f"[prof] rep $rep wall $wall%.3f s")
+        if (runs.profile) System.err.println(
+          f"[prof] rep $rep wall $wall%.3f s heap ${heapAfterGcMb()}%.1f MB")
         Some(wall)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); None }

@@ -934,9 +934,12 @@ object Dedup {
     val canon = gstat.join(nbr, Seq("th"), "left")
       .select(col("th"),
         least(col("gmin"), coalesce(col("nmin"), col("gmin"))).as("canon"))
-    members.join(canon, Seq("th"))
-      .select(col("doc_id"), col("canon").as("canonical_id"),
-        (col("canon") < col("doc_id")).as("is_dup"))
+    // left: a null-text doc has no md5 to match, and no shingle, band or
+    // pair either, so it is its own canonical (the oracle's LEFT JOIN)
+    val canonical = coalesce(col("canon"), col("doc_id"))
+    members.join(canon, Seq("th"), "left")
+      .select(col("doc_id"), canonical.as("canonical_id"),
+        (canonical < col("doc_id")).as("is_dup"))
       .sortWithinPartitions(col("doc_id"))
   }
 

@@ -1060,20 +1060,16 @@ object Writers {
     * version of its key before being filtered). Writes stay O(changes);
     * the read pays one key shuffle — the Hudi-MOR/Iceberg-merge-on-read
     * contract, complementing k09's copy-on-write mergeUpsert. Periodic
-    * folding of the delta log back into base is k08's compaction. */
-  def mergeOnReadView(spark: SparkSession, base: String, deltas: String,
-      keyCols: Seq[String], versionCol: String): DataFrame =
-    mergeOnReadView(spark, base, spark.read.parquet(deltas), keyCols,
-      versionCol)
-
-  /** Delta-side-as-DataFrame overload: lets a committed-batches reader
-    * (st17's IdempotentSink) or any other curated delta source feed the
-    * view without materializing to one directory first. */
-  def mergeOnReadView(spark: SparkSession, base: String,
-      deltaRows: DataFrame, keyCols: Seq[String],
-      versionCol: String): DataFrame = {
+    * folding of the delta log back into base is k08's compaction.
+    *
+    * Base and deltas come in as frames, read by the caller with the
+    * schema it wrote them with (no schema-inference job); the deltas may
+    * be one directory (k18) or a committed-batches reader (st17's
+    * IdempotentSink). */
+  def mergeOnReadView(base: DataFrame, deltaRows: DataFrame,
+      keyCols: Seq[String], versionCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val b = spark.read.parquet(base)
+    val b = base
       .withColumn(versionCol, lit(1L))
       .withColumn("__deleted", lit(false))
     val w = Window.partitionBy(keyCols.map(col): _*)
@@ -1097,16 +1093,18 @@ object Writers {
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"))
     ev.write.parquet(base)
-    ev.filter(pmod(col("event_id"), lit(3)) === 0)
+    val updates = ev.filter(pmod(col("event_id"), lit(3)) === 0)
       .withColumn("value", col("value") + 1000.0)
       .withColumn("version", lit(2L))
       .withColumn("__deleted", lit(false))
-      .write.mode("append").parquet(deltas)
+    updates.write.mode("append").parquet(deltas)
     ev.filter(pmod(col("event_id"), lit(5)) === 0)
       .withColumn("version", lit(3L))
       .withColumn("__deleted", lit(true))
       .write.mode("append").parquet(deltas)
-    mergeOnReadView(spark, base, deltas, Seq("event_id"), "version")
+    mergeOnReadView(spark.read.schema(ev.schema).parquet(base),
+      spark.read.schema(updates.schema).parquet(deltas),
+      Seq("event_id"), "version")
       .orderBy(col("event_id"))
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   StreamingQuery, Trigger}
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DataType, DecimalType, StructType}
 
 /** Structured-Streaming operators st01–st02 (SURVEY.md §2).
   *
@@ -306,6 +306,12 @@ object EventStreams {
     * [[Sink.Batches]] streams get no sizing: their bodies run batch
     * queries in the clone, sized for data (st20's as-of join, st12's
     * anti-join), and st08's dedup state keeps the session width.
+    *
+    * STATE IS RUN-SCOPED: when the run ends, successfully or not, its
+    * state-store providers are unloaded and closed
+    * ([[org.apache.spark.sql.graft.Interop.releaseStateStores]]), so a
+    * finished stream keeps nothing on the heap; a later run over the same
+    * checkpoint reloads its state from the checkpoint files.
     */
   private[graft] def runToTable(df: DataFrame, sink: Sink,
       stateRows: Long = 0L, rocksDb: Boolean = false,
@@ -339,8 +345,8 @@ object EventStreams {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
-    q.awaitTermination()
-    check(q)
+    try { q.awaitTermination(); check(q) }
+    finally org.apache.spark.sql.graft.Interop.releaseStateStores(q)
     read()
   }
 
@@ -367,10 +373,11 @@ object EventStreams {
       Incremental.Step("boost", _.withColumn("boosted", col("value") * 2.0)
         .drop("value"))))
     val start = Incremental.nextStart(spark, sink, "event_id")
-    runToTable(eventsStream(spark, dir), Sink.Batches(
+    val events = eventsStream(spark, dir)
+    runToTable(events, Sink.Batches(
       (batch, _) => pipe.run(batch.filter(col("event_id") >= start))
         .write.mode("append").parquet(sink),
-      () => spark.read.parquet(sink)))
+      () => spark.read.schema(pipe.run(events).schema).parquet(sink)))
       .sortWithinPartitions(col("event_id"))
   }
 
@@ -648,7 +655,7 @@ object EventStreams {
         col("to").as("to_addr"), col("amount").cast("string").as("amount"))
     runToTable(decoded, Sink.Batches(
       (batch, _) => batch.write.mode("append").parquet(sink),
-      () => spark.read.parquet(sink)))
+      () => spark.read.schema(decoded.schema).parquet(sink)))
       .sortWithinPartitions(col("event_id"))
   }
 
@@ -666,11 +673,11 @@ object EventStreams {
         col("value"), col("ts"),
         explode(array(lit(1), lit(2))).as("copy"))
       .drop("copy")
-    runToTable(doubled
       .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id"), Sink.Batches(
+      .dropDuplicatesWithinWatermark("event_id")
+    runToTable(doubled, Sink.Batches(
       (batch, _) => batch.write.mode("append").parquet(sink),
-      () => spark.read.parquet(sink)))
+      () => spark.read.schema(doubled.schema).parquet(sink)))
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"))
       .sortWithinPartitions(col("event_id"))
@@ -753,11 +760,12 @@ object EventStreams {
     val evalGrams = Pipelines
       .evalGramsOf(staticDocs, collapse)
       .localCheckpoint(true) // computed ONCE, reused every micro-batch
+    def curated(docs: DataFrame) =
+      Pipelines.curateBatch(docs, evalGrams, collapse).drop("text")
     runToTable(tableStream(spark, dir, "documents"), Sink.Batches(
-      (batch, _) => Pipelines.curateBatch(batch, evalGrams, collapse)
-        .drop("text")
-        .write.mode("append").parquet(sink),
-      () => spark.read.parquet(sink)))
+      (batch, _) => curated(batch).write.mode("append").parquet(sink),
+      // the static table has the stream's schema, so this only analyzes
+      () => spark.read.schema(curated(staticDocs).schema).parquet(sink)))
       .select(col("doc_id"), col("lang"), col("bucket"), col("quality"))
       .sortWithinPartitions(col("doc_id"))
   }
@@ -770,8 +778,10 @@ object EventStreams {
     * write from a crashed attempt is simply replaced), and a per-batchId
     * marker file is created strictly AFTER the data — the commit point.
     * A batchId whose marker exists is skipped entirely; readers union
-    * only committed directories. Same shape against a ClickHouse sink:
-    * the marker becomes a committed-batch-ids table row.
+    * only committed directories. The marker holds the batch's schema, so
+    * the read-back parses it instead of starting a schema-inference job.
+    * Same shape against a ClickHouse sink: the marker becomes a
+    * committed-batch-ids table row.
     */
   final case class IdempotentSink(root: String) {
     private def fs(spark: SparkSession) = new org.apache.hadoop.fs.Path(root)
@@ -783,7 +793,8 @@ object EventStreams {
       val f = fs(batch.sparkSession)
       if (!f.exists(marker(id))) {
         batch.write.mode("overwrite").parquet(s"$root/batch_$id")
-        f.create(marker(id), true).close()
+        val out = f.create(marker(id), true)
+        try out.write(batch.schema.json.getBytes("UTF-8")) finally out.close()
       }
     }
 
@@ -791,7 +802,11 @@ object EventStreams {
       val f = fs(spark)
       val ids = f.listStatus(new org.apache.hadoop.fs.Path(s"$root/_commits"))
         .map(_.getPath.getName.toLong).sorted
-      spark.read.parquet(ids.map(id => s"$root/batch_$id").toSeq: _*)
+      val in = f.open(marker(ids.head))
+      val schema = try DataType.fromJson(new String(in.readAllBytes(), "UTF-8"))
+        finally in.close()
+      spark.read.schema(schema.asInstanceOf[StructType])
+        .parquet(ids.map(id => s"$root/batch_$id").toSeq: _*)
     }
   }
 
@@ -927,14 +942,16 @@ object EventStreams {
   def st16CheckpointResume(spark: SparkSession, dir: String): DataFrame = {
     val root = graft.Scratch.dir("st16_")
     val sink = s"$root/sink"
+    val events = eventsStream(spark, dir)
+      .select(col("event_id"), col("user_id"), col("value"))
     def runOnce(read: () => DataFrame): DataFrame =
-      runToTable(eventsStream(spark, dir)
-        .select(col("event_id"), col("user_id"), col("value")), Sink.Batches(
+      runToTable(events, Sink.Batches(
         (batch, _) => batch.write.mode("append").parquet(sink), read,
         checkpoint = Some(s"$root/chk")))
     // initial run drains the source; only the restart's sink is read
     runOnce(() => spark.emptyDataFrame)
-    runOnce(() => spark.read.parquet(sink)) // recovered offsets ⇒ appends nothing
+    // recovered offsets ⇒ appends nothing
+    runOnce(() => spark.read.schema(events.schema).parquet(sink))
       .sortWithinPartitions(col("event_id"))
   }
 
@@ -956,10 +973,10 @@ object EventStreams {
     val root = graft.Scratch.dir("st17_")
     val base = s"$root/base"
     val deltaLog = IdempotentSink(s"$root/deltas")
-    graft.sources.Tables(spark, dir).events
+    val baseRows = graft.sources.Tables(spark, dir).events
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"))
-      .write.parquet(base)
+    baseRows.write.parquet(base)
     val s = eventsStream(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"))
@@ -976,8 +993,9 @@ object EventStreams {
         deltaLog.writeBatch(batch, id) // simulated post-failure replay
       },
       () => deltaLog.read(spark), checkpoint = Some(s"$root/chk")))
-    graft.sinks.Writers
-      .mergeOnReadView(spark, base, deltas, Seq("event_id"), "version")
+    graft.sinks.Writers.mergeOnReadView(
+      spark.read.schema(baseRows.schema).parquet(base), deltas,
+      Seq("event_id"), "version")
       .sortWithinPartitions(col("event_id"))
   }
 

@@ -5,6 +5,11 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreWriter
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.execution.streaming.state.{StateStore,
+  StateStoreProviderId}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Bridge between graft's custom Catalyst [[Expression]]s /
   * [[LogicalPlan]]s and the public [[Column]]/[[DataFrame]] API. Spark 4
@@ -26,4 +31,27 @@ object Interop {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** Unload and close the state-store providers of `q`'s run. A provider
+    * stays in the JVM-wide `StateStore.loadedProviders` map, holding its
+    * last state versions on the heap, until the next maintenance tick
+    * unloads it; a run that has ended will never commit to it again.
+    * The ids come from the run's last executed plan: every stateful
+    * operator's state info (which carries the run id) times each of its
+    * store names and partitions, so another run's providers are never
+    * touched. A run that executed no batch has no plan and nothing
+    * loaded. Local mode runs the executors in this JVM, where the map
+    * lives; a later run over the same checkpoint reloads the state from
+    * its files. */
+  def releaseStateStores(q: StreamingQuery): Unit =
+    Option(q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution)
+      .foreach(_.executedPlan.foreach {
+        case w: StateStoreWriter =>
+          w.stateInfo.foreach { info =>
+            for (name <- w.stateStoreNames; p <- 0 until info.numPartitions)
+              StateStore.removeFromLoadedProvidersAndClose(
+                StateStoreProviderId(info, p, name))
+          }
+        case _ =>
+      })
 }

@@ -267,6 +267,12 @@ class DupGateSpec extends AnyFunSuite {
     // the fixture's null-text rows reach the output of a per-doc op
     val t04 = perClassOps(dir).toMap.apply("t04")
     assert(t04(true).filter(col("doc_id").isin(21L, 22L)).count() === 2)
+    // d14 (and d17, which routes into it) emits one row per document: a
+    // null-text doc has no near-dup partner, so it is its own canonical
+    val d14 = Dedup.d14DedupAssign(spark, dir)
+    assert(d14.count() === 23)
+    assert(rowsOf(d14.filter(col("doc_id").isin(21L, 22L))) ===
+      Seq("[21,21,false]", "[22,22,false]"))
   }
 
   test("t08 decomposed scrub equals the full augmented-string reference") {

@@ -1,10 +1,15 @@
 package graft
 
+import java.io.File
+import java.nio.file.{Files, StandardCopyOption}
+import java.util.UUID
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{RuntimeConfig, SparkSession}
+import org.apache.spark.sql.{DataFrame, RuntimeConfig, SparkSession}
+import org.apache.spark.sql.execution.streaming.state.{StateStore,
+  StateStoreProviderId}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -24,8 +29,8 @@ object StreamRunnerProbe {
 }
 
 /** Pins the one stream runner: it sizes a stream's state only inside the
-  * stream, and no query leaves a conf behind on the session it was
-  * handed. Each test runs on its own `newSession()`, which shares the
+  * stream, no query leaves a conf behind on the session it was handed,
+  * and a run's state stores are released when the run ends. Each test runs on its own `newSession()`, which shares the
   * fixture's context but has its own conf and its own stream listeners. */
 class StreamRunnerSpec extends AnyFunSuite {
   private lazy val spark = SparkSessionFixture.spark
@@ -100,5 +105,108 @@ class StreamRunnerSpec extends AnyFunSuite {
     assert(sessions.nonEmpty)
     assert(sessions.forall(_.customMetrics.keySet.asScala
       .exists(_.startsWith("rocksdb"))), sessions.map(_.customMetrics))
+  }
+
+  /** Run ids of every stream `s` starts while `body` runs. */
+  private def runsOf(s: SparkSession)(body: => Unit): Set[UUID] = {
+    val ids = new ConcurrentLinkedQueue[UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        ids.add(e.runId): Unit
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    s.streams.addListener(listener)
+    try body finally s.streams.removeListener(listener)
+    ids.asScala.toSet
+  }
+
+  /** The providers Spark's JVM-wide state-store map holds for `runs`,
+    * read straight from the map rather than through the runner's helper. */
+  private def loadedFor(runs: Set[UUID]): Seq[StateStoreProviderId] = {
+    val f = StateStore.getClass.getDeclaredField("loadedProviders")
+    f.setAccessible(true)
+    val map = f.get(StateStore).asInstanceOf[
+      scala.collection.mutable.HashMap[StateStoreProviderId, AnyRef]]
+    map.synchronized(map.keys.toSeq).filter(id => runs(id.queryRunId))
+  }
+
+  /** `df` as the one parquet file `<dir>/<name>`. */
+  private def writeFile(df: DataFrame, dir: String, name: String): Unit = {
+    val tmp = Scratch.dir("runner_part_")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, new File(dir, name).toPath,
+      StandardCopyOption.REPLACE_EXISTING): Unit
+  }
+
+  test("a stateful query leaves none of its state stores loaded") {
+    Seq("st01_stream_window", "st04_stream_join", "st05_rocksdb_state",
+      "st08_stream_dedup", "st09_session_window", "st10_transform_state",
+      "st18_late_data").foreach { q =>
+      val s = spark.newSession()
+      val runs = runsOf(s) {
+        assert(SparkEntry.queries(q)(s, sfDir).collect().nonEmpty, q)
+      }
+      assert(runs.nonEmpty, q)
+      assert(loadedFor(runs).isEmpty, q)
+    }
+  }
+
+  test("a run whose check throws still releases its state stores") {
+    val s = spark.newSession()
+    val stream = s.readStream
+      .schema(sources.Tables.schemaOf(s, s"$sfDir/events.parquet"))
+      .option("pathGlobFilter", "events.parquet").parquet(sfDir)
+    val agg = stream.groupBy(col("event_type")).count()
+    var ran = false
+    val runs = runsOf(s) {
+      val e = intercept[IllegalStateException] {
+        EventStreams.runToTable(agg, Sink.Memory("complete"), check = { q =>
+          ran = q.lastProgress.stateOperators.nonEmpty
+          throw new IllegalStateException("check failed")
+        })
+      }
+      assert(e.getMessage === "check failed")
+    }
+    assert(ran, "the run loaded no state")
+    assert(runs.size === 1)
+    assert(loadedFor(runs).isEmpty)
+  }
+
+  test("a run over a released checkpoint reloads its state from the files") {
+    val s = spark.newSession()
+    val all = sources.Tables(s, sfDir).events
+      .select(col("ts"), col("event_type"), col("value"))
+    val cut = all
+      .selectExpr("timestamp_micros((min(unix_micros(ts)) + max(unix_micros(ts))) div 2)")
+      .head().getTimestamp(0)
+    // split by time, so no row of the second file is late for the first
+    // run's watermark, and the day window around the cut spans both files
+    def window(dir: String, ckpt: String, out: String): Seq[String] = {
+      val agg = EventStreams.windowedAgg(
+        s.readStream.schema(all.schema).parquet(dir))
+      EventStreams.runToTable(agg, Sink.Batches(
+        (b, _) => b.write.mode("append").parquet(out),
+        () => s.read.schema(agg.schema).parquet(out), checkpoint = Some(ckpt)))
+        .collect().map(_.toString).sorted.toSeq
+    }
+    val early = all.filter(col("ts") < cut)
+    val late = all.filter(col("ts") >= cut)
+    assert(early.count() > 0 && late.count() > 0)
+    val (twoRuns, oneRun) = (Scratch.dir("runner_in2_"), Scratch.dir("runner_in1_"))
+    val (ckpt, out) = (Scratch.dir("runner_ckpt_"), Scratch.dir("runner_out_"))
+    writeFile(early, twoRuns, "a.parquet")
+    val first = window(twoRuns, ckpt, out)
+    writeFile(late, twoRuns, "b.parquet")
+    val resumed = window(twoRuns, ckpt, out)
+    writeFile(early, oneRun, "a.parquet")
+    writeFile(late, oneRun, "b.parquet")
+    val single = window(oneRun, Scratch.dir("runner_ckpt1_"),
+      Scratch.dir("runner_out1_"))
+    // the first run left open windows in its state, which the second
+    // run could only have counted in full by reloading that state
+    assert(first.nonEmpty && first.size < single.size)
+    assert(resumed === single)
   }
 }

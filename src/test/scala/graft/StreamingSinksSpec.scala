@@ -361,6 +361,19 @@ class StreamingSinksSpec extends AnyFunSuite {
       === Seq(1L, 2L, 3L), "retry must replace the partial, not append")
   }
 
+  test("st13 idempotent sink reads back with the committed schema, no job") {
+    import spark.implicits._
+    val sink = EventStreams.IdempotentSink(graft.Scratch.dir("st13schema_"))
+    sink.writeBatch(Seq((1L, "a", 2.5)).toDF("id", "v", "x"), 0L)
+    sink.writeBatch(Seq((2L, "b", 3.5)).toDF("id", "v", "x"), 1L)
+    assert(JobCount.startedBy(spark)(sink.read(spark)) === 0)
+    // what the read declares is what inference over the files finds
+    assert(sink.read(spark).schema ===
+      spark.read.parquet(s"${sink.root}/batch_0").schema)
+    assert(sink.read(spark).orderBy("id").collect().map(_.getLong(0)).toSeq
+      === Seq(1L, 2L))
+  }
+
   test("k29 quantile sketch: estimates bound the exact quantile inside " +
     "one bin, and the pre-agg is KB-scale, not fact-scale") {
     val out = Writers.k29QuantileRollup(spark, sfDir).collect()

@@ -2,10 +2,7 @@ package graft
 
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,35 +14,7 @@ class TablesSpec extends AnyFunSuite {
   private lazy val spark = SparkSessionFixture.spark
   private val sfDir = SparkSessionFixture.sfDir
 
-  /** Spark jobs started on this thread while `body` runs. A marker job
-    * after `body` drains the listener bus: events reach a listener in
-    * order, so once the marker's start arrives every earlier one has. */
-  private def jobsStartedBy(body: => Any): Int = {
-    val tag = "graft.test.phase"
-    val started = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
-          case Some("body") => started.incrementAndGet(): Unit
-          case Some("marker") => drained.countDown()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "body")
-      body
-      sc.setLocalProperty(tag, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      started.get
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobsStartedBy(body: => Any): Int = JobCount.startedBy(spark)(body)
 
   test("a second Tables(spark, dir).lineitem starts no Spark job") {
     Tables(spark, sfDir).lineitem
