@@ -192,53 +192,6 @@ object Bench {
         measure(spark, sfDir, runs, name, fn, reps)
       }
     }
-    // Sustained-rate streaming benchmark: the st-family entries above are
-    // forced-batch correctness shapes whose wall time is a scheduling
-    // floor; this drives a watermarked windowed aggregation from a rate
-    // source at a FIXED offered load for a fixed horizon and reports the
-    // engine's own per-batch execution p50/p95 + achieved rows/sec — the
-    // numbers that actually regress when a streaming plan gets slower.
-    val rateBench: Option[(Double, Double, Double, Double)] =
-      if (sys.env.get("SPARK_GRAFT_SKIP_RATE").isDefined) None
-      else try {
-        import org.apache.spark.sql.functions._
-        val offered = 200000
-        val rows = spark.readStream.format("rate")
-          .option("rowsPerSecond", offered.toString)
-          .option("numPartitions", spark.sparkContext.defaultParallelism.toString)
-          .load()
-        val agg = rows
-          .withWatermark("timestamp", "2 seconds")
-          .groupBy(window(col("timestamp"), "1 second"),
-            pmod(col("value"), lit(64)).as("k"))
-          .agg(count(lit(1)).as("n"), sum(col("value")).as("s"))
-        val q = agg.writeStream.format("noop").outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger
-            .ProcessingTime("500 milliseconds"))
-          .start()
-        Thread.sleep(15000)
-        val prog = q.recentProgress.toSeq
-        q.stop()
-        // drop the cold-start batches; an empty tail means the host is
-        // too contended to say anything — report nothing, not noise
-        val steady = prog.drop(4).filter(_.numInputRows > 0)
-        if (steady.isEmpty) None
-        else {
-          val execMs = steady.flatMap(p =>
-            Option(p.durationMs.get("triggerExecution")).map(_.doubleValue()))
-            .sorted
-          def pct(s: Seq[Double], p: Double): Double =
-            if (s.isEmpty) -1.0
-            else s(math.min(s.size - 1, (p * s.size).toInt))
-          val achieved = steady.map(_.processedRowsPerSecond)
-            .filterNot(_.isNaN).sorted
-          Some((offered.toDouble, pct(achieved, 0.5),
-            pct(execMs, 0.5), pct(execMs, 0.95)))
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] rate bench FAILED: ${e.getMessage}")
-        None
-      }
 
     def fmt(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
     def qmap(f: R => String, keep: String => Boolean): String =
@@ -277,13 +230,10 @@ object Bench {
     val mx = { r: R => if (r.ok) fmt(r.max) else "-1" }
     val ex = { r: R => if (r.ok) fmt(r.streamExecSec) else "-1" }
     val streaming = results.filter(r => r.streamExecSec > 0.0).map(_.name).toSet
-    val rate = rateBench.map { case (off, ach, p50, p95) =>
-      f""","rate_bench":{"offered_rows_per_sec":$off%.0f,"achieved_rows_per_sec":$ach%.0f,"batch_exec_p50_ms":$p50%.0f,"batch_exec_p95_ms":$p95%.0f}"""
-    }.getOrElse("")
     // a filtered run must never stand in for the committed full suite
     val artifact = if (partial) "BENCH_PARTIAL.json" else "BENCH_FULL.json"
     val full =
-      f"""{"metric":"total_median_of_$reps%d","value":$total%.3f,"unit":"sec","total_min":$totalMin%.3f,"n_queries":${results.size}%d,"queries":${qmap(med, _ => true)},"queries_min":${qmap(mn, _ => true)},"queries_max":${qmap(mx, _ => true)},"stream_exec_sec":${qmap(ex, streaming)}$rate,"failed":$failed,"sf":"$sfDir"}"""
+      f"""{"metric":"total_median_of_$reps%d","value":$total%.3f,"unit":"sec","total_min":$totalMin%.3f,"n_queries":${results.size}%d,"queries":${qmap(med, _ => true)},"queries_min":${qmap(mn, _ => true)},"queries_max":${qmap(mx, _ => true)},"stream_exec_sec":${qmap(ex, streaming)},"failed":$failed,"sf":"$sfDir"}"""
     val headlineJson =
       f"""{"metric":"total_median_of_$reps%d","value":$total%.3f,"unit":"sec","total_min":$totalMin%.3f,"n_queries":${results.size}%d,"queries":${qmap(med, headline)},"n_failed":${failedNames.size}%d,"failed":$failedBrief,"full":"$artifact","sf":"$sfDir"}"""
     def write(name: String, json: String): Unit =

@@ -1,6 +1,5 @@
 package graft.integration
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Env-gated integration main for the ONE stratum the sandbox cannot
@@ -23,6 +22,7 @@ import org.apache.spark.sql.functions._
   *   export GRAFT_PORTAL_FROM=0            # optional block window
   *   export GRAFT_PORTAL_TO=100000
   *   export GRAFT_PORTAL_STREAM=1          # optional: micro-batch drain
+  *   export SPARK_GRAFT_CPUS=8             # optional, default: all cores
   *   sbt "runMain graft.integration.RealPortalIngest"
   * }}}
   * Without GRAFT_PORTAL_URL the main explains itself and exits 0 — a
@@ -43,14 +43,7 @@ object RealPortalIngest {
     val to = sys.env.get("GRAFT_PORTAL_TO").map(_.toLong)
     val stream = sys.env.get("GRAFT_PORTAL_STREAM").contains("1")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-real-portal-ingest")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.fromEnv()
     try {
       def base = {
         val r = spark.read.format("arrow-http").option("url", url)
@@ -58,17 +51,14 @@ object RealPortalIngest {
         to.fold(r2)(t => r2.option("toBlock", t.toString)).load()
       }
       if (stream) {
-        import org.apache.spark.sql.streaming.Trigger
-        val q = spark.readStream.format("arrow-http")
+        import graft.streaming.EventStreams.{runToTable, Sink}
+        runToTable(spark.readStream.format("arrow-http")
           .option("url", url)
           .option("maxBlocksPerTrigger", "8192")
           .load()
           .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_rows"))
-          .writeStream.format("memory").queryName("live_ingest")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        spark.table("live_ingest").orderBy(col("event_type")).show(100, false)
+          .agg(count(lit(1)).as("n_rows")), Sink.Memory("complete"))
+          .orderBy(col("event_type")).show(100, false)
       } else {
         println(s"-- live scan plan against $url --")
         base.groupBy(col("event_type"))

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.TextAnalysis.tokCount
 import graft.sources.Tables
 
 /** Corpus assembly — the step between a curated document set and an
@@ -30,12 +31,6 @@ object Corpus {
 
   /** Target docs per packing bucket; bounds per-task state. */
   private val BucketDocs = 1024L
-
-  /** t14's whitespace token kernel (lowercase, single-space split,
-    * empty tokens dropped) — one definition shared with the mixture
-    * tier via copy of the same expression shape. */
-  private def tokCount(c: Column): Column =
-    size(filter(split(lower(c), " "), w => length(w) > 0))
 
   /** Bucket count for an n-doc corpus; COUNT(*)-replayable in the
     * oracle (d06's exact-count geometry pattern). */

@@ -334,15 +334,12 @@ object TextAnalysis {
     * document (mirrored in the oracle) so the detector has a measurable
     * target on the synthetic corpus — exactly t08's planted-PII pattern.
     */
-  /** Probe-phrase augmentation + distinct 13-grams, shared by t10 and the
-    * p11 curation pipeline so detector and pipeline cannot drift. */
-  private[graft] def augmentedText: Column =
-    augmentedTextOf(col("text"), pmod(col("doc_id"), lit(37)) === 0)
-
-  /** The augmentation as a pure function of (text, planted-flag) — the
-    * form the exact-dup pre-collapse needs: contamination grams depend on
-    * the doc ONLY through this pair, so (md5(text), planted) is a valid
-    * collapse key for the whole gram stage. */
+  /** Probe-phrase augmentation, shared by t10 and the p11 curation
+    * pipeline so detector and pipeline cannot drift. A pure function of
+    * (text, planted-flag) — the form the exact-dup pre-collapse needs:
+    * contamination grams depend on the doc ONLY through this pair, so
+    * (md5(text), planted) is a valid collapse key for the whole gram
+    * stage. */
   private[graft] def augmentedTextOf(text: Column, planted: Column): Column =
     when(planted, concat(text, lit(" " + probePhrase))).otherwise(text)
 
@@ -455,9 +452,10 @@ object TextAnalysis {
       .withColumn("keep", col("clf_score") > 0.0)
   }
 
-  /** One whitespace token count as a Column (t13/t14/t15 share it so the
-    * three mixture/classifier ops can't drift from each other). */
-  private def tokCount(c: Column): Column =
+  /** One whitespace token count as a Column (t13/t14/t15 and the corpus
+    * tier share it so the mixture, classifier and packing ops can't drift
+    * from each other). */
+  private[operators] def tokCount(c: Column): Column =
     size(filter(split(lower(c), " "), w => length(w) > 0))
 
   /** t14 — domain-mixture report: exact per-(source, lang) doc and token

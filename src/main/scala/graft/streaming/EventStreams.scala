@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{DataType, DecimalType, StructType}
   * stream block batches and each pipeline incrementally folds them into the
   * sink (see /root/reference/src/cherry_pipelines/svm/swap_prices.py:59-116
   * batched read loop, and db.py resume semantics). Spark-first that is
-  * `readStream → event-time transforms → writeStream`, with watermarks
+  * a file stream → event-time transforms → a sink, with watermarks
   * bounding state instead of the reference's explicit batch bookkeeping.
   *
   * Both operators are expressed as a *transform on an unbounded DataFrame*
@@ -116,33 +116,66 @@ object EventStreams {
         .option("pathGlobFilter", s"$table.parquet").parquet(dir)
   }
 
-  /** Staged time-ordered chunk dirs, one per source dir per JVM — st04
-    * and st19 share one staging pass. */
-  private val chunkedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
+  /** A staged replay: its dir, its part files in admission order and the
+    * rows of each. */
+  private[graft] final case class Staged(dir: String,
+      files: Seq[java.io.File], rows: Seq[Long]) {
+    def rowsPerFile: Long = rows.sum / rows.size
+  }
 
-  /** Rows per staged chunk, recorded at staging time — the state-volume
-    * bound a chunked stateful query's batches actually see (state never
-    * exceeds one arrival chunk between watermark advances). Drives the
-    * data-derived state-store sizing in [[runToTable]]. */
-  private val chunkRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
+  /** Staged replays by key, built once per JVM: bench reps re-measure the
+    * stream, not the fixture write. */
+  private[graft] val replays =
+    new java.util.concurrent.ConcurrentHashMap[String, Staged]
 
-  /** Write `df` to `out` range-partitioned on `by`, one part file per
-    * ~`rowsPerChunk` rows (2 to `maxChunks` files), and stamp the parts
-    * with increasing mtimes in range order. A file stream admits files in
-    * mtime order, so with `maxFilesPerTrigger` every row of chunk i
-    * arrives before any row of chunk i+1. Returns the rows per chunk. */
-  private def stageOrdered(df: DataFrame, by: String, rowsPerChunk: Long,
-      maxChunks: Long, out: String): Long = {
-    val rows = df.count()
-    val n = math.max(2L, math.min(maxChunks, rows / rowsPerChunk + 1L)).toInt
-    df.repartitionByRange(n, col(by)).write.parquet(out)
-    new java.io.File(out).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) =>
+  /** One replay wave: writes its part files into the staging dir. */
+  private[graft] type Wave = String => Unit
+
+  /** A wave appending `df`, one part file per partition. */
+  private[graft] def written(df: DataFrame): Wave =
+    df.write.mode("append").parquet(_)
+
+  /** `df` range-partitioned on `by` into one part per ~`rowsPerChunk`
+    * rows (2 to `maxChunks` parts): part i holds only keys at or below
+    * part i+1's. */
+  private def inRanges(df: DataFrame, by: String, rowsPerChunk: Long,
+      maxChunks: Long): DataFrame = {
+    val n = math.max(2L, math.min(maxChunks, df.count() / rowsPerChunk + 1L))
+    df.repartitionByRange(n.toInt, col(by))
+  }
+
+  /** THE admission order of every finite replay. A file stream admits
+    * files in mtime order, so the `waves` are staged once per `key` per
+    * JVM into one pinned dir, each wave's part files after the previous
+    * wave's, and every part file is stamped with strictly increasing
+    * mtimes in (wave, part-name) order; its rows are recorded from the
+    * parquet footer. The stream admits `ceil(files / triggerCap)` files
+    * per trigger — one unless the trigger count is capped — so every row
+    * of file i arrives no later than any row of file i+1. */
+  private[graft] def replay(spark: SparkSession, key: String,
+      triggerCap: Int = Int.MaxValue)(waves: => Seq[Wave]): DataFrame = {
+    val staged = replays.computeIfAbsent(key, { _ =>
+      val out = graft.Scratch.pinnedDir("replay_") + "/parts"
+      val files = waves.foldLeft(Vector.empty[java.io.File]) { (done, wave) =>
+        wave(out)
+        done ++ Option(new java.io.File(out).listFiles()).toSeq.flatten
+          .filter(f => f.getName.startsWith("part-") && !done.contains(f))
+          .sortBy(_.getName)
+      }
+      files.zipWithIndex.foreach { case (f, i) =>
         f.setLastModified(1000L * (i + 1)): Unit }
-    rows / n
+      val conf = spark.sparkContext.hadoopConfiguration
+      Staged(out, files, files.map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toURI), conf))
+        try r.getRecordCount finally r.close()
+      })
+    })
+    val perTrigger =
+      math.max(1, math.ceil(staged.files.size.toDouble / triggerCap).toInt)
+    spark.readStream.schema(graft.sources.Tables.schemaOf(spark, staged.dir))
+      .option("maxFilesPerTrigger", perTrigger.toString).parquet(staged.dir)
   }
 
   /** The PRODUCTION arrival shape for stream-stream joins: events staged
@@ -157,38 +190,26 @@ object EventStreams {
     * divides the quadratic by the chunk count. Range staging guarantees
     * every chunk-i row precedes every chunk-i+1 row, so nothing is ever
     * late: the emitted set equals the single-batch answer and the
-    * st04/st19 batch oracles hold unchanged. Monotone forced mtimes pin
-    * the file-stream admission order (the st18 technique).
+    * st04/st19 batch oracles hold unchanged.
+    *
+    * `triggerCap` bounds the NUMBER of micro-batches, not the chunking:
+    * the staged files are shared (one repartition pass serves every
+    * chunked twin), and a query whose per-key state is O(1) — the
+    * funnel's three longs, the transition matrix's one string — gains
+    * nothing from fine admission while paying the ~1 s scheduling floor
+    * per trigger (64 chunks at sf100 = a 64 s floor, the whole
+    * stream-vs-batch gap). Admitting k consecutive ts-range files per
+    * trigger preserves global event-time order across triggers, so the
+    * incremental folds stay exactly batch-equal.
     */
-  private def eventsStreamChunked(spark: SparkSession, dir: String,
-      triggerCap: Int = Int.MaxValue): DataFrame = {
-    val staged = chunkedCache.computeIfAbsent(dir, { d =>
-      val out = graft.Scratch.pinnedDir("stchunks_") + "/events"
-      // chunk size trades per-trigger fixed cost (planning, 2 source
-      // reads, state commit) against in-batch state growth; with the
-      // bucketed equi-key the probe cost is bucket-local, so chunks are
-      // sized for state MEMORY (~2M rows/side), not probe fan-out
-      chunkRowsCache.put(d, stageOrdered(graft.sources.Tables(spark, d).events,
-        "ts", rowsPerChunk = 2000000L, maxChunks = 64L, out)): Unit
-      out
-    })
-    val schema = graft.sources.Tables.schemaOf(spark, staged)
-    // triggerCap bounds the NUMBER of micro-batches, not the chunking:
-    // the staged files are shared (one repartition pass serves every
-    // chunked twin), and a query whose per-key state is O(1) — the
-    // funnel's three longs, the transition matrix's one string — gains
-    // nothing from fine admission while paying the ~1 s scheduling
-    // floor per trigger (64 chunks at sf100 = a 64 s floor, the whole
-    // stream-vs-batch gap). Admitting k consecutive ts-range files per
-    // trigger preserves global event-time order across triggers, so
-    // the incremental folds stay exactly batch-equal.
-    val nParts = new java.io.File(staged).listFiles()
-      .count(_.getName.startsWith("part-"))
-    val perTrigger =
-      math.max(1, math.ceil(nParts.toDouble / triggerCap).toInt)
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", perTrigger.toString).parquet(staged)
-  }
+  private[graft] def eventsStreamChunked(spark: SparkSession, dir: String,
+      triggerCap: Int = Int.MaxValue): DataFrame =
+    // chunk size trades per-trigger fixed cost (planning, 2 source reads,
+    // state commit) against in-batch state growth; with the bucketed
+    // equi-key the probe cost is bucket-local, so chunks are sized for
+    // state MEMORY (~2M rows/side), not probe fan-out
+    replay(spark, s"$dir#chunks", triggerCap)(Seq(written(inRanges(
+      graft.sources.Tables(spark, dir).events, "ts", 2000000L, 64L))))
 
   /** eventsStreamChunked plus one trailing SENTINEL file — a single row
     * with user_id = -1 and ts = max(ts) + 4 h, admitted last. When it
@@ -198,38 +219,23 @@ object EventStreams {
     * finite-replay streaming harness needs; a real deployment's
     * watermark advances the same way because ingestion never stops).
     * The chunk files are HARDLINKED from the shared staging — one
-    * repartition pass serves st04/st19/st09 — and the sentinel lives
-    * only in this directory, so join queries never see it. */
-  private def eventsStreamChunkedFlushed(spark: SparkSession,
+    * repartition pass serves st04/st19/st09, and a link shares its
+    * file's mtime — and the sentinel lives only in this replay, so join
+    * queries never see it. */
+  private[graft] def eventsStreamChunkedFlushed(spark: SparkSession,
       dir: String): DataFrame = {
     eventsStreamChunked(spark, dir) // ensure the shared staging exists
-    val base = chunkedCache.get(dir)
-    val staged = chunkedCache.computeIfAbsent(dir + "#flushed", { _ =>
-      val out = graft.Scratch.pinnedDir("stflush_") + "/events"
-      new java.io.File(out).mkdirs()
-      val parts = new java.io.File(base).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      parts.foreach { f =>
-        java.nio.file.Files.createLink(
-          new java.io.File(out, f.getName).toPath, f.toPath): Unit
-      }
-      val ev = graft.sources.Tables(spark, dir).events
-      val sentinel = ev.orderBy(col("ts").desc).limit(1)
+    replay(spark, s"$dir#flushed")(Seq(
+      out => {
+        new java.io.File(out).mkdirs()
+        replays.get(s"$dir#chunks").files.foreach(f =>
+          java.nio.file.Files.createLink(
+            new java.io.File(out, f.getName).toPath, f.toPath): Unit)
+      },
+      written(graft.sources.Tables(spark, dir).events
+        .orderBy(col("ts").desc).limit(1)
         .withColumn("ts", col("ts") + expr("INTERVAL 4 HOURS"))
-        .withColumn("user_id", lit(-1L))
-      val tmp = graft.Scratch.dir("stflush_sent_") + "/row"
-      sentinel.coalesce(1).write.parquet(tmp)
-      val sf = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      val dst = new java.io.File(out, "zz-flush.parquet")
-      java.nio.file.Files.move(sf.toPath, dst.toPath)
-      // mtime admission order: chunks as staged (1000*(i+1)), sentinel last
-      dst.setLastModified(1000L * (parts.length + 2)): Unit
-      out
-    })
-    val schema = graft.sources.Tables.schemaOf(spark, staged)
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staged)
+        .withColumn("user_id", lit(-1L)).coalesce(1))))
   }
 
   /** Where [[runToTable]] puts a stream's rows. */
@@ -707,7 +713,7 @@ object EventStreams {
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"))
     runToTable(sessions, Sink.Files,
-      stateRows = chunkRowsCache.getOrDefault(dir, 0L))
+      stateRows = replays.get(s"$dir#chunks").rowsPerFile)
       .filter(col("user_id") >= 0)
       .select(col("user_id"),
         col("session_window.start").as("session_start"),
@@ -1001,11 +1007,11 @@ object EventStreams {
 
   /** st18 — the WATERMARK contract under genuinely LATE data, append
     * mode (st01 watermarks but nothing arrives late; here lateness is
-    * staged). Three arrival waves, each its own micro-batch via
-    * maxFilesPerTrigger=1 and forced file mtimes: the old on-time bulk,
-    * the frontier (its watermark finalizes and EVICTS the old windows at
-    * batch end), then old stragglers (every 10th old event) arriving
-    * after their windows were finalized. Spark-4.1's measured contract,
+    * staged). Three arrival waves of a [[replay]], each file its own
+    * micro-batch: the old on-time bulk, the frontier (its watermark
+    * finalizes and EVICTS the old windows at batch end), then old
+    * stragglers (every 10th old event) arriving after their windows
+    * were finalized. Spark-4.1's measured contract,
     * which the oracle mirrors exactly: a late row is dropped iff its
     * window was already evicted (window end ≤ the watermark that drove
     * the last eviction, here max(old on-time ts) − 30 min); a late row
@@ -1023,40 +1029,19 @@ object EventStreams {
     val cut = lit("2024-01-25") // the staged "now" between bulk and frontier
     val isOld = col("ts") < cut
     val isLate = isOld && pmod(col("event_id"), lit(10)) === 0
-    // three arrival waves, ordered by forced mtime: the old on-time
-    // bulk, the frontier (advances the watermark and finalizes the old
-    // windows), then the stragglers — which now face finalized windows.
-    // The bulk wave is RANGE-partitioned on ts into a few files whose
-    // stamps follow range order (part-0000N is the N-th ts range): the
-    // write parallelizes across tasks, and because each later bulk
-    // micro-batch holds only LATER timestamps, the advancing watermark
-    // can never drop an on-time bulk row (randomly-split bulk files
-    // would — rows older than a previous batch's max(ts)−delay die).
-    // The staging is deterministic, so it is built once per corpus per
-    // JVM and reused across invocations (bench reps re-measure the
-    // STREAM, not the fixture write).
-    val src = chunkedCache.computeIfAbsent(dir + "#st18", { _ =>
-      val out = graft.Scratch.pinnedDir("st18_") + "/src"
-      val p = new org.apache.hadoop.fs.Path(out)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def stage(df: DataFrame, stamp: Long): Unit = {
-        val before = if (fs.exists(p)) fs.listStatus(p)
-          .map(_.getPath.getName).toSet else Set.empty[String]
-        df.write.mode("append").parquet(out)
-        fs.listStatus(p)
-          .filter(f => f.getPath.getName.endsWith(".parquet") &&
-            !before(f.getPath.getName))
-          .sortBy(_.getPath.getName).zipWithIndex
-          .foreach { case (f, i) => fs.setTimes(f.getPath, stamp + i, -1) }
-      }
-      stage(ev.filter(isOld && pmod(col("event_id"), lit(10)) =!= 0)
-        .repartitionByRange(4, col("ts")), 1000000L)
-      stage(ev.filter(!isOld).coalesce(1), 2000000L)
-      stage(ev.filter(isLate).coalesce(1), 3000000L)
-      out
-    })
-    val s = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
+    // three arrival waves: the old on-time bulk, the frontier (advances
+    // the watermark and finalizes the old windows), then the stragglers
+    // — which now face finalized windows. The bulk wave is RANGE-
+    // partitioned on ts into a few files (part-0000N is the N-th ts
+    // range): the write parallelizes across tasks, and because each
+    // later bulk micro-batch holds only LATER timestamps, the advancing
+    // watermark can never drop an on-time bulk row (randomly-split bulk
+    // files would — rows older than a previous batch's max(ts)−delay die).
+    val s = replay(spark, s"$dir#st18")(Seq(
+      written(ev.filter(isOld && pmod(col("event_id"), lit(10)) =!= 0)
+        .repartitionByRange(4, col("ts"))),
+      written(ev.filter(!isOld).coalesce(1)),
+      written(ev.filter(isLate).coalesce(1))))
     val agg = s.withWatermark("ts", "30 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -1084,10 +1069,9 @@ object EventStreams {
     * the already-published packs instead of repacking the corpus. State
     * per bucket is two longs (open pack seq + remaining room): O(buckets),
     * corpus-independent — contrast st09, whose in-flight state is
-    * corpus-proportional. Arrival order is the packer's contract: the
-    * staging pass range-partitions by doc_id with forced mtimes (the
-    * st18 admission technique) so chunk i's docs all precede chunk
-    * i+1's, and the per-batch group iterator sorts its own slice —
+    * corpus-proportional. Arrival order is the packer's contract: a
+    * [[replay]] of doc_id-range chunks, so chunk i's docs all precede
+    * chunk i+1's, and the per-batch group iterator sorts its own slice —
     * exactly the replayable order a Kafka-partition-per-bucket feed
     * gives. The emitted assignment set is IDENTICAL to the batch
     * packer's, so c02's recursive-CTE oracle verifies the stream run.
@@ -1095,15 +1079,9 @@ object EventStreams {
   def st23StreamPack(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.OutputMode
-    val staged = chunkedCache.computeIfAbsent(dir + "#pack", { _ =>
-      val out = graft.Scratch.pinnedDir("stpack_") + "/docs"
-      stageOrdered(graft.operators.Corpus.packInput(spark, dir), "doc_id",
-        rowsPerChunk = 250000L, maxChunks = 16L, out): Unit
-      out
-    })
-    val schema = graft.sources.Tables.schemaOf(spark, staged)
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staged).as[PackDoc]
+    val src = replay(spark, s"$dir#pack")(Seq(written(inRanges(
+      graft.operators.Corpus.packInput(spark, dir), "doc_id", 250000L, 16L))))
+      .as[PackDoc]
     val assigned = src.groupByKey(_.bucket)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
@@ -1135,23 +1113,16 @@ object EventStreams {
     * O(#octaves) ≈ 50 longs total at any corpus size, the minimal-
     * state end of the packer ladder (st23 keeps two longs per bucket,
     * this keeps one per octave). Cost/octave/capacity derive from the
-    * SHARED c11Input definition, arrival order is doc_id-range chunk
-    * staging with forced mtimes (st23's admission technique), and the
-    * closed-form assignment ((seen − 1) div capacity) is exactly the
+    * SHARED c11Input definition, arrival order is st23's doc_id-range
+    * [[replay]], and the closed-form assignment ((seen − 1) div capacity) is exactly the
     * batch packer's — so c11's naive-window oracle verifies the stream
     * run verbatim. */
   def st28StreamLengthBatches(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.OutputMode
-    val staged = chunkedCache.computeIfAbsent(dir + "#lenb", { _ =>
-      val out = graft.Scratch.pinnedDir("stlenb_") + "/docs"
-      stageOrdered(graft.operators.Corpus.c11Input(spark, dir), "doc_id",
-        rowsPerChunk = 250000L, maxChunks = 16L, out): Unit
-      out
-    })
-    val schema = graft.sources.Tables.schemaOf(spark, staged)
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staged).as[LenDoc]
+    val src = replay(spark, s"$dir#lenb")(Seq(written(inRanges(
+      graft.operators.Corpus.c11Input(spark, dir), "doc_id", 250000L, 16L))))
+      .as[LenDoc]
     val assigned = src.groupByKey(_.pad_len)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
@@ -1355,12 +1326,28 @@ object EventStreams {
       |      FROM events)
       |GROUP BY user_id ORDER BY user_id""".stripMargin
 
+  /** The plain event projection: st08's dedup and st13's idempotent sink
+    * must both land on it. */
+  private val projectionOracle =
+    """SELECT event_id, user_id, event_type, value
+      |FROM events ORDER BY event_id""".stripMargin
+
+  /** The decoded Transfer logs st07 emits, and st14 through its sink. */
+  private val decodeOracle =
+    """SELECT event_id,
+      |  CASE WHEN event_id % 11 <> 0 THEN printf('%040x', user_id) END
+      |    AS from_addr,
+      |  CASE WHEN event_id % 11 <> 0 THEN printf('%040x', user_id + 1000)
+      |    END AS to_addr,
+      |  CASE WHEN event_id % 11 <> 0 THEN
+      |    CAST(CAST(FLOOR(value * 100) AS BIGINT) AS VARCHAR)
+      |  END AS amount
+      |FROM events ORDER BY event_id""".stripMargin
+
   val oracle: Map[String, String] = Map(
     // st13: double-delivered batches must still equal the plain batch
     // projection — any non-idempotence doubles rows and fails the compare
-    "st13_idempotent_sink" ->
-      """SELECT event_id, user_id, event_type, value
-        |FROM events ORDER BY event_id""".stripMargin,
+    "st13_idempotent_sink" -> projectionOracle,
     // st18: a straggler counts iff its window outlived the frontier
     // batch's eviction (end > wm1); emitted windows are those the final
     // watermark passed (end ≤ wm2) — the engine's measured late-data
@@ -1460,15 +1447,12 @@ object EventStreams {
         |  CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
         |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin,
     "st02_stream_state" -> sessionizeOracle,
-    "st03_stream_sink" ->
-      """SELECT event_id, user_id, event_type, value * 2.0 AS boosted
-        |FROM events ORDER BY event_id""".stripMargin,
+    // st03: the streaming fold lands where k03's batch pipeline lands
+    "st03_stream_sink" -> graft.pipeline.Incremental.oracle("k03_pipeline"),
     "st06_stream_jdbc" ->
       """SELECT event_id, user_id, event_type, value * 2.0 AS boosted
         |FROM events WHERE event_id % 10 = 0 ORDER BY event_id""".stripMargin,
-    "st08_stream_dedup" ->
-      """SELECT event_id, user_id, event_type, value
-        |FROM events ORDER BY event_id""".stripMargin,
+    "st08_stream_dedup" -> projectionOracle,
     "st09_session_window" ->
       """WITH marked AS (
         |  SELECT user_id, ts,
@@ -1507,26 +1491,8 @@ object EventStreams {
         |ORDER BY event_id""".stripMargin,
     // st14 composes st07's decode with st13's sink and k13's publish —
     // same decode oracle; the composition is what's under test
-    "st14_ingest_publish" ->
-      """SELECT event_id,
-        |  CASE WHEN event_id % 11 <> 0 THEN printf('%040x', user_id) END
-        |    AS from_addr,
-        |  CASE WHEN event_id % 11 <> 0 THEN printf('%040x', user_id + 1000)
-        |    END AS to_addr,
-        |  CASE WHEN event_id % 11 <> 0 THEN
-        |    CAST(CAST(FLOOR(value * 100) AS BIGINT) AS VARCHAR)
-        |  END AS amount
-        |FROM events ORDER BY event_id""".stripMargin,
-    "st07_stream_decode" ->
-      """SELECT event_id,
-        |  CASE WHEN event_id % 11 <> 0 THEN printf('%040x', user_id) END
-        |    AS from_addr,
-        |  CASE WHEN event_id % 11 <> 0 THEN printf('%040x', user_id + 1000)
-        |    END AS to_addr,
-        |  CASE WHEN event_id % 11 <> 0 THEN
-        |    CAST(CAST(FLOOR(value * 100) AS BIGINT) AS VARCHAR)
-        |  END AS amount
-        |FROM events ORDER BY event_id""".stripMargin,
+    "st14_ingest_publish" -> decodeOracle,
+    "st07_stream_decode" -> decodeOracle,
     "st04_stream_join" ->
       """SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
         |  c.ts AS c_ts, p.ts AS p_ts

@@ -85,8 +85,7 @@ class SessionSpec extends AnyFunSuite {
       .directory(dir)
       .redirectError(log)
     pb.environment().putAll(Map("SPARK_GRAFT_SF_DIR" -> sfDir,
-      "SPARK_GRAFT_CPUS" -> "2", "SPARK_GRAFT_BENCH_REPS" -> "1",
-      "SPARK_GRAFT_SKIP_RATE" -> "1").asJava)
+      "SPARK_GRAFT_CPUS" -> "2", "SPARK_GRAFT_BENCH_REPS" -> "1").asJava)
     val proc = pb.start()
     val stdout = new String(proc.getInputStream.readAllBytes(), "UTF-8")
     assert(proc.waitFor() === 0, Files.readString(log.toPath))
