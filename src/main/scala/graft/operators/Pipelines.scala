@@ -14,55 +14,53 @@ import graft.sources.Tables
   * actually runs.
   *
   * Because each stage is declarative, Catalyst fuses the whole pipeline
-  * into one optimized plan: filters reach the scan, the two window stages
-  * share one hash-partition-by-user exchange, and the derived dictionary
-  * join broadcasts. The reference executes these as 5-6 separate
-  * materialized dataframe steps; here the engine sees the whole program.
+  * into one optimized plan: filters reach the scan, and each pipeline
+  * reads `events` once — p01's per-user dictionary rides its adjacency
+  * window, p02's two quote branches share one window — behind one
+  * hash-partition-by-user exchange. The reference executes these as 5-6
+  * separate materialized dataframe steps; here the engine sees the whole
+  * program.
   */
 object Pipelines {
 
   /** p01 — orca_swaps twin (/root/reference/src/cherry_pipelines/svm/
-    * orca_swaps.py): decode two instruction variants to a common schema and
-    * union (py:293-345), drop memo-style rows (py:234-237), match each swap
-    * to its adjacent transfer at the next instruction index (py:402-436 —
-    * here a lead() window, one shuffle instead of a self-join), remap
-    * in/out by direction (py:373-400), then enrich from a derived
-    * dictionary (token_decimals analog) via broadcast and aggregate per
-    * user with a decimal-exact sum.
+    * orca_swaps.py): decode two instruction variants to a common schema
+    * (py:293-345 — here one CASE on event_type over one scan instead of a
+    * union of two decodes; the JSON decode still runs on purchase rows
+    * only), drop memo-style rows (py:234-237), match each swap to its
+    * adjacent transfer at the next instruction index (py:402-436 — here a
+    * lead() window, one shuffle instead of a self-join), remap in/out by
+    * direction (py:373-400), and aggregate per user with a decimal-exact
+    * sum. The per-user swap count (the token_decimals dictionary analog)
+    * is a whole-partition count over the same window spec, so it rides
+    * the adjacency Window operator instead of a second aggregate and a
+    * broadcast join. Rows with a null user_id never reach the answer.
     */
   def p01SwapsPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables(spark, dir).events
-    // stage 1: variant decode + union
-    val v1 = e.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"),
-        col("value").as("amount"), lit("v1").as("variant"))
-    val v2 = e.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"),
-        get_json_object(col("props"), "$.k").cast("double").as("amount"),
-        lit("v2").as("variant"))
-    val swaps = v1.unionByName(v2)
-    // stage 2: adjacency — the "transfer" is the user's next decoded event
+    val isV1 = col("event_type") === "click"
+    val swaps = Tables(spark, dir).events
+      .filter(col("event_type").isin("click", "purchase") &&
+        col("user_id").isNotNull)
+      .select(col("event_id"), col("user_id"), col("ts"), isV1.as("a_to_b"),
+        when(isV1, col("value"))
+          .otherwise(get_json_object(col("props"), "$.k").cast("double"))
+          .as("amount"))
+    // adjacency — the "transfer" is the user's next decoded event; the
+    // dictionary count spans the whole partition of the same spec
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val matched = swaps
       .select(col("*"), lead(col("amount"), 1).over(w).as("next_amount"),
-        lead(col("variant"), 1).over(w).as("next_variant"))
+        count(lit(1)).over(w.rowsBetween(Window.unboundedPreceding,
+          Window.unboundedFollowing)).as("n_swaps"))
       .filter(col("next_amount").isNotNull)
-    // stage 3: direction-dependent in/out remap
-    val aToB = col("variant") === "v1"
-    val directed = matched.select(col("event_id"), col("user_id"),
-      when(aToB, col("amount")).otherwise(col("next_amount")).as("in_amount"),
-      when(aToB, col("next_amount")).otherwise(col("amount")).as("out_amount"))
-    // stage 4: derived per-user dictionary (token_decimals shape) broadcast
-    // back onto the fact — tiny even at 100 TB (one row per user/mint)
-    val dict = swaps.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_swaps"))
-    directed
-      .join(broadcast(dict), Seq("user_id"))
+    // direction-dependent in/out remap
+    val aToB = col("a_to_b")
+    matched
       .groupBy(col("user_id"), col("n_swaps"))
-      .agg(sum(col("in_amount").cast(DecimalType(38, 6))).cast("double")
-          .as("sum_in"),
-        sum(col("out_amount").cast(DecimalType(38, 6))).cast("double")
-          .as("sum_out"),
+      .agg(sum(when(aToB, col("amount")).otherwise(col("next_amount"))
+            .cast(DecimalType(38, 6))).cast("double").as("sum_in"),
+        sum(when(aToB, col("next_amount")).otherwise(col("amount"))
+            .cast(DecimalType(38, 6))).cast("double").as("sum_out"),
         count(lit(1)).as("n_matched"))
       .orderBy(col("user_id"))
   }
@@ -72,7 +70,8 @@ object Pipelines {
     * (py:189-218, the 20-slot VWAP — here RANGE BETWEEN, linear scan after
     * one shuffle instead of the reference's O(n·w) join_where), post-window
     * threshold filter (py:202), Decimal(38,9) ratio math (py:203-217), and
-    * the two-quote union (py:264-303 SOL/USD price branches).
+    * the two quote branches (py:264-303 SOL/USD price branches) as one
+    * filter and one CASE over the one window, not a union of two plans.
     */
   def p02VwapPipeline(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir).events
@@ -85,16 +84,16 @@ object Pipelines {
       sum(col("value").cast(DecimalType(38, 6))).over(w).cast("double")
         .as("trail_sum"),
       count(col("value")).over(w).as("trail_n"))
-    // two quote branches (SOL-quoted / USD-quoted analog), normalized and
-    // unioned; the ratio is the Decimal(38,9) price
-    def branch(t: String, quote: String): DataFrame =
-      windowed.filter(col("event_type") === t)
-        .filter(col("trail_sum") > 100.0)
-        .select(col("user_id"), col("event_id"), col("ts_sec"),
-          lit(quote).as("quote"),
-          (col("trail_sum") / col("trail_n")).cast(DecimalType(38, 9))
-            .cast("double").as("vwap"))
-    branch("click", "SOL").unionByName(branch("purchase", "USD"))
+    // the branch filter stays above the window: the trailing sum covers
+    // every event type; the ratio is the Decimal(38,9) price
+    windowed
+      .filter(col("event_type").isin("click", "purchase") &&
+        col("trail_sum") > 100.0)
+      .select(col("user_id"), col("event_id"), col("ts_sec"),
+        when(col("event_type") === "click", "SOL").otherwise("USD")
+          .as("quote"),
+        (col("trail_sum") / col("trail_n")).cast(DecimalType(38, 9))
+          .cast("double").as("vwap"))
       .orderBy(col("quote"), col("user_id"), col("event_id"))
   }
 

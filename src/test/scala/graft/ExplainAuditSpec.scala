@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, Relational, Similarity}
+import graft.operators.{Dedup, Pipelines, Relational, Similarity}
 
 /** Plan audits: SURVEY.md §6's scale claims, enforced by tests.
   *
@@ -555,6 +555,36 @@ class ExplainAuditSpec extends AnyFunSuite {
     assert(p.contains("Expand"), s"multi-distinct lost the Expand plan:\n$p")
     assert(countOf(p, "Location: InMemoryFileIndex") === 1,
       s"multi-distinct re-scanned the fact table:\n$p")
+  }
+
+  test("p01: one events scan; the dictionary rides the adjacency window") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val p = plan(Pipelines.p01SwapsPipeline(spark, sfDir))
+    assert(countOf(p, "Location: InMemoryFileIndex") === 1 &&
+      p.contains("events.parquet"), s"p01 re-scanned events:\n$p")
+    assert(!p.contains("Union") && !p.contains("BroadcastExchange") &&
+      !p.contains("Join"), s"p01 planned a union or a dictionary join:\n$p")
+    val sp = withoutAqe(
+      Pipelines.p01SwapsPipeline(spark, sfDir).queryExecution.executedPlan)
+    def hashExchanges(n: SparkPlan) = n.collect {
+      case s: ShuffleExchangeExec
+          if s.outputPartitioning.isInstanceOf[HashPartitioning] => s
+    }
+    val windows = sp.collect { case w: WindowExec => w }
+    assert(windows.size === 1, s"expected one Window:\n$sp")
+    assert(hashExchanges(sp).size === 1 &&
+      hashExchanges(windows.head.child).size === 1,
+      s"expected exactly one hash exchange, below the Window:\n$sp")
+  }
+
+  test("p02: both quote branches read one scan through one Window") {
+    val p = plan(Pipelines.p02VwapPipeline(spark, sfDir))
+    assert(countOf(p, "Location: InMemoryFileIndex") === 1,
+      s"p02 re-scanned events:\n$p")
+    assert(countOf(p, "Window (") === 1, s"expected one Window:\n$p")
+    assert(!p.contains("Union"), s"p02 unions its quote branches:\n$p")
   }
 
   test("d12: index-path candidate join broadcasts the batch — history" +

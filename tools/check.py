@@ -4,11 +4,13 @@
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
 
 Reads <verifyOutDir>/oracle_sql.json, runs each oracle SQL in DuckDB over
-the sf tables, loads the Spark-written parquet for the same key, sorts
+the sf tables (each `<sfDir>/<t>.parquet` a file or a directory of part
+files), loads the Spark-written parquet for the same key, sorts
 columns by name and rows by all columns, and diffs. Exit 1 on any mismatch.
 """
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -70,9 +72,11 @@ def main():
     only = set(sys.argv[3:])
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+        # a table is one file, or a directory of part files (make_sf1.py)
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracle = json.load(f)
     failures = 0
@@ -123,7 +127,6 @@ def main():
             print(f"OK   {name}: {len(want)} rows x {len(want.columns)} cols")
     # keys in queries but absent from oracle are rows-only: check rows>0
     import glob
-    import os
     for d in sorted(glob.glob(f"{out_dir}/*/")):
         name = os.path.basename(d.rstrip("/"))
         if name in oracle:
