@@ -18,9 +18,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   *    BENCH_HEADLINE.json.
   *  - `Bench <query> ...` benches only the named queries and writes
   *    BENCH_PARTIAL.json, never the full-suite files.
-  *  - `Bench --explain <query> [formatted|extended]` prints the query's
-  *    physical plan at the SF dir: AQE decisions, join strategies and
-  *    bucketed-scan recognition at rehearsal row counts.
+  *  - `Bench --explain <query> [formatted|extended]` runs the query at the
+  *    SF dir, discarding its rows, and prints its final adaptive plan: AQE
+  *    decisions, join strategies and bucketed-scan recognition at
+  *    rehearsal row counts.
   *  - `Bench --profile <query> [reps]` runs the query `reps` times (default
   *    1) and prints, on stderr, each rep's wall time, the used heap after a
   *    full GC at the end of the rep (outside the wall), and each
@@ -57,7 +58,13 @@ object Bench {
       case "--explain" :: query :: rest if rest.size <= 1 =>
         val fn = entry(query)
         val how = ExplainMode.fromString(rest.headOption.getOrElse("formatted"))
-        spark => fn(spark, sfDir).queryExecution.explainString(how)
+        spark => {
+          // run the Dataset's own plan, not a write's copy of it, so the
+          // explain below shows the plan AQE settled on
+          val qe = fn(spark, sfDir).queryExecution
+          qe.toRdd.foreach(_ => ())
+          qe.explainString(how)
+        }
       case "--profile" :: query :: rest if rest.size <= 1 =>
         val fn = entry(query)
         val reps = rest.headOption.fold(1)(_.toInt)

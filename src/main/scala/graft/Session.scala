@@ -58,8 +58,9 @@ object Session {
     "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
   )
 
-  /** A `local[cores]` session with `shufflePartitions` shuffle partitions
-    * and the [[geometry]] confs, logging at WARN. */
+  /** A `local[cores]` session with `shufflePartitions` shuffle partitions,
+    * the [[geometry]] confs and graft's planner strategies, logging at
+    * WARN. */
   def apply(cores: Int, shufflePartitions: Int): SparkSession = {
     val spark = geometry.foldLeft(SparkSession.builder()) {
       case (b, (k, v)) => b.config(k, v)
@@ -67,6 +68,7 @@ object Session {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    plans.SmallSortStrategy.ensureRegistered(spark)
     spark
   }
 

@@ -2,10 +2,12 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
-  /** [[Session.contract]], enforced on whatever session the driver hands
-    * us, not just in our own builders. */
-  private def contract(spark: SparkSession): Unit =
+  /** [[Session.contract]] and graft's planner strategies, enforced on
+    * whatever session the driver hands us, not just in our own builders. */
+  private def contract(spark: SparkSession): Unit = {
     Session.contract.foreach { case (k, v) => spark.conf.set(k, v) }
+    plans.SmallSortStrategy.ensureRegistered(spark)
+  }
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     contract(spark)

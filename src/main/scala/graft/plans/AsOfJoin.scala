@@ -57,11 +57,12 @@ object AsOfJoinStrategy extends SparkStrategy {
 }
 
 /** Entry point for `spark.sql.extensions=graft.plans.GraftExtensions`:
-  * planner strategy for the native as-of join + every graft function
-  * exposed to SQL text. */
+  * planner strategies for the native as-of join and the small global sort
+  * + every graft function exposed to SQL text. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => SmallSortStrategy)
     graft.functions.sqlFunctions.foreach { case (name, builder) =>
       ext.injectFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),
@@ -199,7 +200,5 @@ object AsOf {
   /** Idempotent strategy registration for sessions not built with
     * [[GraftExtensions]]. */
   def ensureRegistered(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    register(spark, AsOfJoinStrategy)
 }

@@ -265,7 +265,10 @@ class ExplainAuditSpec extends AnyFunSuite {
       s"expected exactly one hash exchange (blocks only):\n$p")
     // no range exchange: a global orderBy's sampling job re-executes the
     // whole join lineage (measured 2× the query at sf10); the merge joins
-    // themselves leave partitions physically sorted by (slot, idx)
+    // themselves leave partitions physically sorted by (slot, idx).
+    // SmallSortStrategy does not lift this: it sorts on one partition only
+    // an input AQE measured as small, so a fact-scale global orderBy here
+    // would still be range-sorted, sampling job included
     assert(countOf(p, "Arguments: rangepartitioning") === 0,
       s"expected no range exchange (part-sorted by the merge joins):\n$p")
     // the sf100 ENOSPC fix's contract: force the joins to sort-merge

@@ -45,6 +45,8 @@ class SessionSpec extends AnyFunSuite {
     val plan = Bench.mode(List("--explain", "q01_agg_filter"), sfDir, dir)(spark)
     assert(plan.contains("== Physical Plan =="), plan)
     assert(plan.contains("Scan parquet"), plan)
+    // the plan AQE settled on after running the query, not the initial one
+    assert(plan.contains("isFinalPlan=true"), plan)
     assert(dir.toFile.list().isEmpty, "--explain writes no artifact")
   }
 
