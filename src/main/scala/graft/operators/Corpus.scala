@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.TextAnalysis.tokCount
+import graft.operators.TextAnalysis.{tokCount, words}
 import graft.sources.Tables
 
 /** Corpus assembly — the step between a curated document set and an
@@ -24,10 +24,11 @@ import graft.sources.Tables
   */
 object Corpus {
 
-  /** Tokens-per-sequence budget for both packers. Real values are
-    * 2k-8k; 256 keeps the test corpora's pack populations interesting
-    * (docs average ~30 words, so ~8 docs/pack). */
-  private val T = 256L
+  /** Tokens-per-sequence budget for every packer, batch and stream
+    * (c01/c02 and st23). Real values are 2k-8k; 256 keeps the test
+    * corpora's pack populations interesting (docs average ~30 words, so
+    * ~8 docs/pack). */
+  private[graft] val T = 256L
 
   /** Target docs per packing bucket; bounds per-task state. */
   private val BucketDocs = 1024L
@@ -163,8 +164,7 @@ object Corpus {
     */
   def c04TokenBudgetMix(spark: SparkSession, dir: String): DataFrame = {
     val toks = tokCount(col("text"))
-    val uniq = size(array_distinct(filter(split(lower(col("text")), " "),
-      w => length(w) > 0)))
+    val uniq = size(array_distinct(words(lower(col("text")))))
     val scored = Tables(spark, dir).documents
       .select(col("source"), col("lang"), col("doc_id"),
         toks.as("toks"), uniq.as("uniq"))

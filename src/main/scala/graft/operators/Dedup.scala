@@ -18,16 +18,6 @@ import graft.sources.Tables
   * baselines the LSH variants are validated against, bounded to a key
   * subset so the quadratic stays a constant.
   */
-/** Output modes for the near-dup operators (d02/d06): [[DedupPairs]]
-  * is the AUDIT artifact — every verified near-dup pair, quadratic in
-  * dup-group size by contract; [[DedupAssignment]] is the PRODUCTION
-  * 100 TB shape — one (doc, canonical, is_dup) row per document,
-  * linear in the corpus at any dup density (d14/d15's keep-first
-  * rule). Same banding machinery underneath either way. */
-sealed trait DedupOutput
-case object DedupPairs extends DedupOutput
-case object DedupAssignment extends DedupOutput
-
 object Dedup {
 
   /** d01 — exact dedup: content-hash groupBy, keep lowest doc_id.
@@ -51,25 +41,17 @@ object Dedup {
     * win on high-dup corpora (sf1 10×-verbatim rehearsal) but pure
     * join overhead on a ~unique one; a one-aggregate probe chooses the
     * path. Outputs are bit-identical either way (DupGateSpec).
+    *
+    * The pair list is the AUDIT artifact, quadratic in dup-group size
+    * by contract; the production 100 TB shape over the same banding is
+    * d14's one keep-first (doc, canonical, is_dup) row per document.
+    * DedupModeSpec derives d14's assignment from these pairs.
     */
-  def d02DedupMinhash(spark: SparkSession, dir: String): DataFrame =
-    d02DedupMinhash(spark, dir, DedupPairs)
-
-  /** Output-mode form (round-11): the SAME banding machinery behind
-    * both shapes a user needs — `DedupPairs` emits the near-dup pair
-    * audit artifact (quadratic in dup-group size BY CONTRACT),
-    * `DedupAssignment` the production 100 TB output (one
-    * doc → canonical row per document, linear at any dup density,
-    * d14's keep-first rule). DedupModeSpec pins the two modes against
-    * each other: every assignment edge is witnessed by the pair set. */
-  def d02DedupMinhash(spark: SparkSession, dir: String,
-      mode: DedupOutput): DataFrame = mode match {
-    case DedupAssignment => d14DedupAssign(spark, dir)
-    case DedupPairs =>
-      val docs = Tables(spark, dir).documents
-      DupDensity.pairs(docs.select(col("doc_id"), col("text")), "doc_id",
-        DupDensity.textKey, DupDensity.textGate(docs),
-        spreadKernel = true)(d02Kernel) // one md5 per shingle
+  def d02DedupMinhash(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables(spark, dir).documents
+    DupDensity.pairs(docs.select(col("doc_id"), col("text")), "doc_id",
+      DupDensity.textKey, DupDensity.textGate(docs),
+      spreadKernel = true)(d02Kernel) // one md5 per shingle
   }
 
   /** Shared d02/d12 signature prep over (gid, text) rows: shingle
@@ -296,19 +278,7 @@ object Dedup {
   private[graft] def ehOf: Column =
     md5(concat_ws(",", col("embedding")).cast("binary"))
 
-  def d06DedupEmbeddingLsh(spark: SparkSession, dir: String): DataFrame =
-    d06DedupEmbeddingLsh(spark, dir, DedupPairs)
-
-  /** Output-mode form — see [[d02DedupMinhash]]: `DedupAssignment`
-    * routes the same LSH banding into d15's linear keep-first
-    * canonical assignment. */
-  def d06DedupEmbeddingLsh(spark: SparkSession, dir: String,
-      mode: DedupOutput): DataFrame = mode match {
-    case DedupAssignment => d15EmbeddingAssign(spark, dir)
-    case DedupPairs => d06Pairs(spark, dir)
-  }
-
-  private def d06Pairs(spark: SparkSession, dir: String): DataFrame = {
+  def d06DedupEmbeddingLsh(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding"))
     // DUP-DENSITY GATE — see d02. Band geometry (Lsh.scaled) SCALES WITH
     // THE CORPUS so per-bucket occupancy stays ~bounded (~64): the sf10
@@ -610,8 +580,7 @@ object Dedup {
   private[graft] def d10Body(df: DataFrame): DataFrame = {
     val W = d10W
     val docs = df
-      .select(col("gid"), col("m"),
-        filter(split(col("text"), " "), w => length(w) > 0).as("ws"))
+      .select(col("gid"), col("m"), TextAnalysis.words(col("text")).as("ws"))
       .select(col("gid"), col("m"), col("ws"), size(col("ws")).as("n_words"))
       .filter(col("n_words") >= W)
     val pos = docs.select(col("gid"), col("m"), col("n_words"),
@@ -1224,9 +1193,8 @@ object Dedup {
     // over the symmetric relation assigns canonicals
     "d14_dedup_assign" -> d14OracleSql,
     "d15_embedding_assign" -> d15OracleSql,
-    // d17: the assignment-mode FLAG path of d02 — same contract as
-    // d14 (the flag routes into the same machinery), independently
-    // gated so a flag-dispatch regression cannot hide
+    // d17: d14 under its registered second name (d02's assignment
+    // output), oracled by d14's SQL
     "d17_assign_mode" -> d14OracleSql,
     // d03: d13's simhash replay at full corpus — portable 60-bit token
     // hashes, per-bit majority, 4×15-bit pigeonhole bands, hamming ≤ 3
@@ -1514,7 +1482,6 @@ object Dedup {
     "d14_dedup_assign" -> (d14DedupAssign _),
     "d15_embedding_assign" -> (d15EmbeddingAssign _),
     "d16_containment" -> (d16Containment _),
-    "d17_assign_mode" ->
-      ((s: SparkSession, d: String) => d02DedupMinhash(s, d, DedupAssignment))
+    "d17_assign_mode" -> (d14DedupAssign _)
   )
 }

@@ -1,8 +1,9 @@
 package graft.operators
 
 /** The ONE windowed-funnel fold shared by batch q44/q48 and streaming
-  * st26 (ClickHouse `windowFunnel`'s semantics — see the q44 Scaladoc
-  * for the max-first dominance argument that makes the greedy EXACT).
+  * st26/st29 (ClickHouse `windowFunnel`'s semantics — see the q44
+  * Scaladoc for the max-first dominance argument that makes the greedy
+  * EXACT).
   *
   * The fold is K-GENERIC (ClickHouse's windowFunnel takes an arbitrary
   * event chain, not a fixed triple): the state per user is K longs —
@@ -20,25 +21,18 @@ package graft.operators
   *    user with 10^8 events costs K longs of state, never a multi-GB
   *    array (the round-9 `sort_array(collect_list)` spelling OOMs
   *    exactly there);
-  *  - streaming st26 receives each micro-batch's per-user group, sorts
-  *    the BATCH slice (batch-bounded, not history-bounded) and folds it
-  *    into the carried state via [[foldFunnel]]. Its 3-long
-  *    [[FunnelState]] stays the stream-state encoding; its transition
-  *    delegates to the same K-generic [[stepK]], so batch and stream
-  *    cannot drift.
+  *  - streaming st26/st29 receive each micro-batch's per-user group,
+  *    sort the BATCH slice (batch-bounded, not history-bounded) and fold
+  *    it into the carried K-long state via [[foldFunnelK]] — the same
+  *    [[stepK]] transition, so batch and stream cannot drift.
   */
 object Funnel {
   final case class FEv(user_id: Long, event_id: Long, ts_us: Long,
     y: String)
-  final case class FunnelState(g1: Long, g2: Long, g3: Long)
   final case class UserFunnel(user_id: Long, funnel_level: Long)
 
   /** q44/st26's classic 3-step chain. */
   val chain3: Seq[String] = Seq("view", "click", "purchase")
-  private val levelOf3: Map[String, Int] = chain3.zipWithIndex.toMap
-
-  val unreached: FunnelState =
-    FunnelState(Long.MinValue, Long.MinValue, Long.MinValue)
 
   def unreachedK(k: Int): Array[Long] = Array.fill(k)(Long.MinValue)
 
@@ -65,34 +59,11 @@ object Funnel {
     (k + 1).toLong
   }
 
-  /** The 3-step transition st26's stream state uses — a thin view over
-    * the K-generic kernel (one definition, zero drift). */
-  def step(wUs: Long, st: FunnelState, e: FEv): FunnelState = {
-    val a = Array(st.g1, st.g2, st.g3)
-    stepK(wUs, levelOf3, a, e)
-    FunnelState(a(0), a(1), a(2))
-  }
-
-  /** Fold a PRE-SORTED event iterator — streaming, zero buffering. */
-  def foldSorted(wUs: Long, init: FunnelState,
-      evs: Iterator[FEv]): FunnelState =
-    evs.foldLeft(init)(step(wUs, _, _))
-
-  /** Fold an UNSORTED slice (a micro-batch's per-user group): sorts the
-    * slice first. Bounded by one batch's events for one user — the
-    * mapGroupsWithState contract — never by the user's history. */
-  def foldFunnel(wUs: Long, init: FunnelState,
-      evs: Iterator[FEv]): FunnelState =
-    foldSorted(wUs, init,
-      evs.toIndexedSeq.sortBy(e => (e.ts_us, e.event_id)).iterator)
-
-  def funnelLevel(st: FunnelState): Long =
-    levelK(Array(st.g1, st.g2, st.g3))
-
-  /** K-generic micro-batch fold (st29's transition): sort ONE batch's
-    * per-user slice and advance the carried K-long state in place —
-    * the [[foldFunnel]] contract at arbitrary chain depth. Returns the
-    * same array for re-storage as stream state. */
+  /** The micro-batch fold (st26/st29's transition): sort ONE batch's
+    * per-user slice and advance the carried K-long state in place.
+    * Bounded by one batch's events for one user — the
+    * mapGroupsWithState contract — never by the user's history. Returns
+    * the same array for re-storage as stream state. */
   def foldFunnelK(wUs: Long, levelOf: Map[String, Int], st: Array[Long],
       evs: Iterator[FEv]): Array[Long] = {
     evs.toIndexedSeq.sortBy(e => (e.ts_us, e.event_id))
@@ -121,8 +92,4 @@ object Funnel {
       }
     }
   }
-
-  /** q44's 3-step batch kernel — the K = 3 instantiation. */
-  def levelsByUser(wUs: Long, rows: Iterator[FEv]): Iterator[UserFunnel] =
-    levelsByUserK(wUs, chain3, rows)
 }

@@ -874,10 +874,10 @@ object Relational {
     * single-slot greedy EXACT: a later-starting chain is extendable
     * whenever any chain is, because the only constraint on the next
     * event is ts ≤ first + W. Per-task state is THREE LONGS (the
-    * current user's greedy state, [[Funnel.step]]), never the user's
+    * current user's greedy state, [[Funnel.stepK]]), never the user's
     * event list: the plan is repartition(user) →
     * sortWithinPartitions(user, ts, id) → one streaming pass
-    * ([[Funnel.levelsByUser]]) — the secondary-sort reduce. A hot user
+    * ([[Funnel.levelsByUserK]]) — the secondary-sort reduce. A hot user
     * holding 10% of a 100 TB corpus costs a sort-spill, not a
     * multi-GB in-memory array (the previous sort_array(collect_list)
     * spelling materialized each user's history in one row — task OOM /
@@ -977,7 +977,7 @@ object Relational {
       levels.toDF().select(col("user_id"), col("funnel_level").as("lvl")))
   }
 
-  /** The funnel output contract q44 and its streaming twin st26 share:
+  /** The funnel output contract q44/q48 and their streaming twins share:
     * every user of the events table reports a level (0 when none of
     * the funnel events occurred), named funnel_level, user-ordered. */
   private[graft] def funnelAllUsers(spark: SparkSession, dir: String,

@@ -386,7 +386,7 @@ object Similarity {
   def s06HybridSearch(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
     val terms = Seq("dup", "vector", "stream")
-    val ws = filter(split(lower(col("text")), " "), w => length(w) > 0)
+    val ws = TextAnalysis.words(lower(col("text")))
     val docs = t.documents
       .select(col("doc_id") +: ws.as("ws") +: Nil: _*)
       .select(col("doc_id") +: size(col("ws")).cast("double").as("dl") +:

@@ -28,7 +28,10 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "les", "et", "est", "une", "dans", "pour", "que", "pas")
   )
 
-  private def words(c: Column): Column = split(lower(c), " ")
+  /** The lowercased pieces of a string split on one space, EMPTY pieces
+    * kept (t01/t02/t12 and `qualityOf` count them, as their oracles'
+    * `string_split` does). The non-empty tokenizer is [[words]]. */
+  private def rawWords(c: Column): Column = split(lower(c), " ")
 
   /** The t-family dup gate (the d-family probe applied to the text
     * operators): collapse per-doc text work to distinct payloads only
@@ -56,7 +59,7 @@ object TextAnalysis {
     gated(spark, dir)(t01Body)
 
   private[graft] def t01Body(df: DataFrame): DataFrame = {
-    val ws = words(col("text"))
+    val ws = rawWords(col("text"))
     val scored = array(stopwords.keys.toSeq.sorted.map { lang =>
       struct(stopHits(ws, lang).as("score"), lit(lang).as("lang"))
     }: _*)
@@ -76,7 +79,7 @@ object TextAnalysis {
     gated(spark, dir)(t02Body)
 
   private[graft] def t02Body(df: DataFrame): DataFrame = {
-    val ws = words(col("text"))
+    val ws = rawWords(col("text"))
     df
       .select(col("gid"), length(col("text")).as("n_chars_m"),
         size(ws).as("n_words"), stopHits(ws, "en").as("stop_cnt"))
@@ -440,8 +443,7 @@ object TextAnalysis {
     val tokWeight = (w: Column) =>
       conv(substring(md5(w), 1, 4), 16, 10).cast("long") % 2001L - 1000L
     df
-      .select(col("gid"),
-        filter(split(lower(col("text")), " "), w => length(w) > 0).as("ws"))
+      .select(col("gid"), words(lower(col("text"))).as("ws"))
       .select(col("gid"), size(col("ws")).as("n_tokens"),
         aggregate(col("ws"), lit(0L), (acc, w) => acc + tokWeight(w))
           .as("wsum"))
@@ -452,11 +454,17 @@ object TextAnalysis {
       .withColumn("keep", col("clf_score") > 0.0)
   }
 
+  /** The ONE tokenizer: the non-empty pieces of a string split on one
+    * space (callers lowercase first where the op is case-folded). It is
+    * codegen'd `array_remove`, not a non-empty `filter` lambda — the
+    * same tokens, but `ArrayFilter` is interpreted per element
+    * (CodegenFallback). Null text stays a null array. */
+  private[graft] def words(c: Column): Column = array_remove(split(c, " "), "")
+
   /** One whitespace token count as a Column (t13/t14/t15 and the corpus
     * tier share it so the mixture, classifier and packing ops can't drift
     * from each other). */
-  private[operators] def tokCount(c: Column): Column =
-    size(filter(split(lower(c), " "), w => length(w) > 0))
+  private[graft] def tokCount(c: Column): Column = size(words(lower(c)))
 
   /** t14 — domain-mixture report: exact per-(source, lang) doc and token
     * counts plus each cell's share of the corpus' tokens — the mixture
@@ -562,7 +570,7 @@ object TextAnalysis {
       .orderBy(col("cnt").desc, col("token"))
     Tables(spark, dir).documents
       .select(col("lang"),
-        explode(split(lower(col("text")), " ")).as("token"))
+        explode(rawWords(col("text"))).as("token"))
       .groupBy(col("lang"), col("token"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("rnk", row_number().over(w))
@@ -599,9 +607,7 @@ object TextAnalysis {
     // sf100): materializing the billion-row (doc, token) table costs
     // more than the second linear scan.
     val tf = docs
-      .select(col("doc_id"),
-        explode(filter(split(lower(col("text")), " "),
-          w => length(w) > 0)).as("token"))
+      .select(col("doc_id"), explode(words(lower(col("text")))).as("token"))
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
     val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
@@ -675,8 +681,7 @@ object TextAnalysis {
 
   private[graft] def t16Body(df: DataFrame): DataFrame = {
     val tok = df
-      .select(col("gid"), col("m"),
-        filter(split(lower(col("text")), " "), w => length(w) > 0).as("ws"))
+      .select(col("gid"), col("m"), words(lower(col("text"))).as("ws"))
       .where(size(col("ws")) >= 2)
     val g = tok.select(col("gid"), col("m"),
         explode(transform(sequence(lit(1), size(col("ws")) - 1),
@@ -744,7 +749,7 @@ object TextAnalysis {
     * textually in sync with t02/its oracle; each user query is still
     * pinned by its own DuckDB oracle. */
   private[graft] def qualityOf(c: Column): Column = {
-    val ws = words(c)
+    val ws = rawWords(c)
     val awl = length(c).cast("double") / size(ws)
     lit(0.4) * least(lit(1.0), size(ws).cast("double") / 120.0) +
       lit(0.3) * when(awl >= 3.0 && awl <= 8.0, 1.0).otherwise(0.0) +
@@ -873,8 +878,7 @@ object TextAnalysis {
   private[graft] def bpeTrain(docs: DataFrame, nMerges: Int,
       batchK: Int = BpeBatchK): BpeModel = {
     var vocab = docs
-      .select(explode(filter(split(lower(col("text")), " "),
-        w => length(w) > 0)).as("word"))
+      .select(explode(words(lower(col("text")))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(col("word"), col("freq"),
         array_append(split(col("word"), ""), lit("</w>")).as("syms"))
@@ -959,9 +963,7 @@ object TextAnalysis {
       .select(col("word"), size(col("syms")).as("n_sub"))
       .localCheckpoint(true)
     model.vocab.unpersist()
-    val wordOf = explode(filter(split(lower(col("text")), " "),
-      w => length(w) > 0))
-    docs.select(col("doc_id"), wordOf.as("word"))
+    docs.select(col("doc_id"), explode(words(lower(col("text")))).as("word"))
       .join(encoded, Seq("word"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"), sum(col("n_sub")).as("n_bpe_tokens"))
@@ -998,7 +1000,7 @@ object TextAnalysis {
       .otherwise(when(col("p11"), concat(col("text"), lit(" s7ream")))
         .otherwise(col("text")))
     val folded = translate(lower(planted), "013457@$", "oieastas")
-    val ws = filter(split(folded, " "), w => length(w) > 0)
+    val ws = words(folded)
     val set = array(blocked.map(lit): _*)
     df
       .select(col("gid"),
@@ -1041,8 +1043,7 @@ object TextAnalysis {
           md5(array_join(transform(
             array_sort(collect_list(struct(col("i"), col("seg")))),
             s => s.getField("seg")), " ").cast("binary")).as("cleaned_md5"),
-          sum(size(filter(split(col("seg"), " "), w => length(w) > 0)))
-            .as("words_after"))
+          sum(size(words(col("seg")))).as("words_after"))
     }
   }
 

@@ -8,6 +8,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DataType, DecimalType, StructType}
 
+import graft.operators.{Corpus, Funnel}
+import graft.operators.Funnel.FEv
+
 /** Structured-Streaming operators st01–st02 (SURVEY.md §2).
   *
   * The reference's ingest loop is a continuous tip-follow: cherry providers
@@ -70,17 +73,6 @@ object EventStreams {
     state.update(st)
     UserSessions(userId, st.nEvents, st.nSessions)
   }
-
-  // The funnel event/state/fold contract lives in graft.operators.Funnel
-  // — ONE definition shared verbatim by batch q44 and streaming st26.
-  type FEv = graft.operators.Funnel.FEv
-  type FunnelState = graft.operators.Funnel.FunnelState
-  type UserFunnel = graft.operators.Funnel.UserFunnel
-  def foldFunnel(wUs: Long, init: FunnelState,
-      evs: Iterator[FEv]): FunnelState =
-    graft.operators.Funnel.foldFunnel(wUs, init, evs)
-  def funnelLevel(st: FunnelState): Long =
-    graft.operators.Funnel.funnelLevel(st)
 
   /** st02 — stateful sessionization via mapGroupsWithState (30-min gap). */
   def sessionize(events: Dataset[Ev], gapUs: Long = 1800L * 1000000L)
@@ -195,7 +187,7 @@ object EventStreams {
     * `triggerCap` bounds the NUMBER of micro-batches, not the chunking:
     * the staged files are shared (one repartition pass serves every
     * chunked twin), and a query whose per-key state is O(1) — the
-    * funnel's three longs, the transition matrix's one string — gains
+    * funnel's K longs, the transition matrix's one string — gains
     * nothing from fine admission while paying the ~1 s scheduling floor
     * per trigger (64 chunks at sf100 = a 64 s floor, the whole
     * stream-vs-batch gap). Admitting k consecutive ts-range files per
@@ -1080,7 +1072,7 @@ object EventStreams {
     import spark.implicits._
     import org.apache.spark.sql.streaming.OutputMode
     val src = replay(spark, s"$dir#pack")(Seq(written(inRanges(
-      graft.operators.Corpus.packInput(spark, dir), "doc_id", 250000L, 16L))))
+      Corpus.packInput(spark, dir), "doc_id", 250000L, 16L))))
       .as[PackDoc]
     val assigned = src.groupByKey(_.bucket)
       .flatMapGroupsWithState(OutputMode.Append,
@@ -1090,7 +1082,7 @@ object EventStreams {
           var st = state.getOption.getOrElse(PackState(-1L, 0L))
           val outRows = docs.toIndexedSeq.sortBy(_.doc_id).map { d =>
             st = if (d.cost <= st.rem) PackState(st.seq, st.rem - d.cost)
-                 else PackState(st.seq + 1L, 256L - d.cost)
+                 else PackState(st.seq + 1L, Corpus.T - d.cost)
             PackAssign(d.doc_id, bucket, st.seq, d.cost - 1L)
           }
           state.update(st)
@@ -1121,7 +1113,7 @@ object EventStreams {
     import spark.implicits._
     import org.apache.spark.sql.streaming.OutputMode
     val src = replay(spark, s"$dir#lenb")(Seq(written(inRanges(
-      graft.operators.Corpus.c11Input(spark, dir), "doc_id", 250000L, 16L))))
+      Corpus.c11Input(spark, dir), "doc_id", 250000L, 16L))))
       .as[LenDoc]
     val assigned = src.groupByKey(_.pad_len)
       .flatMapGroupsWithState(OutputMode.Append,
@@ -1168,60 +1160,36 @@ object EventStreams {
       .orderBy(col("day"))
   }
 
-  /** st26 — the streaming twin of q44's windowed funnel: per-user
-    * funnel state live at the tip. State per user is THREE LONGS (the
-    * greedy max-first times), updated by the same fold as the batch
-    * operator; the ts-range-ordered chunk staging guarantees events
-    * arrive in global event-time order across micro-batches, so the
-    * incremental fold lands exactly on the batch answer (q44's oracle
-    * verifies the stream run verbatim). Level is monotone, so the
-    * update-mode sink finalizes with MAX per user. */
-  def st26StreamFunnel(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    val wUs = 24L * 3600 * 1000000
-    // O(1)-state twin: cap the trigger count (files admitted per
-    // trigger grow with SF instead) — the per-trigger scheduling floor
-    // was 2.5x the batch twin at sf100
-    val evs = eventsStreamChunked(spark, dir, triggerCap = 8)
-      .filter(col("event_type").isin("view", "click", "purchase"))
-      .select(col("user_id").cast("long").as("user_id"),
-        col("event_id").cast("long").as("event_id"),
-        unix_micros(col("ts")).as("ts_us"),
-        col("event_type").as("y"))
-      .as[FEv]
-    val updated = evs.groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[FEv],
-         state: org.apache.spark.sql.streaming.GroupState[FunnelState]) =>
-          val st = foldFunnel(wUs,
-            state.getOption.getOrElse(graft.operators.Funnel.unreached), it)
-          state.update(st)
-          graft.operators.Funnel.UserFunnel(uid, funnelLevel(st))
-      }
-    val levels = runToTable(updated.toDF(), Sink.Memory("update"))
-      .groupBy(col("user_id")).agg(max(col("funnel_level")).as("lvl"))
-    // q44's output contract, one definition — level-0 backfill included
-    graft.operators.Relational.funnelAllUsers(spark, dir, levels)
-  }
+  /** st26 — the streaming twin of q44's windowed funnel, over
+    * [[Funnel.chain3]]; see [[funnelStream]]. */
+  def st26StreamFunnel(spark: SparkSession, dir: String): DataFrame =
+    funnelStream(spark, dir, Funnel.chain3)
 
-  /** st29 — streaming twin of q48's K-STEP funnel: st26's incremental
-    * fold at arbitrary chain depth. State per user is K LONGS (the
-    * K-generic greedy max-first times, stored as a Seq[Long] so one
-    * state encoding serves every K), advanced per micro-batch by the
-    * same [[graft.operators.Funnel.stepK]] kernel the batch q48 fold
-    * runs — chain, kernel and output contract are all shared with the
-    * batch operator, so q48's generated K-way EXISTS oracle verifies
-    * the stream run verbatim. Completes the stateful-twin ladder's
-    * depth axis: st27 one string, st26 three longs, st29 K longs — the
-    * state stays O(K) per user however hot the user, which is the
-    * whole point of the greedy dominance argument at 100 TB. */
-  def st29StreamFunnelK(spark: SparkSession, dir: String): DataFrame = {
+  /** st29 — the streaming twin of q48's K-STEP funnel, over q48's
+    * five-step chain; see [[funnelStream]]. */
+  def st29StreamFunnelK(spark: SparkSession, dir: String): DataFrame =
+    funnelStream(spark, dir, graft.operators.Relational.chain5)
+
+  /** The streaming windowed funnel, parameterised by chain like the
+    * batch `Relational.funnelChain`: per-user funnel state live at the
+    * tip. State per user is K LONGS (the greedy max-first times, stored
+    * as a Seq[Long] so one state encoding serves every K), advanced per
+    * micro-batch by the same [[Funnel.foldFunnelK]] kernel the batch
+    * fold runs. The ts-range-ordered chunk staging guarantees events
+    * arrive in global event-time order across micro-batches, so the
+    * incremental fold lands exactly on the batch answer (q44's and
+    * q48's oracles verify the stream runs verbatim). Level is monotone,
+    * so the update-mode sink finalizes with MAX per user. The state
+    * stays O(K) per user however hot the user — the point of the greedy
+    * dominance argument at 100 TB. */
+  private def funnelStream(spark: SparkSession, dir: String,
+      chain: Seq[String]): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    val chain = graft.operators.Relational.chain5
     val levelOf = chain.zipWithIndex.toMap
     val wUs = 24L * 3600 * 1000000
+    // O(K)-state twin: cap the trigger count (files admitted per
+    // trigger grow with SF instead) — the per-trigger scheduling floor
+    // was 2.5x the batch twin at sf100
     val evs = eventsStreamChunked(spark, dir, triggerCap = 8)
       .filter(col("event_type").isin(chain: _*))
       .select(col("user_id").cast("long").as("user_id"),
@@ -1231,18 +1199,17 @@ object EventStreams {
       .as[FEv]
     val updated = evs.groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[FEv],
-         state: org.apache.spark.sql.streaming.GroupState[Seq[Long]]) =>
-          val st = graft.operators.Funnel.foldFunnelK(wUs, levelOf,
+        (uid: Long, it: Iterator[FEv], state: GroupState[Seq[Long]]) =>
+          val st = Funnel.foldFunnelK(wUs, levelOf,
             state.getOption.map(_.toArray)
-              .getOrElse(graft.operators.Funnel.unreachedK(chain.length)),
+              .getOrElse(Funnel.unreachedK(chain.length)),
             it)
           state.update(st.toSeq)
-          graft.operators.Funnel.UserFunnel(uid,
-            graft.operators.Funnel.levelK(st))
+          Funnel.UserFunnel(uid, Funnel.levelK(st))
       }
     val levels = runToTable(updated.toDF(), Sink.Memory("update"))
       .groupBy(col("user_id")).agg(max(col("funnel_level")).as("lvl"))
+    // q44's output contract, one definition — level-0 backfill included
     graft.operators.Relational.funnelAllUsers(spark, dir, levels)
   }
 
@@ -1258,11 +1225,12 @@ object EventStreams {
     * arrival makes the incremental pairing exactly the batch LAG, so
     * q46's oracle verifies the stream run verbatim. The minimal-state
     * extreme of the stateful-twin ladder: st02 keeps three counters,
-    * st26 three longs, st27 one enum-valued string per user. */
+    * the st26/st29 funnel K longs (3 and 5), st27 one enum-valued
+    * string per user. */
   def st27StreamTransitions(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    // O(1)-state twin: trigger count capped like st26
+    // O(1)-state twin: trigger count capped like the funnel streams
     val evs = eventsStreamChunked(spark, dir, triggerCap = 8)
       .select(col("user_id").cast("long").as("user_id"),
         col("event_id").cast("long").as("event_id"),
@@ -1377,11 +1345,11 @@ object EventStreams {
     // st23: the incremental packer must land exactly where the batch
     // packer lands — c02's recursive-CTE oracle verbatim
     "st23_stream_pack" ->
-      graft.operators.Corpus.oracle("c02_pack_greedy"),
+      Corpus.oracle("c02_pack_greedy"),
     // st28: the incremental length-batcher must land exactly where the
     // batch packer lands — c11's naive-window oracle verbatim
     "st28_stream_length_batches" ->
-      graft.operators.Corpus.c11OracleSql,
+      Corpus.c11OracleSql,
     // st29: the incremental K-step funnel must land exactly where the
     // batch K-fold lands — q48's GENERATED K-way EXISTS oracle verbatim
     "st29_stream_funnel_k" ->

@@ -2,16 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, DedupAssignment, DedupPairs}
+import graft.operators.Dedup
 
-/** The output-mode contract (round 11): d02/d06's `DedupAssignment`
-  * flag must (a) equal the standalone d14/d15 operators row-for-row,
-  * and (b) be DERIVABLE from the same operator's `DedupPairs` output —
-  * the keep-first canonical recomputed per-doc from the pair list is
-  * the assignment. (b) is the real cross-mode pin: pairs and
-  * assignment are two projections of one near-dup relation, so any
-  * drift between the banding machineries would break the re-derivation
-  * even if (a) still held.
+/** The two output shapes of one near-dup relation: d02/d06 emit the
+  * pair list, d14/d15 the keep-first assignment. The assignment must
+  * be DERIVABLE from the pairs — the keep-first canonical recomputed
+  * per-doc from the pair list is the assignment — so any drift between
+  * the two banding paths breaks the re-derivation.
   */
 class DedupModeSpec extends AnyFunSuite {
   private lazy val spark = SparkSessionFixture.spark
@@ -29,13 +26,8 @@ class DedupModeSpec extends AnyFunSuite {
     ids.map(d => d -> math.min(d, best.getOrElse(d, d))).toMap
   }
 
-  private def assertModes(assign: org.apache.spark.sql.DataFrame,
-      standalone: org.apache.spark.sql.DataFrame,
+  private def assertDerives(assign: org.apache.spark.sql.DataFrame,
       ids: Seq[Long], pairs: Seq[(Long, Long)]): Unit = {
-    // (a) the flag path IS the standalone operator
-    assert(assign.except(standalone).count() === 0L)
-    assert(standalone.except(assign).count() === 0L)
-    // (b) pairs-mode re-derivation lands on the same assignment
     val want = canonFromPairs(ids, pairs)
     val got = assign.collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
@@ -46,21 +38,19 @@ class DedupModeSpec extends AnyFunSuite {
     }
   }
 
-  test("d02: assignment mode == d14, and the pair mode derives it") {
-    val pairs = Dedup.d02DedupMinhash(spark, sfDir, DedupPairs)
+  test("d02: the pair output derives d14's assignment") {
+    val pairs = Dedup.d02DedupMinhash(spark, sfDir)
       .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1)))
     val ids = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id").collect().map(_.getLong(0)).toSeq
-    assertModes(Dedup.d02DedupMinhash(spark, sfDir, DedupAssignment),
-      Dedup.d14DedupAssign(spark, sfDir), ids, pairs.toSeq)
+    assertDerives(Dedup.d14DedupAssign(spark, sfDir), ids, pairs.toSeq)
   }
 
-  test("d06: assignment mode == d15, and the pair mode derives it") {
-    val pairs = Dedup.d06DedupEmbeddingLsh(spark, sfDir, DedupPairs)
+  test("d06: the pair output derives d15's assignment") {
+    val pairs = Dedup.d06DedupEmbeddingLsh(spark, sfDir)
       .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1)))
     val ids = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select("vec_id").collect().map(_.getLong(0)).toSeq
-    assertModes(Dedup.d06DedupEmbeddingLsh(spark, sfDir, DedupAssignment),
-      Dedup.d15EmbeddingAssign(spark, sfDir), ids, pairs.toSeq)
+    assertDerives(Dedup.d15EmbeddingAssign(spark, sfDir), ids, pairs.toSeq)
   }
 }

@@ -648,6 +648,71 @@ class ExplainAuditSpec extends AnyFunSuite {
       s"rank filter did not push below the window:\n$p")
   }
 
+  test("tokenizer sites: no executed plan filters a split through a lambda") {
+    // Every query the one tokenizer (TextAnalysis.words, codegen'd
+    // array_remove) serves, including tokCount's users; st23/st28 stage
+    // packInput/c11Input, which c01/c02/c05 and c11 run here. Every plan
+    // a query executes is checked, its eager jobs (the dup-gate probe,
+    // BPE's checkpointed rounds) included.
+    // Lambda sites left alone, each for its reason:
+    //  - stopword hits in t01/t19 and s06's term counts count repeated
+    //    matches over the materialized token array, not a split; no
+    //    codegen'd form of them has been measured yet (ROADMAP item 7)
+    //  - t13's weighted `aggregate`: no built-in sums a per-token md5
+    //    weight
+    //  - s05's `dot`: the oracle pins its left-to-right fold order
+    //  - Dedup `estJaccard`: a zip_with over signatures, not tokens
+    //  - the d10/t16/t20 `transform`s build word windows and bigrams by
+    //    index; no built-in emits them
+    //  - c02's packing fold is a sequential first-fit state machine
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter,
+      StringSplit}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val touched = Seq("t13_quality_classifier", "t14_domain_mix",
+      "t15_mixture_resample", "t16_lm_surprise", "t17_bpe_train",
+      "t18_bpe_encode", "t19_blocklist_filter", "t20_boilerplate_strip",
+      "t21_tfidf_keywords", "s06_hybrid_search", "d10_substring_dedup",
+      "c01_pack_concat", "c02_pack_greedy", "c04_token_budget_mix",
+      "c05_pack_eval", "c09_curriculum", "c11_length_batches")
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
+    }
+    val marker = "graft_guard_marker"
+    val offenders = touched.flatMap { name =>
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            ns: Long): Unit =
+          if (qe.analyzed.output.map(_.name) == Seq(marker)) drained.countDown()
+          else plans.add(qe.executedPlan): Unit
+        override def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        SparkEntry.queries(name)(spark, sfDir).collect()
+        // listener events arrive in order: the marker's drains the rest
+        spark.range(1).toDF(marker).collect()
+        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally spark.listenerManager.unregister(listener)
+      val executed = plans.toArray(Array.empty[SparkPlan]).toSeq
+      assert(executed.nonEmpty, s"$name executed no plan")
+      executed.flatMap(nodes).flatMap(_.expressions)
+        .flatMap(_.collect {
+          case f: ArrayFilter if f.argument.isInstanceOf[StringSplit] =>
+            s"$name filters a split through a lambda: $f"
+        }).distinct
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("c01 packing: ONE hash exchange (the bucket window), no join") {
     val p = plan(graft.operators.Corpus.c01PackConcat(spark, sfDir))
     assert(countOf(p, "Arguments: hashpartitioning") === 1,

@@ -21,6 +21,14 @@ class FunnelSkewSpec extends AnyFunSuite {
 
   private val W = 24L * 3600 * 1000000
 
+  /** The reference level: the micro-batch fold over q44's chain, fed
+    * one user's events in any order (it sorts its slice). */
+  private def foldLevel(es: Seq[Funnel.FEv]): Long = {
+    val levelOf = Funnel.chain3.zipWithIndex.toMap
+    Funnel.levelK(Funnel.foldFunnelK(W, levelOf,
+      Funnel.unreachedK(Funnel.chain3.length), es.iterator))
+  }
+
   /** Deterministic planted power-law corpus: user 1 holds ~10% of all
     * events; 500 cold users share the rest. Types and hours come from
     * a fixed-seed PRNG so the spec replays byte-identically. */
@@ -65,8 +73,7 @@ class FunnelSkewSpec extends AnyFunSuite {
           if t == "view" || t == "click" || t == "purchase" =>
         Funnel.FEv(u, eid, (t0us + (h * 3600e6).toLong) / 1000L * 1000L, t)
       }
-      u -> Funnel.funnelLevel(
-        Funnel.foldFunnel(W, Funnel.unreached, fes.iterator))
+      u -> foldLevel(fes)
     }
     val got = Relational.q44Funnel(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -86,21 +93,23 @@ class FunnelSkewSpec extends AnyFunSuite {
       "expected the secondary-sort mapPartitions fold in the plan")
   }
 
-  test("levelsByUser streams a clustered iterator exactly as the fold") {
+  test("levelsByUserK streams a clustered iterator, hot user included, " +
+    "exactly as foldFunnelK") {
     val rnd = new scala.util.Random(7L)
     val types = Array("view", "click", "purchase")
-    val evs = (1L to 40L).flatMap { u =>
-      Seq.fill(rnd.nextInt(30) + 1)(Funnel.FEv(u, rnd.nextLong(1000000),
-        rnd.nextLong(100L * W), types(rnd.nextInt(3))))
-    }
+    def evsOf(u: Long, n: Int) = Seq.fill(n)(Funnel.FEv(u,
+      rnd.nextLong(1000000), rnd.nextLong(100L * W), types(rnd.nextInt(3))))
+    // user 0 is hot: 4000 events, as many as the 40 cold users together
+    val evs = evsOf(0L, 4000) ++
+      (1L to 40L).flatMap(u => evsOf(u, rnd.nextInt(30) + 1))
     // cluster by user, secondary-sort within — the q44 partition shape
     val clustered = evs.sortBy(e => (e.user_id, e.ts_us, e.event_id))
-    val got = Funnel.levelsByUser(W, clustered.iterator)
+    val got = Funnel.levelsByUserK(W, Funnel.chain3, clustered.iterator)
       .map(uf => uf.user_id -> uf.funnel_level).toMap
     val expect = evs.groupBy(_.user_id).map { case (u, es) =>
-      u -> Funnel.funnelLevel(
-        Funnel.foldFunnel(W, Funnel.unreached, es.iterator))
+      u -> foldLevel(es)
     }
     assert(got === expect)
+    assert(got(0L) === 3L, "a 4000-event hot user should convert")
   }
 }

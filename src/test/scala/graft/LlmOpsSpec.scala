@@ -214,6 +214,38 @@ class LlmOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("words equals the non-empty split filter row for row, sizes " +
+    "included: null, empty, blank, edge and doubled spaces, mixed case") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{filter, length, lower, size, split}
+    val texts = Seq(null, "", "   ", " lead", "trail ", "a  b",
+      "  two   gaps  ", "Mixed CASE Words")
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(texts.map(Row(_)), 2),
+      StructType(Seq(StructField("text", StringType))))
+    // the spelling every tokenizer site used before
+    val old = (c: Column) => filter(split(c, " "), w => length(w) > 0)
+    val t = col("text")
+    val rows = df.select(t,
+      TextAnalysis.words(t), old(t),
+      TextAnalysis.words(lower(t)), old(lower(t)),
+      size(TextAnalysis.words(t)), size(old(t)),
+      TextAnalysis.tokCount(t), size(old(lower(t)))).collect()
+    assert(rows.length === texts.length)
+    rows.foreach { r =>
+      for (i <- 1 until 9 by 2)
+        assert(r.get(i) == r.get(i + 1), s"text '${r.get(0)}', column $i")
+    }
+    val byText = rows.map(r => Option(r.getString(0)) -> r).toMap
+    assert(byText(None).isNullAt(1), "null text tokenizes to null")
+    assert(byText(Some("")).getSeq[String](1).isEmpty)
+    assert(byText(Some("   ")).getSeq[String](1).isEmpty)
+    assert(byText(Some("  two   gaps  ")).getSeq[String](1) ===
+      Seq("two", "gaps"))
+    assert(byText(Some("Mixed CASE Words")).getSeq[String](3) ===
+      Seq("mixed", "case", "words"))
+  }
+
   test("t01 language ID picks the stopword-dominant language") {
     val dir = docsDir(Seq(
       0L -> "the cat sat on the mat and it is happy you see that",
