@@ -93,6 +93,23 @@ class FunnelSkewSpec extends AnyFunSuite {
       "expected the secondary-sort mapPartitions fold in the plan")
   }
 
+  test("levelsByUser streams a clustered iterator exactly as the fold") {
+    val rnd = new scala.util.Random(7L)
+    val types = Array("view", "click", "purchase")
+    val evs = (1L to 40L).flatMap { u =>
+      Seq.fill(rnd.nextInt(30) + 1)(Funnel.FEv(u, rnd.nextLong(1000000),
+        rnd.nextLong(100L * W), types(rnd.nextInt(3))))
+    }
+    // cluster by user, secondary-sort within — the q44 partition shape
+    val clustered = evs.sortBy(e => (e.user_id, e.ts_us, e.event_id))
+    val got = Funnel.levelsByUserK(W, Funnel.chain3, clustered.iterator)
+      .map(uf => uf.user_id -> uf.funnel_level).toMap
+    val expect = evs.groupBy(_.user_id).map { case (u, es) =>
+      u -> foldLevel(es)
+    }
+    assert(got === expect)
+  }
+
   test("levelsByUserK streams a clustered iterator, hot user included, " +
     "exactly as foldFunnelK") {
     val rnd = new scala.util.Random(7L)
