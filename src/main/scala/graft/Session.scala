@@ -8,9 +8,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Session {
   /** The load-time contract every query reads its inputs under. Built
-    * into every graft session and applied again by [[SparkEntry]] on each
-    * call, so a query's answer never depends on the session it was handed
-    * or on which query ran before it in that session. */
+    * into every graft session and applied again by [[enforce]] on each
+    * [[SparkEntry]] call, so a query's answer never depends on the session
+    * it was handed or on which query ran before it in that session. */
   val contract: Seq[(String, String)] = Seq(
     // temporal semantics (date_trunc buckets, date→timestamp casts, event
     // ts normalization) are defined in UTC; the oracles compare naive
@@ -58,9 +58,19 @@ object Session {
     "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
   )
 
-  /** A `local[cores]` session with `shufflePartitions` shuffle partitions,
-    * the [[geometry]] confs and graft's planner strategies, logging at
-    * WARN. */
+  /** What graft needs of any session it runs on, whoever built it: the
+    * [[contract]], graft's planner strategies, and graft's local
+    * filesystem (`graft.localfs`, which writes checkpoints, state and
+    * sinks without a shell process per file). Idempotent; every
+    * [[SparkEntry]] call and every [[apply]] runs it. */
+  def enforce(spark: SparkSession): Unit = {
+    contract.foreach { case (k, v) => spark.conf.set(k, v) }
+    plans.SmallSortStrategy.ensureRegistered(spark)
+    localfs.LocalFs.install(spark)
+  }
+
+  /** A `local[cores]` session with `shufflePartitions` shuffle partitions
+    * and the [[geometry]] confs, logging at WARN, [[enforce]]d. */
   def apply(cores: Int, shufflePartitions: Int): SparkSession = {
     val spark = geometry.foldLeft(SparkSession.builder()) {
       case (b, (k, v)) => b.config(k, v)
@@ -68,7 +78,7 @@ object Session {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    plans.SmallSortStrategy.ensureRegistered(spark)
+    enforce(spark)
     spark
   }
 

@@ -2,21 +2,15 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
-  /** [[Session.contract]] and graft's planner strategies, enforced on
-    * whatever session the driver hands us, not just in our own builders. */
-  private def contract(spark: SparkSession): Unit = {
-    Session.contract.foreach { case (k, v) => spark.conf.set(k, v) }
-    plans.SmallSortStrategy.ensureRegistered(spark)
-  }
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
-    contract(spark)
+    Session.enforce(spark)
     operators.Relational.q01AggFilter(spark, "/root/testdata/sf0.001")
   }
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     rawQueries.map { case (k, f) =>
-      k -> { (s: SparkSession, d: String) => contract(s); f(s, d) }
+      k -> { (s: SparkSession, d: String) => Session.enforce(s); f(s, d) }
     }
   /** The entries named in `names` (every entry when empty), sorted by
     * name. An unknown name fails: a typo would otherwise select nothing

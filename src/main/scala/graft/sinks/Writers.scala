@@ -112,12 +112,8 @@ object Writers {
     // recursive: a Hive-partitioned layout keeps its files in subdirs —
     // a flat listStatus would size those inputs at 0 bytes and coalesce
     // the whole dataset into one giant single-task file
-    val it = fs.listFiles(path, true)
-    var bytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) bytes += f.getLen
-    }
+    val bytes = graft.sources.Tables.filesUnder(fs, path)
+      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val target = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     val df = spark.read.parquet(in)
     // coalesce can only MERGE partitions (splitting would be repartition's

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.StructType
@@ -50,17 +50,22 @@ object Tables {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return spark.read.parquet(path).schema
-    var mtime = 0L
-    var bytes = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      mtime = math.max(mtime, f.getModificationTime)
-      bytes += f.getLen
-    }
+    val files = filesUnder(fs, p).toSeq
+    val mtime = files.map(_.getModificationTime).maxOption.getOrElse(0L)
+    val bytes = files.map(_.getLen).sum
     val key = (path, mtime, bytes, spark.conf.get(NanosAsLong, "false"))
     schemaCache.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
   }
+
+  /** Every file at or under `p`, as `FileSystem.listFiles(p, true)` walks
+    * them (a checksummed filesystem leaves out its `.crc` files), but
+    * through `listStatus`: `listFiles` builds a `LocatedFileStatus`, which
+    * reads each file's owner and permission — on the local filesystem
+    * without `libhadoop`, one `ls -ld` process per file. */
+  def filesUnder(fs: FileSystem, p: Path): Iterator[FileStatus] =
+    fs.listStatus(p).iterator.flatMap { s =>
+      if (s.isDirectory) filesUnder(fs, s.getPath) else Iterator.single(s)
+    }
 
   /** Spread a NARROW scan before a per-row-expensive kernel (signature
     * hashing, per-shingle digests, distance kernels). Parquet scan
