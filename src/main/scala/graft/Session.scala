@@ -59,13 +59,14 @@ object Session {
   )
 
   /** What graft needs of any session it runs on, whoever built it: the
-    * [[contract]], graft's planner strategies, and graft's local
-    * filesystem (`graft.localfs`, which writes checkpoints, state and
-    * sinks without a shell process per file). Idempotent; every
+    * [[contract]], graft's planner strategies, graft's SQL functions, and
+    * graft's local filesystem (`graft.localfs`, which writes checkpoints,
+    * state and sinks without a shell process per file). Idempotent; every
     * [[SparkEntry]] call and every [[apply]] runs it. */
   def enforce(spark: SparkSession): Unit = {
     contract.foreach { case (k, v) => spark.conf.set(k, v) }
     plans.SmallSortStrategy.ensureRegistered(spark)
+    functions.registerSql(spark)
     localfs.LocalFs.install(spark)
   }
 

@@ -5,7 +5,7 @@ import java.math.BigInteger
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, QuaternaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,7 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * exposes (cherry-core: keccak topic0, anchor discriminators, base58,
   * u256 binary codecs) plus graft's SimHash primitive. All are codegen'd
   * (doGenCode calls straight into static JVM impls) so they stay inside
-  * whole-stage codegen — no UDF serialization on the hot path.
+  * whole-stage codegen — no UDF serialization on the hot path. Functions
+  * of one or two columns are [[GraftFunction]] declarations evaluated by
+  * two generic nodes; the rest are written out below.
   */
 object ExprImpl {
   /** base58 decode that surfaces malformed input as null. */
@@ -293,103 +295,102 @@ object ExprImpl {
   }
 }
 
-/** keccak256(binary) → 32-byte binary. Reference: evm_signature_to_topic0
-  * (erc20_transfers.py:94). */
-case class KeccakHash256(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "keccak256"
-  override protected def nullSafeEval(input: Any): Any =
-    Keccak.hash256(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Keccak.hash256($c)")
-  override protected def withNewChildInternal(newChild: Expression): KeccakHash256 =
-    copy(child = newChild)
+/** One graft SQL function of one or two columns, declared once: its SQL
+  * name, its input types, the static method generated code calls
+  * (relative to `graft.functions`), whether it can return null for
+  * non-null input, and the names of its integer parameters (literals in
+  * SQL text, `Int`s in the Column API, trailing arguments of `method`).
+  * `resultType` gives the result type for the parameters; `bind` gives
+  * the Scala call interpreted evaluation makes, with the parameters
+  * captured. The first parameter list is the function's identity. */
+final case class GraftFunction(name: String, inputTypes: Seq[DataType],
+    method: String, nullable: Boolean, paramNames: Seq[String])(
+    val resultType: Seq[Int] => DataType, bind: Seq[Int] => AnyRef) {
+  private def usage = s"$name takes ${inputTypes.size} column(s) and the " +
+    s"integer parameter(s) (${paramNames.mkString(", ")})"
+
+  /** This function over `children`, with `params` bound once. */
+  def expr(children: Seq[Expression], params: Seq[Int]): Expression = {
+    require(children.size == inputTypes.size && params.size == paramNames.size, usage)
+    (children, bind(params)) match {
+      case (Seq(c), call: Function1[Any, Any] @unchecked) =>
+        UnaryFunction(this, params, c)(call)
+      case (Seq(l, r), call: Function2[Any, Any, Any] @unchecked) =>
+        BinaryFunction(this, params, l, r)(call)
+    }
+  }
+
+  /** The SQL builder: the columns, then each parameter as an integer
+    * literal, since the parameters shape the expression itself. */
+  def fromSql(args: Seq[Expression]): Expression = {
+    require(args.size == inputTypes.size + paramNames.size, usage)
+    val (columns, literals) = args.splitAt(inputTypes.size)
+    expr(columns, literals.zip(paramNames).map { case (e, n) => GraftFunction.litInt(e, n) })
+  }
 }
 
-/** base58_encode(binary) → string (Bitcoin/Solana alphabet). */
-case class Base58Encode(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "base58_encode"
-  override protected def nullSafeEval(input: Any): Any =
-    ExprImpl.base58Encode(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprImpl.base58Encode($c)")
-  override protected def withNewChildInternal(newChild: Expression): Base58Encode =
-    copy(child = newChild)
-}
+/** What the two generic nodes share: types and printing from the
+  * declaration, and the three templates of their generated code. */
+sealed trait FunctionNode extends ExpectsInputTypes {
+  def fn: GraftFunction
+  def params: Seq[Int]
+  override def inputTypes: Seq[DataType] = fn.inputTypes
+  override def dataType: DataType = fn.resultType(params)
+  override def nullable: Boolean = fn.nullable || children.exists(_.nullable)
+  override def prettyName: String = fn.name
+  // prints as name(children…, params…)
+  override protected def stringArgs: Iterator[Any] = children.iterator ++ params
 
-/** base58_decode(string) → binary; null on malformed input
-  * (base58_decode_string, orca_swaps.py:235-260). */
-case class Base58Decode(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "base58_decode"
-  override protected def nullSafeEval(input: Any): Any =
-    ExprImpl.base58Decode(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
+  /** `fn.method` over the children's values with the parameters inlined
+    * as literals, in the node's null-safe wrapper `nullSafe`: a plain
+    * assignment when the result is never null, a null check on an object
+    * result, and a boxed local for a primitive result that can be null. */
+  protected def genCall(ctx: CodegenContext, ev: ExprCode,
+      nullSafe: (Seq[String] => String) => ExprCode): ExprCode = {
+    def call(args: Seq[String]): String =
+      s"graft.functions.${fn.method}(${(args ++ params.map(_.toString)).mkString(", ")})"
+    if (!fn.nullable) nullSafe(args => s"${ev.value} = ${call(args)};")
+    else if (!CodeGenerator.isPrimitiveType(dataType)) nullSafe(args =>
       s"""
-         |${ev.value} = graft.functions.ExprImpl.base58Decode($c);
+         |${ev.value} = ${call(args)};
          |if (${ev.value} == null) { ${ev.isNull} = true; }
        """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): Base58Decode =
-    copy(child = newChild)
-}
-
-/** u256_from_long(long) → 32-byte big-endian binary (unsigned widen). */
-case class U256FromLong(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "u256_from_long"
-  override protected def nullSafeEval(input: Any): Any =
-    ExprImpl.u256FromLong(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprImpl.u256FromLong($c)")
-  override protected def withNewChildInternal(newChild: Expression): U256FromLong =
-    copy(child = newChild)
-}
-
-/** u256_to_decimal(32-byte BE binary) → Decimal(38,0), null on overflow.
-  * Reference: ERC-20 amounts decoded as Decimal256 (erc20 pipeline DDL). */
-case class U256ToDecimal(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = DecimalType(38, 0)
-  override def nullable: Boolean = true
-  override def prettyName: String = "u256_to_decimal"
-  override protected def nullSafeEval(input: Any): Any =
-    ExprImpl.u256ToDecimal(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
+    else nullSafe { args =>
+      // fresh name: a fixed local would collide when the expression
+      // appears twice in one codegen scope with a non-nullable child
+      val boxed = ctx.freshName("boxed")
+      val unboxed = s"$boxed.${CodeGenerator.javaType(dataType)}Value()"
       s"""
-         |${ev.value} = graft.functions.ExprImpl.u256ToDecimal($c);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): U256ToDecimal =
-    copy(child = newChild)
+         |${CodeGenerator.boxedType(dataType)} $boxed = ${call(args)};
+         |if ($boxed == null) { ${ev.isNull} = true; } else { ${ev.value} = $unboxed; }
+       """.stripMargin
+    }
+  }
 }
 
-/** minhashes(array<long>, k) → array<long>: k MinHash values in one pass
-  * (SURVEY.md d02/s02 — the LSH scale path for near-dup detection). */
-case class MinHashes(child: Expression, k: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType, containsNull = true))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhashes"
-  override protected def nullSafeEval(input: Any): Any =
-    ExprImpl.minhashes(input.asInstanceOf[ArrayData], k)
+/** A [[GraftFunction]] of one column. `call` is its Scala call with
+  * `params` bound; `copy` and `otherCopyArgs` pass it on. */
+case class UnaryFunction(fn: GraftFunction, params: Seq[Int], child: Expression)(
+    call: Any => Any) extends UnaryExpression with FunctionNode {
+  override protected def nullSafeEval(input: Any): Any = call(input)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprImpl.minhashes($c, $k)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashes =
-    copy(child = newChild)
+    genCall(ctx, ev, body => nullSafeCodeGen(ctx, ev, c => body(Seq(c))))
+  override protected def otherCopyArgs: Seq[AnyRef] = call :: Nil
+  override protected def withNewChildInternal(newChild: Expression): UnaryFunction =
+    copy(child = newChild)(call)
+}
+
+/** A [[GraftFunction]] of two columns; see [[UnaryFunction]]. */
+case class BinaryFunction(fn: GraftFunction, params: Seq[Int], left: Expression,
+    right: Expression)(call: (Any, Any) => Any)
+    extends BinaryExpression with FunctionNode {
+  override protected def nullSafeEval(a: Any, b: Any): Any = call(a, b)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    genCall(ctx, ev, body => nullSafeCodeGen(ctx, ev, (a, b) => body(Seq(a, b))))
+  override protected def otherCopyArgs: Seq[AnyRef] = call :: Nil
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): BinaryFunction =
+    copy(left = newLeft, right = newRight)(call)
 }
 
 /** minhash_scrambled(x1, x2, x3, x4) → array<long>: the 16-member
@@ -415,112 +416,6 @@ case class MinHashScrambled(first: Expression, second: Expression,
       newFourth: Expression): MinHashScrambled =
     copy(first = newFirst, second = newSecond, third = newThird,
       fourth = newFourth)
-}
-
-/** md5_window(string, start, len) → long: hex-nibble window [start,
-  * start+len) of md5(input) — the codegen'd twin of
-  * conv(substring(md5(c), start+1, len), 16, 10) (the oracle-portable
-  * hash family's SQL spelling; SURVEY.md d03/t04). */
-case class Md5Window(child: Expression, start: Int, len: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(start >= 0 && len >= 1 && len <= 15 && start + len <= 32,
-    s"md5 nibble window [$start, ${start + len}) outside a 32-nibble digest " +
-      "or wider than a positive long")
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "md5_window"
-  override protected def nullSafeEval(input: Any): Any =
-    ExprImpl.md5Window(input.asInstanceOf[UTF8String], start, len)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprImpl.md5Window($c, $start, $len)")
-  override protected def withNewChildInternal(newChild: Expression): Md5Window =
-    copy(child = newChild)
-}
-
-/** md5_family(string) → array<long>: [hash60, x1, x2, x3, x4] of one
-  * digest — the five portable-family coordinates d02/d12 derive per
-  * shingle, in one fused pass (SURVEY.md d02/d12). */
-case class Md5Family(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "md5_family"
-  override protected def nullSafeEval(input: Any): Any =
-    ExprImpl.md5Family(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprImpl.md5Family($c)")
-  override protected def withNewChildInternal(newChild: Expression): Md5Family =
-    copy(child = newChild)
-}
-
-/** lsh_sign_bits(array<float>, planes) → long signature for
-  * sign-random-projection ANN bucketing (SURVEY.md s02). */
-case class LshSignBits(child: Expression, planes: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "lsh_sign_bits"
-  override protected def nullSafeEval(input: Any): Any =
-    ExprImpl.lshSignBits(input.asInstanceOf[ArrayData], planes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprImpl.lshSignBits($c, $planes)")
-  override protected def withNewChildInternal(newChild: Expression): LshSignBits =
-    copy(child = newChild)
-}
-
-/** cosine_similarity(array<float>, array<float>) → double; fused
-  * dot+norms loop, codegen'd (SURVEY.md s01/d05 hot kernel). */
-case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_similarity"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ExprImpl.cosineSim(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.ExprImpl.cosineSim($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSimilarity =
-    copy(left = newLeft, right = newRight)
-}
-
-/** dot_product(array<float>, array<float>) → double: the unnormalized
-  * MIPS scoring kernel (CosineSimilarity without the norms). */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "dot_product"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ExprImpl.dotProduct(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.ExprImpl.dotProduct($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
-/** cosine_similarity_i8(array<tinyint>, array<tinyint>) → double; the
-  * int8-quantized twin of CosineSimilarity (see ExprImpl.cosineSimI8 —
-  * symmetric quantization scales cancel, so cosine runs on raw codes). */
-case class CosineSimilarityI8(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(ByteType), ArrayType(ByteType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_similarity_i8"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ExprImpl.cosineSimI8(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.ExprImpl.cosineSimI8($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSimilarityI8 =
-    copy(left = newLeft, right = newRight)
 }
 
 /** u256_sum(32-byte BE binary) → 32-byte BE binary: exact unsigned 256-bit
@@ -555,22 +450,6 @@ case class U256Sum(child: Expression,
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): U256Sum =
     copy(child = newChildren.head)
-}
-
-/** simhash64(array<long>) → long: per-bit majority over token hashes.
-  * graft's primitive for near-dup detection at scale (SURVEY.md d03). */
-case class SimHash64(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType, containsNull = true))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-  override protected def nullSafeEval(input: Any): Any =
-    ExprImpl.simhash64(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprImpl.simhash64($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
 }
 
 // ---- little-endian binary codecs (Borsh instruction-data decode) ----
@@ -611,62 +490,6 @@ object LeImpl {
     while (i < width && i < 8) { out(i) = (x & 0xff).toByte; x >>>= 8; i += 1 }
     out
   }
-}
-
-/** le_long(binary) → long: unsigned LE field at fixed (offset, width). */
-case class LeLong(child: Expression, offset: Int, width: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "le_long"
-  override protected def nullSafeEval(input: Any): Any =
-    LeImpl.leLong(input.asInstanceOf[Array[Byte]], offset, width)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      // fresh name: a fixed local would collide when the expression
-      // appears twice in one codegen scope with a non-nullable child
-      val ll = ctx.freshName("leLong")
-      s"""
-         |java.lang.Long $ll = graft.functions.LeImpl.leLong($c, $offset, $width);
-         |if ($ll == null) { ${ev.isNull} = true; } else { ${ev.value} = $ll.longValue(); }
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): LeLong =
-    copy(child = newChild)
-}
-
-/** le_decimal(binary) → Decimal(38,0): unsigned LE field (u128 and friends). */
-case class LeDecimal(child: Expression, offset: Int, width: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = DecimalType(38, 0)
-  override def nullable: Boolean = true
-  override def prettyName: String = "le_decimal"
-  override protected def nullSafeEval(input: Any): Any =
-    LeImpl.leDecimal(input.asInstanceOf[Array[Byte]], offset, width)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |${ev.value} = graft.functions.LeImpl.leDecimal($c, $offset, $width);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): LeDecimal =
-    copy(child = newChild)
-}
-
-/** le_from_long(long) → width-byte LE binary (encode side). */
-case class LeFromLong(child: Expression, width: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "le_from_long"
-  override protected def nullSafeEval(input: Any): Any =
-    LeImpl.leFromLong(input.asInstanceOf[Long], width)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.LeImpl.leFromLong($c, $width)")
-  override protected def withNewChildInternal(newChild: Expression): LeFromLong =
-    copy(child = newChild)
 }
 
 /** A variant registry's match table as parallel arrays, row i being
@@ -789,73 +612,19 @@ object ShortVecImpl {
     }
     java.util.Arrays.copyOf(out, i)
   }
-}
 
-/** shortvec_value(binary) → long: compact-u16 value at fixed offset. */
-case class ShortvecValue(child: Expression, offset: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "shortvec_value"
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = ShortVecImpl.decode(input.asInstanceOf[Array[Byte]], offset)
+  /** The value [[decode]] reads, boxed; null where it rejects. */
+  def value(b: Array[Byte], off: Int): java.lang.Long = {
+    val r = decode(b, off)
     if (r < 0) null else java.lang.Long.valueOf(r & 0xffffffffL)
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("sv")
-      s"""
-         |long $r = graft.functions.ShortVecImpl.decode($c, $offset);
-         |if ($r < 0) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r & 0xffffffffL; }
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): ShortvecValue =
-    copy(child = newChild)
-}
 
-/** shortvec_width(binary) → int: bytes the compact-u16 prefix occupies. */
-case class ShortvecWidth(child: Expression, offset: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "shortvec_width"
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = ShortVecImpl.decode(input.asInstanceOf[Array[Byte]], offset)
+  /** The bytes the prefix [[decode]] reads occupies, boxed; null where
+    * it rejects. */
+  def width(b: Array[Byte], off: Int): java.lang.Integer = {
+    val r = decode(b, off)
     if (r < 0) null else java.lang.Integer.valueOf((r >>> 32).toInt)
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("sw")
-      s"""
-         |long $r = graft.functions.ShortVecImpl.decode($c, $offset);
-         |if ($r < 0) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (int) ($r >>> 32); }
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): ShortvecWidth =
-    copy(child = newChild)
-}
-
-/** shortvec_from_long(long) → 1–3-byte compact-u16 binary (encode side). */
-case class ShortvecFromLong(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "shortvec_from_long"
-  override protected def nullSafeEval(input: Any): Any =
-    ShortVecImpl.encode(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |${ev.value} = graft.functions.ShortVecImpl.encode($c);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): ShortvecFromLong =
-    copy(child = newChild)
 }
 
 // ---- u256 arithmetic beyond SUM (Decimal256 mul/div family) ----
@@ -893,64 +662,6 @@ object U256ArithImpl {
   }
 }
 
-/** u256_mul(a, b) → 32-byte BE binary, mod 2^256. */
-case class U256Mul(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "u256_mul"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    U256ArithImpl.mul(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.U256ArithImpl.mul($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): U256Mul =
-    copy(left = newLeft, right = newRight)
-}
-
-/** u256_div(a, b) → 32-byte BE binary (integer division); null on b=0. */
-case class U256Div(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "u256_div"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    U256ArithImpl.div(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |${ev.value} = graft.functions.U256ArithImpl.div($a, $b);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): U256Div =
-    copy(left = newLeft, right = newRight)
-}
-
-/** u256_ratio_decimal(a, b) → Decimal(38, scale) = floor(a·10^scale / b);
-  * null on b=0 or 38-digit overflow. */
-case class U256RatioDecimal(left: Expression, right: Expression, scale: Int)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = DecimalType(38, scale)
-  override def nullable: Boolean = true
-  override def prettyName: String = "u256_ratio_decimal"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    U256ArithImpl.ratioDecimal(a.asInstanceOf[Array[Byte]],
-      b.asInstanceOf[Array[Byte]], scale)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |${ev.value} = graft.functions.U256ArithImpl.ratioDecimal($a, $b, $scale);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): U256RatioDecimal =
-    copy(left = newLeft, right = newRight)
-}
-
 // ---- signed 256-bit codecs (intN event params, e.g. Uniswap V3 Swap) ----
 
 object S256Impl {
@@ -972,35 +683,180 @@ object S256Impl {
   }
 }
 
-/** s256_to_decimal(32-byte BE two's-complement) → Decimal(38,0). */
-case class S256ToDecimal(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = DecimalType(38, 0)
-  override def nullable: Boolean = true
-  override def prettyName: String = "s256_to_decimal"
-  override protected def nullSafeEval(input: Any): Any =
-    S256Impl.s256ToDecimal(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |${ev.value} = graft.functions.S256Impl.s256ToDecimal($c);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): S256ToDecimal =
-    copy(child = newChild)
-}
+/** The declarations: each function's name, types, kernel and parameters,
+  * stated once. `functions.sqlFunctions` and the Column API are built
+  * from [[declared]]. */
+object GraftFunction {
+  /** Integer parameters (offsets, widths, scales) must be literals in SQL
+    * text. Any integral literal width is accepted (8, 8L, 8S, 8Y) as long
+    * as the value fits Int. */
+  private[functions] def litInt(e: Expression, what: String): Int = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    e match {
+      case Literal(v: Int, _) => v
+      case Literal(v: Long, _) if v.isValidInt => v.toInt
+      case Literal(v: Short, _) => v.toInt
+      case Literal(v: Byte, _) => v.toInt
+      case other => throw new IllegalArgumentException(
+        s"$what must be an integer literal, got $other")
+    }
+  }
 
-/** s256_from_long(long) → 32-byte BE sign-extended binary. */
-case class S256FromLong(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "s256_from_long"
-  override protected def nullSafeEval(input: Any): Any =
-    S256Impl.s256FromLong(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.S256Impl.s256FromLong($c)")
-  override protected def withNewChildInternal(newChild: Expression): S256FromLong =
-    copy(child = newChild)
+  /** A function of one column of type `in`; `call` reads the value as
+    * an `A`, the Scala type Catalyst holds `in` in. */
+  private def unary[A](name: String, in: DataType, out: DataType, method: String,
+      nullable: Boolean = false, params: Seq[String] = Nil)(
+      call: Seq[Int] => A => Any): GraftFunction =
+    GraftFunction(name, Seq(in), method, nullable, params)(_ => out, call)
+
+  /** A function of two columns of type `in`. */
+  private def binary[A](name: String, in: DataType, out: DataType, method: String,
+      nullable: Boolean = false)(call: (A, A) => Any): GraftFunction =
+    GraftFunction(name, Seq(in, in), method, nullable, Nil)(_ => out, _ => call)
+
+  private val longs = ArrayType(LongType, containsNull = true)
+  private val minima = ArrayType(LongType, containsNull = false)
+  private val floats = ArrayType(FloatType)
+  private val decimal = DecimalType(38, 0)
+
+  // ---- cherry-core's codecs ----
+
+  /** keccak256(binary) → 32-byte binary. Reference: evm_signature_to_topic0
+    * (erc20_transfers.py:94). */
+  val keccak256 = unary("keccak256", BinaryType, BinaryType, "Keccak.hash256")(
+    _ => (b: Array[Byte]) => Keccak.hash256(b))
+  /** base58_encode(binary) → string (Bitcoin/Solana alphabet). */
+  val base58_encode = unary("base58_encode", BinaryType, StringType,
+    "ExprImpl.base58Encode")(_ => (b: Array[Byte]) => ExprImpl.base58Encode(b))
+  /** base58_decode(string) → binary; null on malformed input
+    * (base58_decode_string, orca_swaps.py:235-260). */
+  val base58_decode = unary("base58_decode", StringType, BinaryType,
+    "ExprImpl.base58Decode", nullable = true)(
+    _ => (s: UTF8String) => ExprImpl.base58Decode(s))
+  /** u256_from_long(long) → 32-byte big-endian binary (unsigned widen). */
+  val u256_from_long = unary("u256_from_long", LongType, BinaryType,
+    "ExprImpl.u256FromLong")(_ => (v: Long) => ExprImpl.u256FromLong(v))
+  /** u256_to_decimal(32-byte BE binary) → Decimal(38,0), null on overflow.
+    * Reference: ERC-20 amounts decoded as Decimal256 (erc20 pipeline DDL). */
+  val u256_to_decimal = unary("u256_to_decimal", BinaryType, decimal,
+    "ExprImpl.u256ToDecimal", nullable = true)(
+    _ => (b: Array[Byte]) => ExprImpl.u256ToDecimal(b))
+  /** s256_from_long(long) → 32-byte BE sign-extended binary. */
+  val s256_from_long = unary("s256_from_long", LongType, BinaryType,
+    "S256Impl.s256FromLong")(_ => (v: Long) => S256Impl.s256FromLong(v))
+  /** s256_to_decimal(32-byte BE two's-complement) → Decimal(38,0). */
+  val s256_to_decimal = unary("s256_to_decimal", BinaryType, decimal,
+    "S256Impl.s256ToDecimal", nullable = true)(
+    _ => (b: Array[Byte]) => S256Impl.s256ToDecimal(b))
+  /** u256_mul(a, b) → 32-byte BE binary, mod 2^256. */
+  val u256_mul = binary("u256_mul", BinaryType, BinaryType, "U256ArithImpl.mul")(
+    (a: Array[Byte], b: Array[Byte]) => U256ArithImpl.mul(a, b))
+  /** u256_div(a, b) → 32-byte BE binary (integer division); null on b=0. */
+  val u256_div = binary("u256_div", BinaryType, BinaryType, "U256ArithImpl.div",
+    nullable = true)((a: Array[Byte], b: Array[Byte]) => U256ArithImpl.div(a, b))
+  /** u256_ratio_decimal(a, b, scale) → Decimal(38, scale) =
+    * floor(a·10^scale / b); null on b=0 or 38-digit overflow. */
+  val u256_ratio_decimal = GraftFunction("u256_ratio_decimal",
+    Seq(BinaryType, BinaryType), "U256ArithImpl.ratioDecimal", nullable = true,
+    Seq("scale"))(p => DecimalType(38, p(0)), p => {
+    val scale = p(0)
+    (a: Array[Byte], b: Array[Byte]) => U256ArithImpl.ratioDecimal(a, b, scale)
+  })
+
+  // ---- little-endian fields (Borsh) and compact-u16 (ShortVec) ----
+
+  /** le_long(binary, offset, width) → long: unsigned LE field. */
+  val le_long = unary("le_long", BinaryType, LongType, "LeImpl.leLong",
+    nullable = true, Seq("offset", "width")) { p =>
+    val (offset, width) = (p(0), p(1))
+    (b: Array[Byte]) => LeImpl.leLong(b, offset, width)
+  }
+  /** le_decimal(binary, offset, width) → Decimal(38,0): unsigned LE field
+    * (u128 and friends). */
+  val le_decimal = unary("le_decimal", BinaryType, decimal, "LeImpl.leDecimal",
+    nullable = true, Seq("offset", "width")) { p =>
+    val (offset, width) = (p(0), p(1))
+    (b: Array[Byte]) => LeImpl.leDecimal(b, offset, width)
+  }
+  /** le_from_long(long, width) → width-byte LE binary (encode side). */
+  val le_from_long = unary("le_from_long", LongType, BinaryType,
+    "LeImpl.leFromLong", params = Seq("width")) { p =>
+    val width = p(0)
+    (v: Long) => LeImpl.leFromLong(v, width)
+  }
+  /** shortvec_value(binary, offset) → long: compact-u16 value. */
+  val shortvec_value = unary("shortvec_value", BinaryType, LongType,
+    "ShortVecImpl.value", nullable = true, Seq("offset")) { p =>
+    val offset = p(0)
+    (b: Array[Byte]) => ShortVecImpl.value(b, offset)
+  }
+  /** shortvec_width(binary, offset) → int: bytes the compact-u16 occupies. */
+  val shortvec_width = unary("shortvec_width", BinaryType, IntegerType,
+    "ShortVecImpl.width", nullable = true, Seq("offset")) { p =>
+    val offset = p(0)
+    (b: Array[Byte]) => ShortVecImpl.width(b, offset)
+  }
+  /** shortvec_from_long(long) → 1–3-byte compact-u16 binary; null out of
+    * range (encode side). */
+  val shortvec_from_long = unary("shortvec_from_long", LongType, BinaryType,
+    "ShortVecImpl.encode", nullable = true)(_ => (v: Long) => ShortVecImpl.encode(v))
+
+  // ---- text, near-dup and vector kernels ----
+
+  /** md5_window(string, start, len) → long: hex-nibble window [start,
+    * start+len) of md5(input), the codegen'd twin of
+    * conv(substring(md5(c), start+1, len), 16, 10) (the oracle-portable
+    * hash family's SQL spelling; SURVEY.md d03/t04). */
+  val md5_window = unary("md5_window", StringType, LongType, "ExprImpl.md5Window",
+    params = Seq("start", "len")) { p =>
+    val (start, len) = (p(0), p(1))
+    require(start >= 0 && len >= 1 && len <= 15 && start + len <= 32,
+      s"md5 nibble window [$start, ${start + len}) outside a 32-nibble digest " +
+        "or wider than a positive long")
+    (s: UTF8String) => ExprImpl.md5Window(s, start, len)
+  }
+  /** md5_family(string) → array<long>: [hash60, x1, x2, x3, x4] of one
+    * digest, the five portable-family coordinates d02/d12 derive per
+    * shingle, in one fused pass. */
+  val md5_family = unary("md5_family", StringType, minima, "ExprImpl.md5Family")(
+    _ => (s: UTF8String) => ExprImpl.md5Family(s))
+  /** simhash64(array<long>) → long: per-bit majority over token hashes
+    * (SURVEY.md d03). */
+  val simhash64 = unary("simhash64", longs, LongType, "ExprImpl.simhash64")(
+    _ => (h: ArrayData) => ExprImpl.simhash64(h))
+  /** minhashes(array<long>, k) → array<long>: k MinHash values in one pass
+    * (SURVEY.md d02/s02). */
+  val minhashes = unary("minhashes", longs, minima, "ExprImpl.minhashes",
+    params = Seq("k")) { p =>
+    val k = p(0)
+    (h: ArrayData) => ExprImpl.minhashes(h, k)
+  }
+  /** lsh_sign_bits(array<float>, planes) → long signature for
+    * sign-random-projection ANN bucketing (SURVEY.md s02). */
+  val lsh_sign_bits = unary("lsh_sign_bits", floats, LongType,
+    "ExprImpl.lshSignBits", params = Seq("planes")) { p =>
+    val planes = p(0)
+    (v: ArrayData) => ExprImpl.lshSignBits(v, planes)
+  }
+  /** cosine_similarity(array<float>, array<float>) → double; fused
+    * dot+norms loop (SURVEY.md s01/d05 hot kernel). */
+  val cosine_similarity = binary("cosine_similarity", floats, DoubleType,
+    "ExprImpl.cosineSim")((a: ArrayData, b: ArrayData) => ExprImpl.cosineSim(a, b))
+  /** dot_product(array<float>, array<float>) → double: the unnormalized
+    * MIPS scoring kernel. */
+  val dot_product = binary("dot_product", floats, DoubleType,
+    "ExprImpl.dotProduct")((a: ArrayData, b: ArrayData) => ExprImpl.dotProduct(a, b))
+  /** cosine_similarity_i8(array<tinyint>, array<tinyint>) → double: the
+    * int8-quantized twin of cosine_similarity (symmetric quantization
+    * scales cancel, so cosine runs on the raw codes). */
+  val cosine_similarity_i8 = binary("cosine_similarity_i8", ArrayType(ByteType),
+    DoubleType, "ExprImpl.cosineSimI8")(
+    (a: ArrayData, b: ArrayData) => ExprImpl.cosineSimI8(a, b))
+
+  val declared: Seq[GraftFunction] = Seq(keccak256, base58_encode,
+    base58_decode, u256_from_long, u256_to_decimal, s256_from_long,
+    s256_to_decimal, u256_mul, u256_div, u256_ratio_decimal, le_long,
+    le_decimal, le_from_long, shortvec_value, shortvec_width,
+    shortvec_from_long, md5_window, md5_family, simhash64, minhashes,
+    lsh_sign_bits, cosine_similarity, dot_product, cosine_similarity_i8)
 }

@@ -7,8 +7,8 @@ import java.nio.file.attribute.PosixFilePermission
 import java.util.EnumSet
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
-  FileSystem, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream,
+  FileStatus, FileSystem, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
@@ -94,7 +94,15 @@ class RawLocalFs(uri: URI, conf: Configuration)
 
 /** `fs.AbstractFileSystem.file.impl`, the route `FileContext` takes:
   * Hadoop's `LocalFs` (a `ChecksumFs`) over [[RawLocalFs]]. */
-class LocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new RawLocalFs(uri, conf))
+class LocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new RawLocalFs(uri, conf)) {
+  /** Reads through the checksum: `ChecksumFs` verifies the `.crc` only
+    * in `open(path, bufferSize)`, while the one-argument form it inherits
+    * from `FilterFs` hands out the raw stream, and Spark's checkpoint
+    * manager reads offset, commit-log and state files through that one.
+    * A corrupt checkpoint file now fails with `ChecksumException`. */
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object LocalFs {
   private val routes = Seq(

@@ -224,14 +224,13 @@ object Pipelines {
   /** p10 — the pure-SQL user path: the same decode/join/ratio pipeline
     * shape, written entirely as SQL TEXT against temp views, with graft's
     * custom expressions called by name (u256_from_long / u256_mul /
-    * u256_to_decimal are FunctionRegistry entries via registerSql /
-    * GraftExtensions, not Scala-only helpers). A reference user driving
-    * everything from SQL strings — the ClickHouse habit — needs this
-    * surface to be first-class, so it gets its own oracle-checked entry,
-    * not just a unit test.
+    * u256_to_decimal are FunctionRegistry entries, which
+    * `Session.enforce` registers, not Scala-only helpers). A reference
+    * user driving everything from SQL strings — the ClickHouse habit —
+    * needs this surface to be first-class, so it gets its own
+    * oracle-checked entry, not just a unit test.
     */
   def p10SqlPipeline(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.registerSql(spark)
     Tables(spark, dir).lineitem.createOrReplaceTempView("graft_sql_li")
     Tables(spark, dir).orders.createOrReplaceTempView("graft_sql_ord")
     // f07's sort economy, in SQL: the sort moves the five narrow

@@ -67,7 +67,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          "graft.functions", name),
+          org.apache.spark.sql.graft.Interop.functionClass, name),
         builder))
     }
   }

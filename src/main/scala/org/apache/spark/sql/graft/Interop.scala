@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -24,13 +25,23 @@ object Interop {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
   def analyzedPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
+  /** The class name graft's SQL functions carry in the function
+    * registry, on both routes that register them. */
+  val functionClass = "graft.functions"
+
   /** Expose a function builder to `spark.sql(...)` text on an existing
     * session (the extensions path covers sessions built with
-    * graft.plans.GraftExtensions; this covers everyone else). */
+    * graft.plans.GraftExtensions; this covers everyone else). A name the
+    * session already resolves to a graft function is left as it is:
+    * Spark logs a warning for every replaced function, and this runs on
+    * every query call. */
   def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
+    val id = FunctionIdentifier(name)
+    if (!registry.lookupFunction(id).exists(_.getClassName == functionClass))
+      registry.registerFunction(id, new ExpressionInfo(functionClass, name), builder)
+  }
 
   /** Unload and close the state-store providers of `q`'s run. A provider
     * stays in the JVM-wide `StateStore.loadedProviders` map, holding its

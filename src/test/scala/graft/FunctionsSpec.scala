@@ -295,4 +295,178 @@ class FunctionsSpec extends AnyFunSuite {
       n += 1
     }
   }
+
+  test("every declared function and minhash_scrambled evaluate the same " +
+      "interpreted and compiled") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.{GraftFunction, MinHashScrambled}
+    def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+    def word(v: Long): Array[Byte] = ExprImpl.u256Wrap(java.math.BigInteger.valueOf(v))
+    def array(xs: Any*): ArrayData = new GenericArrayData(xs.toArray)
+    val inputs: Map[DataType, Seq[Any]] = Map(
+      BinaryType -> Seq(null, Array.emptyByteArray,
+        bytes(0x80, 0x00), bytes(0x80), bytes(0xff, 0xff, 0x04), // bad compact-u16s
+        bytes(0x05, 0xff, 0x01, 0x7f), Array.tabulate[Byte](20)(i => (i * 37).toByte),
+        word(0), word(3), word(1000), word(-1), // word(-1): 2^256 - 1
+        bytes(0x80 +: Seq.fill(31)(0): _*)), // -2^255 as a signed word
+      StringType -> Seq(null, "", "abc", "2NEpo7TZRRrLZSi2U", "0invalid", "I", "héllo")
+        .map(s => if (s == null) null else UTF8String.fromString(s)),
+      LongType -> Seq(null, 0L, 1L, -1L, 127L, 128L, 65535L, 65536L,
+        Long.MaxValue, Long.MinValue),
+      ArrayType(LongType, containsNull = true) -> Seq(null, array(),
+        array(1L, -2L, Long.MaxValue), array(5L, null, 7L)),
+      ArrayType(FloatType, containsNull = true) -> Seq(null, array(),
+        array(1f, -2f, 3.5f), array(0f, 0f, 0f), array(0.5f, null, -1f)),
+      ArrayType(ByteType, containsNull = true) -> Seq(null, array(),
+        array(1.toByte, -2.toByte, 3.toByte), array(127.toByte, -128.toByte),
+        array(0.toByte, null, 4.toByte)))
+    // out-of-range offsets and widths included: the kernels answer null
+    val paramSets: Map[String, Seq[Seq[Int]]] = Map(
+      "u256_ratio_decimal" -> Seq(Seq(0), Seq(9), Seq(18)),
+      "le_long" -> Seq(Seq(0, 8), Seq(1, 4), Seq(16, 8), Seq(-1, 2), Seq(0, 9)),
+      "le_decimal" -> Seq(Seq(0, 16), Seq(4, 8), Seq(10, 16), Seq(-1, 4), Seq(0, 17)),
+      "le_from_long" -> Seq(Seq(0), Seq(3), Seq(8), Seq(12)),
+      "shortvec_value" -> Seq(Seq(0), Seq(1), Seq(3), Seq(-1), Seq(40)),
+      "shortvec_width" -> Seq(Seq(0), Seq(1), Seq(3), Seq(-1), Seq(40)),
+      "md5_window" -> Seq(Seq(0, 15), Seq(7, 7), Seq(25, 7)),
+      "minhashes" -> Seq(Seq(0), Seq(1), Seq(4)),
+      "lsh_sign_bits" -> Seq(Seq(0), Seq(8), Seq(64)))
+    /** Catalyst values in a form `==` compares by content. */
+    def norm(v: Any, t: DataType): Any = (v, t) match {
+      case (b: Array[Byte], _) => b.toSeq
+      case (a: ArrayData, ArrayType(et, _)) => a.toSeq[Any](et)
+      case _ => v
+    }
+    val answered = scala.collection.mutable.Set.empty[String]
+    /** `e` on each of `rows`, through eval and through a generated
+      * projection (no interpreted fallback). */
+    def check(e: Expression, rows: Seq[Seq[Any]]): Unit = {
+      val compiled = GenerateUnsafeProjection.generate(Seq(e))
+      rows.foreach { in =>
+        val row = InternalRow.fromSeq(in)
+        val out = compiled(row)
+        val got = if (out.isNullAt(0)) null else out.get(0, e.dataType)
+        assert(norm(got, e.dataType) == norm(e.eval(row), e.dataType), s"$e on $in")
+        if (got != null) answered += e.prettyName
+      }
+    }
+    def product(types: Seq[DataType]): Seq[Seq[Any]] =
+      types.foldRight(Seq(Seq.empty[Any]))((t, rest) => for (v <- inputs(t); r <- rest) yield v +: r)
+    for (f <- GraftFunction.declared) {
+      assert(f.paramNames.isEmpty || paramSets.contains(f.name), s"no parameters for ${f.name}")
+      val refs = f.inputTypes.zipWithIndex.map { case (t, i) => BoundReference(i, t, nullable = true) }
+      paramSets.getOrElse(f.name, Seq(Nil)).foreach(p => check(f.expr(refs, p), product(f.inputTypes)))
+    }
+    // the fused minhash reads its four chunk arrays in step: equal lengths
+    val chunks = Seq(null, array(1L, 2L, 3L), array(-4L, Long.MaxValue, 0L), array(9L, null, 8L))
+    val longs = ArrayType(LongType, containsNull = true)
+    val Seq(a, b, c, d) = (0 until 4).map(BoundReference(_, longs, nullable = true))
+    check(MinHashScrambled(a, b, c, d),
+      for (w <- chunks; x <- chunks; y <- chunks; z <- chunks) yield Seq(w, x, y, z))
+    assert(answered.toSet === GraftFunction.declared.map(_.name).toSet + "minhash_scrambled",
+      "a function answered only nulls")
+  }
+
+  test("every Column-API function except variant_index resolves from SQL text " +
+      "with the Column API's value") {
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    import graft.functions._
+    val spark = SparkSessionFixture.spark
+    def word(v: Long): Array[Byte] = ExprImpl.u256Wrap(java.math.BigInteger.valueOf(v))
+    val schema = StructType(Seq(StructField("b", BinaryType), StructField("s", StringType),
+      StructField("l", LongType), StructField("w", BinaryType), StructField("w2", BinaryType),
+      StructField("h", ArrayType(LongType)), StructField("f", ArrayType(FloatType)),
+      StructField("f2", ArrayType(FloatType)), StructField("q", ArrayType(ByteType)),
+      StructField("q2", ArrayType(ByteType))))
+    val rows = Seq(
+      Row(Array[Byte](5, 1, 2, 3, 4, 5, 6, 7, 8), "2NEpo7TZRRrLZSi2U", 258L, word(1000),
+        word(3), Seq(1L, 2L, 3L), Seq(1f, -2f, 3f), Seq(0.5f, 0.5f, 2f),
+        Seq[Byte](1, -2, 3), Seq[Byte](4, 5, -6)),
+      Row(Array[Byte](0x80.toByte, 0x01), "0invalid", -1L, word(7), word(0), Seq(9L),
+        Seq(0f), Seq(1f), Seq[Byte](0), Seq[Byte](1)),
+      Row(null, null, null, null, null, null, null, null, null, null))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    df.createOrReplaceTempView("graft_fn_inputs")
+    val scalar: Seq[(String, Column)] = Seq(
+      "keccak256(b)" -> keccak256(col("b")),
+      "base58_encode(b)" -> base58_encode(col("b")),
+      "base58_decode(s)" -> base58_decode(col("s")),
+      "u256_from_long(l)" -> u256_from_long(col("l")),
+      "u256_to_decimal(w)" -> u256_to_decimal(col("w")),
+      "s256_from_long(l)" -> s256_from_long(col("l")),
+      "s256_to_decimal(w)" -> s256_to_decimal(col("w")),
+      "u256_mul(w, w2)" -> u256_mul(col("w"), col("w2")),
+      "u256_div(w, w2)" -> u256_div(col("w"), col("w2")),
+      "u256_ratio_decimal(w, w2, 9)" -> u256_ratio_decimal(col("w"), col("w2"), 9),
+      "le_long(b, 1, 4)" -> le_long(col("b"), 1, 4),
+      "le_decimal(b, 1, 8)" -> le_decimal(col("b"), 1, 8),
+      "le_from_long(l, 3)" -> le_from_long(col("l"), 3),
+      "shortvec_value(b, 0)" -> shortvec_value(col("b"), 0),
+      "shortvec_width(b, 0)" -> shortvec_width(col("b"), 0),
+      "shortvec_from_long(l)" -> shortvec_from_long(col("l")),
+      "md5_window(s, 7, 7)" -> md5_window(col("s"), 7, 7),
+      "md5_family(s)" -> md5_family(col("s")),
+      "simhash64(h)" -> simhash64(col("h")),
+      "minhashes(h, 3)" -> minhashes(col("h"), 3),
+      "minhash_scrambled(h, h, h, h)" ->
+        minhash_scrambled(col("h"), col("h"), col("h"), col("h")),
+      "lsh_sign_bits(f, 8)" -> lsh_sign_bits(col("f"), 8),
+      "cosine_similarity(f, f2)" -> cosine_similarity(col("f"), col("f2")),
+      "dot_product(f, f2)" -> dot_product(col("f"), col("f2")),
+      "cosine_similarity_i8(q, q2)" -> cosine_similarity_i8(col("q"), col("q2")))
+    val aggregate = "u256_sum(w)" -> u256_sum(col("w"))
+    val called = (scalar :+ aggregate).map(_._1.takeWhile(_ != '(')).toSet
+    assert(called === sqlFunctions.map(_._1).toSet)
+    for ((text, c) <- scalar) {
+      val fromSql = spark.sql(s"SELECT $text AS r FROM graft_fn_inputs").collect().toSeq
+      assert(fromSql === df.select(c.as("r")).collect().toSeq, text)
+      assert(fromSql.exists(!_.isNullAt(0)), s"$text answered only nulls")
+    }
+    assert(spark.sql(s"SELECT ${aggregate._1} AS r FROM graft_fn_inputs").collect().toSeq ===
+      df.agg(aggregate._2.as("r")).collect().toSeq)
+  }
+
+  test("a declared function's parameters take part in equality and printing") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    import graft.functions.GraftFunction.{le_long, md5_window}
+    val x = BoundReference(0, BinaryType, nullable = true)
+    val e = le_long.expr(Seq(x), Seq(0, 8))
+    assert(e === le_long.expr(Seq(x), Seq(0, 8)))
+    assert(e !== le_long.expr(Seq(x), Seq(1, 8)))
+    assert(e.toString === "le_long(input[0, binary, true], 0, 8)")
+    // a reflective copy (makeCopy, which reads otherCopyArgs) keeps the
+    // bound call, as does a new child
+    val row = InternalRow(Array.tabulate[Byte](9)(i => (i + 1).toByte))
+    val args = e.asInstanceOf[Product].productIterator.map(_.asInstanceOf[AnyRef]).toArray
+    assert(e.makeCopy(args).eval(row) === 0x0807060504030201L)
+    assert(e.withNewChildren(Seq(x)).eval(row) === 0x0807060504030201L)
+    // the range check runs where the parameters are bound
+    val s = BoundReference(0, StringType, nullable = true)
+    intercept[IllegalArgumentException](md5_window.expr(Seq(s), Seq(30, 7)))
+    intercept[IllegalArgumentException](le_long.fromSql(Seq(x, Literal(0))))
+    intercept[IllegalArgumentException](le_long.fromSql(Seq(x, Literal(0), Literal("8"))))
+  }
+
+  test("Session.enforce registers graft's SQL functions once per session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.classic
+    val fresh = SparkSessionFixture.spark.newSession()
+    assert(!fresh.catalog.functionExists("le_long"))
+    Session.enforce(fresh)
+    assert(fresh.sql("SELECT le_long(X'0201', 0, 2)").head().getLong(0) === 0x0102L)
+    val registry = fresh.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
+    val builder = registry.lookupFunctionBuilder(FunctionIdentifier("le_long"))
+    Session.enforce(fresh)
+    assert(registry.lookupFunctionBuilder(FunctionIdentifier("le_long")).get eq builder.get,
+      "a second enforce replaced a registered function")
+  }
 }

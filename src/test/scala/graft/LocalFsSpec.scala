@@ -188,12 +188,15 @@ class LocalFsSpec extends AnyFunSuite {
     for (fs <- fileSystems())
       assert(corruptAndRead(fs.create, fs.open) === checked)
     val create = (fc: FileContext) => (p: Path) => fc.create(p, EnumSet.of(CreateFlag.CREATE))
-    for (fc <- fileContexts()) {
+    val Seq(hadoops, grafts) = fileContexts()
+    for (fc <- Seq(hadoops, grafts))
       assert(corruptAndRead(create(fc), fc.open(_, 4096)) === checked)
-      // Hadoop's FilterFs.open(Path) hands out the raw stream, so this
-      // route reads the flipped byte unchecked; it stays the same here
-      assert(corruptAndRead(create(fc), fc.open) === Right((100 * 31 ^ 0xff).toByte.toInt))
-    }
+    // Hadoop's FilterFs.open(Path) hands out the raw stream, so Hadoop's
+    // LocalFs reads the flipped byte unchecked on the one-argument open,
+    // the form Spark's checkpoint manager calls; graft's reads it checked
+    assert(corruptAndRead(create(hadoops), hadoops.open) ===
+      Right((100 * 31 ^ 0xff).toByte.toInt))
+    assert(corruptAndRead(create(grafts), grafts.open) === checked)
   }
 
   /** Every process started while `body` runs whose stack passes through
